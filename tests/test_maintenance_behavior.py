@@ -550,6 +550,193 @@ def test_watermark_written_after_optimize(env):
     assert row["last_optimized_on"] == clock()
 
 
+def test_watermark_stamp_runs_no_spark_job(env):
+    """A stamp is a driver-side file replace: no Spark job runs while
+    the orchestrator holds its watermark lock."""
+    spark, tmp_path, clock, sched, tables, _, orch = env
+    write_schedule(spark, sched, [schedule_row("t1"), schedule_row("t2")])
+    o = orch()
+    sc = spark.sparkContext
+    group = "watermark-stamp-guard"
+    sc.setJobGroup(group, "watermark stamp")
+    try:
+        o._stamp_watermark("t1", "last_optimized_on")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the group does record this thread's jobs
+        spark.range(1).count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_watermark_stamp_on_spark_written_schedule(env):
+    """A schedule written by Spark (INT96 timestamps, a ``.crc``
+    checksum sibling, ``_SUCCESS``) stays readable by Spark after a
+    stamp, and the stamped value round-trips exactly."""
+    spark, tmp_path, clock, sched, tables, _, orch = env
+    write_schedule(spark, sched, [
+        schedule_row("t1", should_optimize=1, columns_to_analyze=["a"]),
+        schedule_row("t2", last_analyzed_on=T0 - dt.timedelta(days=2)),
+    ])
+    names = os.listdir(sched)
+    assert "_SUCCESS" in names
+    assert any(n.startswith(".part-") and n.endswith(".crc") for n in names)
+    orch()._stamp_watermark("t1", "last_optimized_on")
+    got = {r.table_name: r for r in spark.read.parquet(sched).collect()}
+    assert got["t1"].last_optimized_on == clock()
+    assert got["t1"].should_optimize == 1
+    assert got["t1"].columns_to_analyze == ["a"]
+    assert got["t2"].last_optimized_on is None
+    assert got["t2"].last_analyzed_on == T0 - dt.timedelta(days=2)
+    assert read_schedule(spark, sched).collect() == spark.read.schema(
+        SCHEDULE_SCHEMA).parquet(sched).orderBy("table_name").collect()
+
+
+def test_watermark_stamp_crash_before_replace_keeps_schedule(spark, tmp_path):
+    """A process killed after the temp-file write and before the
+    ``os.replace`` leaves the old schedule whole and readable; the
+    hidden temp file is ignored and the next stamp succeeds."""
+    import subprocess
+    import sys
+    import textwrap
+
+    import trino_iceberg_maintenance_spark
+    from trino_iceberg_maintenance_spark.sources.schedule import (
+        data_file,
+        stamp,
+        write_rows,
+    )
+
+    sched = str(tmp_path / "schedule")
+    old = T0 - dt.timedelta(days=3)
+    rows = [
+        schedule_row("t1", should_optimize=1, last_optimized_on=old),
+        schedule_row("t2", should_analyze=1),
+    ]
+    write_rows(sched, [tuple(r[f.name] for f in SCHEDULE_SCHEMA.fields)
+                       for r in rows], SCHEDULE_SCHEMA)
+    before = read_schedule(spark, sched).collect()
+    code = textwrap.dedent(f"""
+        import datetime as dt
+        import os
+        from trino_iceberg_maintenance_spark.sources.schedule import stamp
+        os.replace = lambda *args: os._exit(1)
+        stamp({sched!r}, "t1", "last_optimized_on", dt.datetime(2030, 1, 1))
+    """)
+    pkg_root = os.path.dirname(
+        os.path.dirname(trino_iceberg_maintenance_spark.__file__))
+    proc = subprocess.run(
+        [sys.executable, "-c", code], timeout=120,
+        env={**os.environ, "PYTHONPATH": pkg_root},
+    )
+    assert proc.returncode == 1
+    assert any(n.startswith(".") and n.endswith(".tmp")
+               for n in os.listdir(sched))
+    assert data_file(sched) is not None
+    assert read_schedule(spark, sched).collect() == before
+    plain = {r.table_name: r for r in spark.read.parquet(sched).collect()}
+    assert plain["t1"].last_optimized_on == old
+    assert plain["t1"].should_optimize == 1
+    assert plain["t2"].should_analyze == 1
+
+    stamp(sched, "t1", "last_optimized_on", T0)
+    got = {r.table_name: r for r in read_schedule(spark, sched).collect()}
+    assert got["t1"].last_optimized_on == T0
+    assert got["t2"].should_analyze == 1
+
+
+def test_concurrent_watermark_stamps_and_reads(spark, tmp_path):
+    """8 threads stamp distinct (table, column) pairs through one
+    Orchestrator while another thread reads the schedule and the
+    fleet report: no stamp is lost, and every read sees all rows."""
+    import sys
+    import threading
+
+    from trino_iceberg_maintenance_spark.sources.schedule import data_file
+
+    sched = str(tmp_path / "schedule")
+    names = [f"t{i}" for i in range(8)]
+    columns = ["last_analyzed_on", "last_optimized_on", "last_checked_on",
+               "last_indexed_on"]
+    rounds = 3
+    write_schedule(spark, sched, [schedule_row(n) for n in names])
+    local = threading.local()
+
+    def resolve(name):
+        raise KeyError(name)  # fleet_report tolerates unresolvable tables
+
+    o = Orchestrator(spark, sched, table_resolver=resolve,
+                     clock=lambda: getattr(local, "now", T0))
+    stamping = threading.Event()
+    stamping.set()
+    errors: list[BaseException] = []
+    reads = []
+
+    def stamper(name):
+        try:
+            for r in range(rounds):
+                local.now = T0 + dt.timedelta(days=r)
+                for c in columns:
+                    o._stamp_watermark(name, c)
+        except BaseException as exc:  # surfaced by the main thread
+            errors.append(exc)
+
+    def reader():
+        try:
+            while stamping.is_set():
+                assert data_file(sched) is not None
+                rows = read_schedule(spark, sched).collect()
+                assert sorted(r.table_name for r in rows) == names
+                report = o.fleet_report().collect()
+                assert sorted(r.table_name for r in report) == names
+                reads.append(1)
+        except BaseException as exc:
+            errors.append(exc)
+
+    prior_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        threads = [threading.Thread(target=stamper, args=(n,)) for n in names]
+        rd = threading.Thread(target=reader)
+        rd.start()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        stamping.clear()
+        rd.join(timeout=300)
+    finally:
+        sys.setswitchinterval(prior_interval)
+    assert not any(t.is_alive() for t in threads + [rd])
+    assert errors == []
+    assert reads
+    last = T0 + dt.timedelta(days=rounds - 1)
+    for r in read_schedule(spark, sched).collect():
+        for c in columns:
+            assert r[c] == last, (r.table_name, c)
+
+
+def test_create_schedule_refuses_corrupt_file(spark, tmp_path):
+    """create_if_not_exists_schedule creates a schedule only where no
+    data file exists: a corrupt file raises and is left untouched, so
+    the fleet is not silently forgotten."""
+    import pyarrow as pa
+
+    from trino_iceberg_maintenance_spark.sources.schedule import (
+        create_if_not_exists_schedule,
+    )
+
+    sched = tmp_path / "schedule"
+    sched.mkdir()
+    bad = sched / "part-00000.parquet"
+    bad.write_bytes(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        create_if_not_exists_schedule(spark, str(sched))
+    assert bad.read_bytes() == b"not a parquet file"
+    assert os.listdir(sched) == ["part-00000.parquet"]
+
+
 def test_time_travel_read(spark, tmp_path):
     """read_as_of returns historic contents by snapshot id and by
     timestamp; compaction does not disturb older snapshots."""

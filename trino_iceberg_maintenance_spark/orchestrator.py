@@ -17,11 +17,16 @@ Reference mapping (SURVEY.md §2.5, §3):
   are driver-side, so the reference's client/server split collapses
   deliberately.
 - The reference's process-wide ``RLock`` around watermark UPDATEs
-  (``__main__.py:18,171-176``) becomes a lock around the parquet
-  read-modify-overwrite of the config table; with an Iceberg catalog
-  this would be an optimistic-concurrency MERGE instead (and the lock
-  documents — like the reference's — that it does not protect
-  multi-process runs).
+  (``__main__.py:18,171-176``) becomes a lock around a driver-side
+  stamp of the config table (``sources.schedule.stamp``): pyarrow
+  re-reads the schedule's one parquet file, sets the watermark on the
+  matching row, writes a hidden temp file and ``os.replace``s it over
+  the data file. A stamp takes milliseconds and runs no Spark job, so
+  the workers barely queue on the lock, and a crash leaves the old or
+  the new schedule whole. Like the reference's, the lock serializes
+  stamps of one process only; it does not protect multi-process runs
+  (with an Iceberg catalog this would be an optimistic-concurrency
+  MERGE instead).
 
 Spark's scheduler is thread-safe, so concurrent per-table jobs simply
 interleave on the cluster; with many tables this fans out cluster-wide
@@ -40,6 +45,7 @@ from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from trino_iceberg_maintenance_spark.plans import stats as stats_plans
 from trino_iceberg_maintenance_spark.plans.incremental import (
@@ -50,6 +56,10 @@ from trino_iceberg_maintenance_spark.sources.lake import ParquetMaintainedTable
 from trino_iceberg_maintenance_spark.sources.schedule import (
     SCHEDULE_SCHEMA,
     read_schedule,
+    read_table,
+    stamp,
+    to_rows,
+    write_rows,
 )
 
 logger = logging.getLogger(__name__)
@@ -437,19 +447,15 @@ class Orchestrator:
     # -- watermark update (S8) -------------------------------------------
     def _stamp_watermark(self, table_name: str, column: str) -> None:
         """UPDATE cfg SET <column> = now WHERE table_name = ?
-        (__main__.py:172-176) as a read-modify-overwrite of the tiny
-        config table, under the process lock."""
+        (__main__.py:172-176) as a driver-side atomic file replace of
+        the config table (``sources.schedule.stamp``). The process
+        lock serializes stamps within this process only — same scope
+        as the reference's RLock — and no Spark job runs under it.
+        Each stamp re-reads the file, so an edit written between two
+        stamps survives."""
         now = self.clock()
         with self._watermark_lock:
-            rows = read_schedule(self.spark, self.schedule_path).collect()
-            updated = [
-                Row(**{**r.asDict(), column: now})
-                if r["table_name"] == table_name
-                else r
-                for r in rows
-            ]
-            df = self.spark.createDataFrame(updated, SCHEDULE_SCHEMA)
-            df.coalesce(1).write.mode("overwrite").parquet(self.schedule_path)
+            stamp(self.schedule_path, table_name, column, now)
 
     # -- durable index registration (VERDICT r7 #3) -----------------------
     def register_index(
@@ -1312,9 +1318,11 @@ class Orchestrator:
         self, table: ParquetMaintainedTable, props: MaintenanceProperties
     ) -> DataFrame:
         """Incremental partition stats with durable state at
-        ``<table>/_stats_state.parquet``. A changed column list (or a
-        missing/unreadable state) falls back to a full recompute —
-        correctness first, incrementality as the optimization.
+        ``<table>/_stats_state.parquet``, read and written driver-side
+        with the schedule's atomic file replace (``sources.schedule``).
+        A changed column list (or a missing state) falls back to a
+        full recompute — correctness first, incrementality as the
+        optimization.
 
         The unset-``columns_to_analyze`` default includes PARTITION
         columns too, so the stats surface is identical whether or not
@@ -1332,18 +1340,20 @@ class Orchestrator:
             | {f"ndv_{c}" for c in cols}
         )
         if os.path.exists(state_path):
-            cand = self.spark.read.parquet(state_path)
-            if set(cand.columns) == expected:
-                prior = cand
+            cand = read_table(state_path)
+            if set(cand.column_names) == expected:
+                schema = from_arrow_schema(cand.schema)
+                prior = self.spark.createDataFrame(
+                    to_rows(cand, schema), schema
+                )
         state, recomputed = incremental_partition_stats(table, cols, prior)
         self.last_recomputed[props.table_name] = recomputed
-        # materialize before overwriting the file the plan may read from
+        # partition-count-sized: swapped in with the schedule's atomic
+        # file replace, and the stats relation is built from the rows
         rows = state.collect()
-        self.spark.createDataFrame(rows, state.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(state_path)
+        write_rows(state_path, rows, state.schema)
         return table_null_fractions(
-            self.spark.read.parquet(state_path), cols
+            self.spark.createDataFrame(rows, state.schema), cols
         )
 
     # -- fleet health report ---------------------------------------------

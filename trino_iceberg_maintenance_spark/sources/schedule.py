@@ -6,8 +6,13 @@ columns, one row per managed table) and ``__main__.py:83-99``
 
 Two things live here:
 
-1. ``SCHEDULE_SCHEMA`` + parquet-backed create/read/write for the real
-   orchestrator (SURVEY.md §2.1 S1/S4/S8).
+1. ``SCHEDULE_SCHEMA`` + parquet-backed create/read/write/stamp for the
+   real orchestrator (SURVEY.md §2.1 S1/S4/S8). The schedule is a
+   directory holding ONE parquet data file. Every read and write of it
+   is driver-side pyarrow, and every write swaps in a whole new file
+   with ``os.replace`` (:func:`write_rows`), so a reader sees the old
+   or the new schedule, never a partial one, and a crash mid-write
+   leaves the old one in place.
 2. A **deterministic synthesized schedule** derived from the ``nation``
    table, expressed twice — as a DataFrame plan (:func:`synth_schedule`)
    and as DuckDB SQL (``SYNTH_SCHEDULE_CTE``) — so every schedule query
@@ -19,9 +24,16 @@ Two things live here:
 
 from __future__ import annotations
 
+import contextlib
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from trino_iceberg_maintenance_spark.sources.tables import load_table
 
@@ -188,27 +200,135 @@ FROM nation
 """
 
 
+def data_file(path: str) -> str | None:
+    """The one visible data file of a single-file parquet relation
+    directory, or None when there is none. Visible means what Spark
+    reads: a name not starting with ``.`` or ``_`` (so ``_SUCCESS``,
+    ``.crc`` checksums and the hidden temp files of :func:`write_rows`
+    are skipped)."""
+    if not os.path.isdir(path):
+        return None
+    names = [n for n in os.listdir(path) if not n.startswith((".", "_"))]
+    if len(names) > 1:
+        raise ValueError(f"{path} holds {len(names)} data files, expected one")
+    return os.path.join(path, names[0]) if names else None
+
+
+def read_table(path: str) -> pa.Table:
+    """Read the relation at ``path`` driver-side. The data file is
+    opened once, so a concurrent :func:`write_rows` is seen whole:
+    either the file before its ``os.replace`` or the one after."""
+    f = data_file(path)
+    if f is None:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    with open(f, "rb") as fh:
+        # Spark writes INT96 timestamps by default
+        return pq.read_table(fh, coerce_int96_timestamp_unit="us")
+
+
+def to_rows(table: pa.Table, schema: T.StructType) -> list[tuple]:
+    """``table`` as Python rows in ``schema``'s column order, values as
+    Spark's ``collect`` gives them. Columns the file lacks read as
+    NULL, like a Spark read with an explicit schema."""
+    arrow = to_arrow_schema(schema)
+    cols = []
+    for field, af in zip(schema.fields, arrow):
+        if field.name not in table.column_names:
+            cols.append([None] * table.num_rows)
+            continue
+        col = table.column(field.name).cast(af.type)
+        if isinstance(field.dataType, T.TimestampType):
+            # through Spark's own converter, so naive datetimes
+            # round-trip exactly as they do through createDataFrame
+            cols.append([
+                None if v is None else field.dataType.fromInternal(v)
+                for v in col.cast(pa.int64()).to_pylist()
+            ])
+        else:
+            cols.append(col.to_pylist())
+    return list(zip(*cols))
+
+
+def _replace(path: str, table: pa.Table) -> None:
+    """Swap ``table`` in as the relation's one data file: write a
+    hidden temp file beside it, fsync, drop Spark's checksum sibling,
+    then ``os.replace`` (the lake manifest's commit recipe). A crash
+    at any point leaves either the old file or the new one; a leftover
+    temp file is hidden, so no reader sees it."""
+    os.makedirs(path, exist_ok=True)
+    target = data_file(path) or os.path.join(path, "part-00000.parquet")
+    folder, name = os.path.split(target)
+    tmp = os.path.join(folder, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "wb") as fh:
+            pq.write_table(table, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        # a stale .crc would fail every later Spark read of the file
+        # with ChecksumException; removed first, so a crash before the
+        # replace leaves the old file merely unchecksummed
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(folder, f".{name}.crc"))
+        os.replace(tmp, target)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
+def write_rows(path: str, rows: list, schema: T.StructType) -> None:
+    """Atomically replace the relation at ``path`` with ``rows``
+    (tuples or Rows in ``schema``'s column order)."""
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for i, (field, af) in enumerate(zip(schema.fields, arrow)):
+        values = [r[i] for r in rows]
+        if isinstance(field.dataType, T.TimestampType):
+            values = [None if v is None else field.dataType.toInternal(v)
+                      for v in values]
+        arrays.append(pa.array(values, af.type))
+    _replace(path, pa.Table.from_arrays(arrays, schema=arrow))
+
+
+def stamp(path: str, table_name: str, column: str, value) -> None:
+    """``UPDATE schedule SET <column> = value WHERE table_name = ?``
+    (__main__.py:172-176) without Spark: re-read the schedule's data
+    file, set ``column`` on the matching row and swap the file in with
+    :func:`write_rows`'s atomic replace. Callers serialize concurrent
+    stamps (the orchestrator's lock)."""
+    i = SCHEDULE_SCHEMA.fieldNames().index(column)
+    rows = [
+        # table_name is the first column
+        r[:i] + (value,) + r[i + 1:] if r[0] == table_name else r
+        for r in to_rows(read_table(path), SCHEDULE_SCHEMA)
+    ]
+    write_rows(path, rows, SCHEDULE_SCHEMA)
+
+
 def create_if_not_exists_schedule(spark: SparkSession, path: str) -> None:
     """Idempotent config-table creation (__main__.py:40-57 →
-    ``CREATE TABLE IF NOT EXISTS``). Parquet-backed: create an empty
-    table with the full schema only when the path doesn't exist."""
-    try:
-        spark.read.schema(SCHEDULE_SCHEMA).parquet(path).head(1)
-    except Exception:
-        spark.createDataFrame([], SCHEDULE_SCHEMA).write.mode("overwrite").parquet(
-            path
-        )
+    ``CREATE TABLE IF NOT EXISTS``): write an empty schedule only when
+    ``path`` holds no schedule data file. An existing one is read, so
+    a corrupt or unreadable schedule raises instead of being replaced
+    by an empty one (which would forget every managed table)."""
+    if data_file(path) is None:
+        write_rows(path, [], SCHEDULE_SCHEMA)
+    else:
+        read_schedule(spark, path)
 
 
 def read_schedule(spark: SparkSession, path: str) -> DataFrame:
-    """S1 — full config scan (__main__.py:62-63)."""
-    return spark.read.schema(SCHEDULE_SCHEMA).parquet(path)
+    """S1 — full config scan (__main__.py:62-63), read driver-side:
+    the rows of the schedule's one data file as a local DataFrame."""
+    return spark.createDataFrame(to_rows(read_table(path), SCHEDULE_SCHEMA),
+                                 SCHEDULE_SCHEMA)
 
 
 def write_schedule(df: DataFrame, path: str) -> None:
-    """Overwrite the (tiny, bounded) config table. The reference uses
-    row-level UPDATE (__main__.py:172-176); on the parquet backend the
-    equivalent is read-modify-overwrite, serialized by the
-    orchestrator's lock (see orchestrator.py)."""
-    # config table is one-row-per-managed-table — single file is right
-    df.coalesce(1).write.mode("overwrite").parquet(path)
+    """Replace the (tiny, bounded) config table with ``df``'s rows:
+    collected to the driver, written as one parquet file and swapped
+    in with an atomic ``os.replace`` (:func:`write_rows`). Not
+    serialized with the orchestrator's stamps: a write racing a sweep
+    of the same schedule in this process can lose either side."""
+    write_rows(path, df.select(*SCHEDULE_SCHEMA.fieldNames()).collect(),
+               SCHEDULE_SCHEMA)
