@@ -3001,8 +3001,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # window's entries, re-sort the registry stalest-first (any new
     # never-checked value-0 entries first, then the oldest checked
     # block), and update the frozen window list in
-    # tests/test_oracle_parity.py (tools/rotate_r12.py is the
-    # one-shot script pattern that executed this rotation).
+    # tests/test_oracle_parity.py (tools/rotate.py is the
+    # reusable script for this rotation).
     return {
         # --- DRIVER WINDOW (first 50): the 50 stalest
         # entries after the r12 rotation. New never-checked

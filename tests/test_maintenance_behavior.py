@@ -737,6 +737,243 @@ def test_create_schedule_refuses_corrupt_file(spark, tmp_path):
     assert os.listdir(sched) == ["part-00000.parquet"]
 
 
+def _recording_table_class(calls):
+    """A ``ParquetMaintainedTable`` subclass recording the public
+    methods the orchestrator calls on it; calls a lake method makes on
+    its own table are not recorded."""
+    import functools
+    import threading
+
+    depth = threading.local()
+
+    def wrap(name):
+        orig = getattr(ParquetMaintainedTable, name)
+
+        @functools.wraps(orig)
+        def method(self, *args, **kwargs):
+            level = getattr(depth, "n", 0)
+            if level == 0:
+                calls.append(name)
+            depth.n = level + 1
+            try:
+                return orig(self, *args, **kwargs)
+            finally:
+                depth.n = level
+        return method
+
+    public = [n for n, v in vars(ParquetMaintainedTable).items()
+              if not n.startswith("_") and callable(v)
+              and not isinstance(v, (classmethod, staticmethod))]
+    return type("RecordingTable", (ParquetMaintainedTable,),
+                {n: wrap(n) for n in public})
+
+
+def _decayed_docs_table(spark, path, clock, cls=ParquetMaintainedTable):
+    """Four appends over the same ``k`` range (clustering overlap 4),
+    then one merge-on-read delete: a table with positional deletes
+    pending and a decayed layout."""
+    t = cls.create(spark, path)
+    for i in range(4):
+        t.append(spark.createDataFrame(
+            [(2 * i, "spark table scan", 0), (2 * i + 1, "table of contents", 99)],
+            "doc_id long, text string, k long"), clock=clock)
+    t.delete_where(F.col("doc_id") == 1, clock=clock)
+    return t
+
+
+def test_stage_contract_order_and_one_stamp_per_watermark(env):
+    """Every stage enabled and due on one table: the orchestrator calls
+    the lake in the fixed stage order (orphans, expiry, delete-file
+    budget, manifest rewrite, optimize, analyze, expectations, indexes,
+    index lag) and stamps each watermark exactly once."""
+    spark, tmp_path, clock, sched, tables, stats_log, orch = env
+    calls: list[str] = []
+    t = _decayed_docs_table(spark, str(tmp_path / "all"), clock,
+                            _recording_table_class(calls))
+    tables["all"] = t
+    idx = ParquetMaintainedTable.create(
+        spark, str(tmp_path / "all_bm25"), partition_cols=["kind"])
+    write_schedule(spark, sched, [schedule_row(
+        "all", should_remove_orphan_files=1, retention_days_orphan_files=3,
+        should_expire_snapshots=1, retention_days_snapshots=7,
+        should_optimize=1, days_to_optimize=10,
+        should_analyze=1, days_to_analyze=10,
+        should_check_expectations=1, days_to_check=10,
+        should_maintain_indexes=1, days_to_index=10,
+    )])
+    o = orch(max_delete_files=0, rewrite_manifests_max_entries=0,
+             optimize_decay_column="k", optimize_decay_max_overlap=3.0,
+             expectation_rules={"all": [("k_set", "k IS NOT NULL")]})
+    o.register_index("all", "bm25", idx, kind="bm25")
+    stamps: list[tuple[str, str]] = []
+    stamp_watermark = o._stamp_watermark
+
+    def record_stamp(table_name, column):
+        stamps.append((table_name, column))
+        stamp_watermark(table_name, column)
+
+    o._stamp_watermark = record_stamp
+    calls.clear()
+    assert o.run() and not o.errors
+
+    assert calls == [
+        "remove_orphan_files",
+        "expire_snapshots",
+        "current_snapshot", "compact_delete_files", "purge_deletes",
+        "manifest_log_entries", "rewrite_manifests",
+        "clustering_depth_report", "table_properties", "optimize",
+        "clustering_depth_report", "unset_table_properties",
+        "backfill_file_stats", "read",
+        "read",
+        "current_snapshot", "read",
+    ]
+    assert sorted(stamps) == [
+        ("all", "last_analyzed_on"), ("all", "last_checked_on"),
+        ("all", "last_indexed_on"), ("all", "last_optimized_on"),
+    ]
+    row = read_schedule(spark, sched).collect()[0]
+    for c in ("last_optimized_on", "last_analyzed_on", "last_checked_on",
+              "last_indexed_on"):
+        assert row[c] == clock()
+    assert stats_log["all"]
+    assert [r.table_name for r in o.clustering_audit().collect()] == ["all"]
+    assert [r.seq for r in o.index_lag_audit().collect()] == [0]
+    assert o.expectation_audit().count() == 1
+
+
+def test_stage_contract_optional_stages_skip_without_config(env):
+    """With the optional knobs unset (no delete-file budget, no
+    manifest budget, no decay column, no rules, no indexes) only the
+    reference's four stages touch the table, even when every flag is
+    set."""
+    spark, tmp_path, clock, sched, tables, _, orch = env
+    calls: list[str] = []
+    t = _decayed_docs_table(spark, str(tmp_path / "plain"), clock,
+                            _recording_table_class(calls))
+    tables["plain"] = t
+    write_schedule(spark, sched, [schedule_row(
+        "plain", should_remove_orphan_files=1, should_expire_snapshots=1,
+        retention_days_snapshots=7, should_optimize=1, should_analyze=1,
+        should_check_expectations=1, should_maintain_indexes=1,
+    )])
+    o = orch()
+    calls.clear()
+    assert o.run() and not o.errors
+    assert calls == ["remove_orphan_files", "expire_snapshots", "optimize",
+                     "backfill_file_stats", "read"]
+    row = read_schedule(spark, sched).collect()[0]
+    assert row.last_optimized_on == clock()
+    assert row.last_analyzed_on == clock()
+    assert row.last_checked_on is None and row.last_indexed_on is None
+    assert o.clustering_audit().count() == 0
+    assert o.index_lag_audit().count() == 0
+
+
+def test_stage_contract_misconfigured_rows(env):
+    """A row with a watermark set and its days NULL: a decay-triggered
+    optimize still runs and is stamped; a day-only optimize fails the
+    task; expectations and indexes with nothing configured never reach
+    the cadence check; the index-lag observation runs for a table with
+    a registered index even when its flag is off."""
+    spark, tmp_path, clock, sched, tables, _, orch = env
+    past = clock() - dt.timedelta(days=1)
+    tables["decayed"] = _decayed_docs_table(
+        spark, str(tmp_path / "decayed"), clock)
+    tables["plain"] = make_table(spark, tmp_path, "plain", [[("a", "b")]], clock)
+    tables["indexed"] = make_table(
+        spark, tmp_path, "indexed", [[("a", "b")]], clock)
+    idx = ParquetMaintainedTable.create(
+        spark, str(tmp_path / "lag_bm25"), partition_cols=["kind"])
+    write_schedule(spark, sched, [
+        schedule_row("decayed", should_optimize=1, last_optimized_on=past),
+        schedule_row("plain", should_check_expectations=1,
+                     last_checked_on=past, should_maintain_indexes=1,
+                     last_indexed_on=past),
+        schedule_row("indexed", should_maintain_indexes=0,
+                     last_indexed_on=past),
+    ])
+    o = orch(optimize_decay_column="k", optimize_decay_max_overlap=3.0)
+    o.register_index("indexed", "bm25", idx, kind="bm25")
+    assert sorted(p.table_name for p in o.run()) == [
+        "decayed", "indexed", "plain"]
+    assert not o.errors
+    got = {r.table_name: r for r in read_schedule(spark, sched).collect()}
+    assert got["decayed"].last_optimized_on == clock()
+    assert tables["decayed"].file_count() == 1
+    assert got["plain"].last_checked_on == past
+    assert got["plain"].last_indexed_on == past
+    assert got["indexed"].last_indexed_on == past
+    assert [r.table_name for r in o.index_lag_audit().collect()] == ["indexed"]
+
+    # the same decayed row without the decay gate is day-only: NULL
+    # days with a set watermark fails the task, unstamped
+    o2 = orch()
+    clock.advance(days=1)
+    assert sorted(p.table_name for p in o2.run()) == ["indexed", "plain"]
+    assert [e.properties.table_name for e in o2.errors] == ["decayed"]
+    assert isinstance(o2.errors[0], MaintenanceTaskException)
+    assert isinstance(o2.errors[0].cause, ValueError)
+    after = {r.table_name: r for r in read_schedule(spark, sched).collect()}
+    assert after["decayed"].last_optimized_on == got["decayed"].last_optimized_on
+
+
+def test_stage_table_matches_schedule_schema(env):
+    """Every ``should_*`` column of the schedule is the flag of exactly
+    one stage, every ``last_*_on`` column the watermark of exactly one
+    stage paired with a ``days_*`` column, and every ``*_due`` column
+    of fleet_report comes from a stage: a cadence column added to the
+    schedule without a stage fails here."""
+    from trino_iceberg_maintenance_spark.orchestrator import STAGES
+
+    spark, tmp_path, clock, sched, tables, _, orch = env
+    columns = SCHEDULE_SCHEMA.fieldNames()
+    flags = [s.flag for s in STAGES if s.flag]
+    assert sorted(flags) == sorted(c for c in columns if c.startswith("should_"))
+    watermarks = [s.watermark for s in STAGES if s.watermark]
+    assert sorted(watermarks) == sorted(
+        c for c in columns if c.startswith("last_") and c.endswith("_on"))
+    for s in STAGES:
+        if s.watermark:
+            assert s.flag and s.days in columns and s.days.startswith("days_")
+        else:
+            assert s.days is None
+    assert len({s.days for s in STAGES if s.days}) == len(watermarks)
+    assert len({s.name for s in STAGES}) == len(STAGES)
+
+    write_schedule(spark, sched, [])
+    report_due = [c for c in orch().fleet_report().columns
+                  if c.endswith("_due")]
+    assert report_due == [f"{s.name}_due" for s in STAGES if s.watermark]
+
+
+def test_register_index_runs_no_spark_job(env):
+    """Registering a durable index is a driver-side read and atomic
+    replace of the registry: no Spark job runs, and Spark still reads
+    the registry it leaves."""
+    spark, tmp_path, clock, sched, tables, _, orch = env
+    write_schedule(spark, sched, [schedule_row("t1")])
+    idx = ParquetMaintainedTable.create(
+        spark, str(tmp_path / "reg_bm25"), partition_cols=["kind"])
+    o = orch()
+    sc = spark.sparkContext
+    group = "index-registry-guard"
+    sc.setJobGroup(group, "register index")
+    try:
+        o.register_index("t1", "bm25", idx, kind="bm25", retract_key="doc_id")
+        o.register_index("t2", "bm25", idx, kind="bm25")
+        o.register_index("t1", "bm25", idx, kind="bm25")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    got = sorted((r.source_table, r.index_name, r.index_path, r.kind,
+                  r.n_cells, r.retract_key)
+                 for r in spark.read.parquet(o.index_registry_path).collect())
+    assert got == [("t1", "bm25", idx.path, "bm25", 16, None),
+                   ("t2", "bm25", idx.path, "bm25", 16, None)]
+    assert sorted(orch().index_maintainers) == ["t1", "t2"]
+
+
 def test_time_travel_read(spark, tmp_path):
     """read_as_of returns historic contents by snapshot id and by
     timestamp; compaction does not disturb older snapshots."""
@@ -3239,7 +3476,7 @@ def test_expectation_audit_file_count_stays_bounded(env):
     # bounded on disk: live file count under the threshold, and the
     # PHYSICAL parquet count (live + snapshot-retained + stray) is
     # bounded too — the expired small files were actually deleted
-    live = o._audit_table().file_count()
+    live = o._audit_table(o.audit_path).file_count()
     assert live < AUDIT_COMPACT_FILE_THRESHOLD
     physical = [
         f for f in glob.glob(os.path.join(o.audit_path, "**", "*.parquet"),

@@ -1388,7 +1388,7 @@ def rrf_fusion(
     is two avoidable full-corpus reads (optimization r14, guide
     §2.4/§5). The query side is shared the same way — un-shared, the
     arms issued SIX filtered scans of the embeddings relation for the
-    tiny query set (executed-plan evidence in plans/r14); re-casting
+    tiny query set (executed-plan dumps in git history); re-casting
     the materialized ``v`` is a no-op, so values are unchanged."""
     corpus = _as_double(emb, id_col, "embedding", fan=True).localCheckpoint(
         eager=False

@@ -1941,7 +1941,7 @@ def bm25_scores(
     projected scan. The query-terms-sized ``tf`` is materialized once
     (lazy localCheckpoint) because the ranking tail reads it twice —
     before, each reference re-ran the corpus explode (the before/after
-    plans in plans/r14 read 8 → 3 corpus scans).
+    plan dumps in git history read 8 → 3 corpus scans).
 
     Cross-engine exact: idf and the per-term saturation are fixed IEEE
     expression trees on exact integer counts; per-doc sums run over

@@ -6,10 +6,19 @@ Reference mapping (SURVEY.md §2.5, §3):
   per row on a bounded thread pool (``NUM_WORKERS`` default 5,
   ``__main__.py:13``) → gather with per-task fault isolation (one bad
   table never aborts the batch, ``__main__.py:73-80``).
-- ``MaintenanceTask.execute`` (``__main__.py:121-201``): fixed
-  per-table pipeline orphan-removal → expire-snapshots → optimize →
-  analyze, with flag truthiness (NULL/0 skip) and due-date predicates,
-  watermark writes after optimize/analyze.
+- ``MaintenanceTask.execute`` (``__main__.py:121-201``): a fixed
+  per-table pipeline of stages. :data:`STAGES` is the single place a
+  stage's flag column, cadence (watermark + days columns) and work
+  method are defined: orphan removal → snapshot expiry → delete-file
+  budget → manifest rewrite → optimize → analyze → expectations →
+  indexes → index-lag observation. ``Orchestrator._execute_table`` is
+  a loop over it: a stage whose flag is NULL/0 is skipped, otherwise
+  its method runs with a lazy day-due check, and when the method
+  reports that it did the work, the stage's watermark is stamped.
+  Stages without a flag gate themselves on the orchestrator's
+  settings. The reference's four triples come from
+  ``plans.due.ACTIONS``, and ``fleet_report``'s ``*_due`` columns are
+  built from the same table.
 - ``MaintenanceProperties`` (``__main__.py:83-99``): typed row record.
 - clock split (§3.3): due-date checks use the injectable ``clock``
   (the reference's client-side ``datetime.now()``, freezegun-fakeable);
@@ -23,10 +32,15 @@ Reference mapping (SURVEY.md §2.5, §3):
   matching row, writes a hidden temp file and ``os.replace``s it over
   the data file. A stamp takes milliseconds and runs no Spark job, so
   the workers barely queue on the lock, and a crash leaves the old or
-  the new schedule whole. Like the reference's, the lock serializes
+  the new schedule whole. The index registry beside the schedule is
+  rewritten the same way. Like the reference's, the lock serializes
   stamps of one process only; it does not protect multi-process runs
   (with an Iceberg catalog this would be an optimistic-concurrency
   MERGE instead).
+- The expectation, clustering-decay and index-lag histories are
+  maintained tables beside the schedule, appended under the same lock
+  through ``_append_audit`` (which self-compacts them) and read
+  through ``_read_audit``.
 
 Spark's scheduler is thread-safe, so concurrent per-table jobs simply
 interleave on the cluster; with many tables this fans out cluster-wide
@@ -36,6 +50,8 @@ while each table's pipeline stays sequential (the ordering contract).
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import glob
 import logging
 import os
 import threading
@@ -44,10 +60,12 @@ from dataclasses import dataclass
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from trino_iceberg_maintenance_spark.plans import stats as stats_plans
+from trino_iceberg_maintenance_spark.plans.due import ACTIONS
 from trino_iceberg_maintenance_spark.plans.incremental import (
     incremental_partition_stats,
     table_null_fractions,
@@ -55,6 +73,7 @@ from trino_iceberg_maintenance_spark.plans.incremental import (
 from trino_iceberg_maintenance_spark.sources.lake import ParquetMaintainedTable
 from trino_iceberg_maintenance_spark.sources.schedule import (
     SCHEDULE_SCHEMA,
+    data_file,
     read_schedule,
     read_table,
     stamp,
@@ -95,17 +114,23 @@ INDEX_LAG_AUDIT_SCHEMA = (
 
 #: durable index registration: enough to reconstruct a standard
 #: maintainer in a fresh session (custom extend_fns stay in-memory)
-INDEX_REGISTRY_SCHEMA = (
-    "source_table string, index_name string, index_path string, "
-    "kind string, n_cells int, retract_key string, "
-    "num_hashes int, band_width int"
-)
+INDEX_REGISTRY_SCHEMA = T.StructType([
+    T.StructField("source_table", T.StringType()),
+    T.StructField("index_name", T.StringType()),
+    T.StructField("index_path", T.StringType()),
+    T.StructField("kind", T.StringType()),
+    T.StructField("n_cells", T.IntegerType()),
+    T.StructField("retract_key", T.StringType()),
+    T.StructField("num_hashes", T.IntegerType()),
+    T.StructField("band_width", T.IntegerType()),
+])
 
-#: stage-5 audit self-maintenance (VERDICT r8 #4): each check appends
-#: one rule-count-sized file — at fleet scale x daily cadence that is
-#: exactly the small-files pathology this tool exists to fix. Once the
-#: audit relation's LIVE file count reaches this bound, the appending
-#: run bin-packs it (optimize) and GCs the superseded history
+#: audit self-maintenance (VERDICT r8 #4): each check or sweep appends
+#: one small file to an audit relation — at fleet scale x daily
+#: cadence that is exactly the small-files pathology this tool exists
+#: to fix. Once an audit relation's LIVE file count reaches this
+#: bound, the appending run bin-packs it (optimize) and GCs the
+#: superseded history
 #: (expire + orphan sweep), so the on-disk file count stays bounded
 #: forever. History lives in ROWS (table_name, checked_on), never in
 #: snapshots, so dropping pre-compaction snapshots loses nothing.
@@ -556,35 +581,18 @@ class Orchestrator:
             )
         if kind is None:
             return
-        import os
-
+        # driver-side read and atomic replace, like the schedule's
+        # stamps: no Spark job runs under the lock
         with self._watermark_lock:
-            rows = []
-            if os.path.exists(self.index_registry_path):
-                for r in self.spark.read.parquet(
-                    self.index_registry_path
-                ).collect():
-                    if (r.source_table == source_table
-                            and r.index_name == index_name):
-                        continue
-                    d = r.asDict()
-                    rows.append((
-                        d["source_table"], d["index_name"],
-                        d["index_path"], d["kind"], d["n_cells"],
-                        # pre-r10 registries have no retract_key column;
-                        # pre-r11 none for the banding pair
-                        d.get("retract_key"),
-                        d.get("num_hashes"), d.get("band_width"),
-                    ))
+            rows = [
+                r for r in self._registry_rows()
+                if (r.source_table, r.index_name) != (source_table, index_name)
+            ]
             rows.append((
                 source_table, index_name, index_table.path, kind,
                 n_cells, retract_key, num_hashes, band_width,
             ))
-            self.spark.createDataFrame(
-                rows, INDEX_REGISTRY_SCHEMA
-            ).coalesce(1).write.mode("overwrite").parquet(
-                self.index_registry_path
-            )
+            write_rows(self.index_registry_path, rows, INDEX_REGISTRY_SCHEMA)
 
     def rebuild_index(self, source_table: str, index_name: str) -> None:
         """The remediation the expired-cursor error path names
@@ -637,85 +645,85 @@ class Orchestrator:
             dt.datetime.max, retain_last=1, clock=self.clock
         )
 
-    def _load_index_registry(self) -> None:
-        import os
+    def _registry_rows(self) -> list[Row]:
+        """The persisted registrations. Columns an older registry
+        lacks read as NULL: pre-r10 files have no ``retract_key``,
+        pre-r11 files no banding pair."""
+        if data_file(self.index_registry_path) is None:
+            return []
+        reg = Row(*INDEX_REGISTRY_SCHEMA.fieldNames())
+        return [
+            reg(*r) for r in to_rows(
+                read_table(self.index_registry_path), INDEX_REGISTRY_SCHEMA
+            )
+        ]
 
-        if not os.path.exists(self.index_registry_path):
-            return
-        for r in self.spark.read.parquet(self.index_registry_path).collect():
+    def _load_index_registry(self) -> None:
+        for r in self._registry_rows():
             regs = self.index_maintainers.setdefault(r.source_table, [])
             if any(name == r.index_name for name, _t, _f in regs):
                 continue  # explicit registration wins
-            d = r.asDict()
             regs.append((
                 r.index_name,
                 ParquetMaintainedTable(self.spark, r.index_path),
                 standard_index_maintainer(
-                    r.kind, r.n_cells, num_hashes=d.get("num_hashes")
+                    r.kind, r.n_cells, num_hashes=r.num_hashes
                 ),
             ))
-            # banding columns exist from r11 on; a restart under an
-            # older registry rediscovers module-default banding
-            if d.get("num_hashes") is not None:
+            # a registry older than the banding columns rediscovers
+            # module-default banding
+            if r.num_hashes is not None:
                 self.index_banding.setdefault(r.source_table, {})[
                     r.index_name
-                ] = (int(d["num_hashes"]),
-                     int(d["band_width"]) if d.get("band_width") is not None
+                ] = (int(r.num_hashes),
+                     int(r.band_width) if r.band_width is not None
                      else None)
-            # retract_key column exists from r10 on; earlier
-            # registries rediscover with retraction off (the default)
-            rkey = d.get("retract_key")
+            # …and one older than retract_key, retraction off
+            rkey = r.retract_key
             if rkey:
                 self.index_retraction_keys.setdefault(
                     r.source_table, {}
                 )[r.index_name] = rkey
 
-    # -- durable stage-5 audit (VERDICT r7 #4) ----------------------------
-    def _audit_table(self, create: bool = False):
-        """The audit relation AS a maintained table — the tool
-        dogfooding itself (VERDICT r8 #4). Returns ``None`` when it
+    # -- durable audit relations (VERDICT r7 #4, r10 #4, r11 #8) ----------
+    def _audit_table(self, path: str, create: bool = False):
+        """The audit relation at ``path`` AS a maintained table — the
+        tool dogfooding itself (VERDICT r8 #4). Returns ``None`` when it
         doesn't exist yet and ``create`` is False. A pre-existing
         plain-parquet audit dir (pre-r9 layout: loose part files,
         no ``_manifest.json``) is adopted in place via ``add_files``
         — metadata only, nothing is read or rewritten, and the next
         threshold crossing compacts + GCs the legacy tail like any
         other small-file backlog."""
-        import glob
-        import os
-
-        if os.path.exists(os.path.join(self.audit_path, "_manifest.json")):
-            return ParquetMaintainedTable(self.spark, self.audit_path)
+        if os.path.exists(os.path.join(path, "_manifest.json")):
+            return ParquetMaintainedTable(self.spark, path)
         legacy = sorted(
             f
-            for f in glob.glob(os.path.join(self.audit_path, "*.parquet"))
+            for f in glob.glob(os.path.join(path, "*.parquet"))
             if not os.path.basename(f).startswith((".", "_"))
         )
         if not legacy and not create:
             return None
-        t = ParquetMaintainedTable.create(self.spark, self.audit_path)
+        t = ParquetMaintainedTable.create(self.spark, path)
         if legacy:
             t.add_files(legacy, clock=self.clock)
         return t
 
-    def _append_expectation_audit(
-        self, table_name: str, checked_on: dt.datetime, report_rows: list
+    def _append_audit(
+        self, path: str, schema: str,
+        make_rows: Callable[[ParquetMaintainedTable], list],
     ) -> None:
-        """One rule-count-sized batch per check, appended keyed by
-        (table, checked_on) — the queryable audit history, and the
-        restart-safe source for fleet_report's violation count.
+        """Append ``make_rows(table)`` to the audit relation at
+        ``path`` under the process lock (creating it on first use).
         Self-regulating: past AUDIT_COMPACT_FILE_THRESHOLD live files
         the append also bin-packs the relation and GCs the replaced
-        history, so K checks never mean K files on disk forever."""
+        history, so K sweeps never mean K files on disk forever."""
         with self._watermark_lock:
-            t = self._audit_table(create=True)
-            t.append(self.spark.createDataFrame(
-                [
-                    (table_name, checked_on, r.rule, r.n_rows,
-                     r.n_violations, r.passed)
-                    for r in report_rows
-                ],
-                EXPECTATION_AUDIT_SCHEMA,
-            ), clock=self.clock)
+            t = self._audit_table(path, create=True)
+            t.append(
+                self.spark.createDataFrame(make_rows(t), schema),
+                clock=self.clock,
+            )
             if t.file_count() >= AUDIT_COMPACT_FILE_THRESHOLD:
                 t.optimize(clock=self.clock)
                 # rows carry the history; pre-compaction snapshots
@@ -726,108 +734,48 @@ class Orchestrator:
                     dt.datetime.max, retain_last=1, clock=self.clock
                 )
 
+    def _read_audit(
+        self, path: str, schema: str | None = None
+    ) -> DataFrame | None:
+        """The audit relation at ``path``. When none was ever written:
+        an empty frame of ``schema``, or ``None`` without one (so the
+        dashboard aggregates skip the read entirely)."""
+        with self._watermark_lock:
+            t = self._audit_table(path)
+            if t is not None:
+                return t.read()
+        if schema is None:
+            return None
+        return self.spark.createDataFrame([], schema)
+
     def expectation_audit(self) -> DataFrame:
         """The durable stage-5 audit relation (empty-but-typed when no
         check has ever run)."""
-        with self._watermark_lock:
-            t = self._audit_table()
-        if t is None:
-            return self.spark.createDataFrame([], EXPECTATION_AUDIT_SCHEMA)
-        return t.read()
+        return self._read_audit(self.audit_path, EXPECTATION_AUDIT_SCHEMA)
 
-    def _append_clustering_audit(
-        self, table_name: str, measured_on: dt.datetime, depth: dict,
-        triggered: bool,
-    ) -> None:
-        """One row per decay measurement — the durable
-        clustering-depth HISTORY (VERDICT r10 #4) living next to the
-        stage-5 audit relation, with the same self-compaction so daily
-        sweeps never accrete a small-file backlog of their own."""
-        import os
-
-        with self._watermark_lock:
-            path = self.clustering_audit_path
-            if os.path.exists(os.path.join(path, "_manifest.json")):
-                t = ParquetMaintainedTable(self.spark, path)
-            else:
-                t = ParquetMaintainedTable.create(self.spark, path)
-            t.append(self.spark.createDataFrame(
-                [(
-                    table_name, measured_on, self.optimize_decay_column,
-                    int(depth["n_files"]), int(depth["with_stats"]),
-                    float(depth["avg_overlap"]), int(depth["max_overlap"]),
-                    bool(triggered),
-                )],
-                CLUSTERING_AUDIT_SCHEMA,
-            ), clock=self.clock)
-            if t.file_count() >= AUDIT_COMPACT_FILE_THRESHOLD:
-                t.optimize(clock=self.clock)
-                t.expire_snapshots(
-                    dt.datetime.max, retain_last=1, clock=self.clock
-                )
-
-    def _append_index_lag_audit(
-        self, table_name: str, measured_on: dt.datetime, lag: int
-    ) -> None:
-        """One row per (indexed table, sweep), recorded after stage 6 —
-        the durable staleness history behind fleet_report's
-        ``index_lag_delta`` (VERDICT r11 #8). Same self-compaction as
-        the clustering audit so daily sweeps never accrete a
-        small-file backlog."""
-        import os
-
-        with self._watermark_lock:
-            path = self.index_lag_audit_path
-            if os.path.exists(os.path.join(path, "_manifest.json")):
-                t = ParquetMaintainedTable(self.spark, path)
-                seq = (
-                    t.read().where(F.col("table_name") == table_name)
-                    .count()
-                )
-            else:
-                t = ParquetMaintainedTable.create(self.spark, path)
-                seq = 0
-            t.append(self.spark.createDataFrame(
-                [(table_name, measured_on, int(seq), int(lag))],
-                INDEX_LAG_AUDIT_SCHEMA,
-            ), clock=self.clock)
-            if t.file_count() >= AUDIT_COMPACT_FILE_THRESHOLD:
-                t.optimize(clock=self.clock)
-                t.expire_snapshots(
-                    dt.datetime.max, retain_last=1, clock=self.clock
-                )
+    def clustering_audit(self) -> DataFrame:
+        """The durable clustering-decay history (empty-but-typed when
+        the decay gate never measured anything)."""
+        return self._read_audit(
+            self.clustering_audit_path, CLUSTERING_AUDIT_SCHEMA
+        )
 
     def index_lag_audit(self) -> DataFrame:
         """The durable per-sweep index-staleness history
         (empty-but-typed when no sweep ever observed an indexed
         table)."""
-        import os
-
-        with self._watermark_lock:
-            if os.path.exists(
-                os.path.join(self.index_lag_audit_path, "_manifest.json")
-            ):
-                return ParquetMaintainedTable(
-                    self.spark, self.index_lag_audit_path
-                ).read()
-        return self.spark.createDataFrame([], INDEX_LAG_AUDIT_SCHEMA)
+        return self._read_audit(
+            self.index_lag_audit_path, INDEX_LAG_AUDIT_SCHEMA
+        )
 
     def _latest_index_lag_trend(self) -> dict[str, int]:
         """Per-table ``latest − previous`` sweep-recorded index lag —
         one window over the (bounded, sweeps-sized) audit, collected
         to a tables-sized dict. Tables with fewer than two recorded
         sweeps are absent (no trend yet)."""
-        import os
-
-        if not os.path.exists(
-            os.path.join(self.index_lag_audit_path, "_manifest.json")
-        ):
+        hist = self._read_audit(self.index_lag_audit_path)
+        if hist is None:
             return {}
-        from pyspark.sql import Window
-
-        hist = ParquetMaintainedTable(
-            self.spark, self.index_lag_audit_path
-        ).read()
         w = Window.partitionBy("table_name").orderBy(F.col("seq").desc())
         last2 = (
             hist.withColumn("__rk", F.row_number().over(w))
@@ -845,33 +793,15 @@ class Orchestrator:
         )
         return {r.table_name: int(r.latest - r.prev) for r in last2}
 
-    def clustering_audit(self) -> DataFrame:
-        """The durable clustering-decay history (empty-but-typed when
-        the decay gate never measured anything)."""
-        import os
-
-        with self._watermark_lock:
-            if os.path.exists(
-                os.path.join(self.clustering_audit_path, "_manifest.json")
-            ):
-                return ParquetMaintainedTable(
-                    self.spark, self.clustering_audit_path
-                ).read()
-        return self.spark.createDataFrame([], CLUSTERING_AUDIT_SCHEMA)
-
     def _latest_clustering_state(self) -> dict[str, tuple]:
         """Per-table (avg_overlap, triggered) of each table's LATEST
         decay measurement — one aggregate over the (bounded,
         runs-sized) clustering audit, collected to a tables-sized
         dict for the dashboard loop. Empty when the decay gate never
         ran."""
-        import os
-
-        if not os.path.exists(
-            os.path.join(self.clustering_audit_path, "_manifest.json")
-        ):
+        aud = self._read_audit(self.clustering_audit_path)
+        if aud is None:
             return {}
-        aud = self.clustering_audit()
         latest = aud.groupBy("table_name").agg(
             F.max("measured_on").alias("measured_on")
         )
@@ -889,11 +819,9 @@ class Orchestrator:
         batch — one aggregate over the (bounded, rule-count × runs)
         audit relation, collected to a tables-sized dict for the
         dashboard loop."""
-        import os
-
-        if not os.path.exists(self.audit_path):
+        audit = self._read_audit(self.audit_path)
+        if audit is None:
             return {}
-        audit = self.expectation_audit()
         latest = audit.groupBy("table_name").agg(
             F.max("checked_on").alias("checked_on")
         )
@@ -907,349 +835,350 @@ class Orchestrator:
 
     # -- per-table pipeline (__main__.py:121-201) ------------------------
     def _execute_table(self, props: MaintenanceProperties) -> None:
+        """Run the :data:`STAGES` in order on one table; a stage that
+        reports it did its work gets its watermark stamped."""
         try:
             now = self.clock()
             table = self.table_resolver(props.table_name)
-
-            # 1. orphan removal (__main__.py:141-148)
-            if _truthy(props.should_remove_orphan_files):
-                cutoff = now - dt.timedelta(
-                    days=props.retention_days_orphan_files or 0
-                )
-                table.remove_orphan_files(older_than=cutoff)
-
-            # 2. snapshot expiry (__main__.py:151-158)
-            if _truthy(props.should_expire_snapshots):
-                cutoff = now - dt.timedelta(
-                    days=props.retention_days_snapshots or 0
-                )
-                table.expire_snapshots(older_than=cutoff)
-
-            # 2.5 merge-on-read delete-file maintenance: readers pay a
-            # per-scan anti-join for every pending delete file
-            # (SCALING.md probe) — over budget, first merge positional
-            # files without touching data, then materialize if a long
-            # equality backlog remains
-            if self.max_delete_files is not None:
-                cur = table.current_snapshot()
-                entries = list(cur.delete_files or []) if cur else []
-                n_pos = sum(1 for e in entries if e["content"] == "position")
-                if n_pos > self.max_delete_files:
-                    entries = list(
-                        table.compact_delete_files(clock=self.clock)
-                        .delete_files or []
-                    )
-                if len(entries) > self.max_delete_files:
-                    table.purge_deletes(clock=self.clock)
-
-            # 2.6 manifest rewrite (Iceberg's rewrite_manifests): fold
-            # the commit journal into the compacted base once it
-            # exceeds the budget, bounding manifest-load cost on
-            # long-history tables. Metadata-only; idempotent.
-            if (
-                self.rewrite_manifests_max_entries is not None
-                and table.manifest_log_entries()
-                > self.rewrite_manifests_max_entries
-            ):
-                table.rewrite_manifests()
-
-            # 3. optimize (__main__.py:161-177). Day-due is the
-            # reference cadence; the r11 decay gate MEASURES
-            # clustering depth (metadata-only, stats-store-backed)
-            # every sweep and pulls optimize forward when the table
-            # has actually decayed — a still-clustered table inside
-            # its period is never rewritten early, an interleaved one
-            # doesn't wait out the calendar.
-            if _truthy(props.should_optimize):
-                decay_due = False
-                depth = None
-                if self.optimize_decay_column:
-                    try:
-                        depth = table.clustering_depth_report(
-                            self.optimize_decay_column
-                        )
-                        decay_due = (
-                            depth["with_stats"] > 0
-                            and depth["avg_overlap"]
-                            > self.optimize_decay_max_overlap
-                        )
-                        # re-trigger suppression (ADVICE r11): a
-                        # size-capped compact-only optimize can leave
-                        # the SAME overlapping files above the bar —
-                        # without this, the gate would rewrite the
-                        # table every sweep for no improvement
-                        # (unbounded write amplification). A prior
-                        # decay-triggered optimize that could not
-                        # improve stamps the overlap it got stuck at;
-                        # the gate re-arms only once the table decays
-                        # PAST that point (new files changed the
-                        # picture, optimize may help again).
-                        if decay_due:
-                            stuck = table.table_properties().get(
-                                _DECAY_STUCK_OVERLAP_KEY
-                            )
-                            if (
-                                stuck is not None
-                                and depth["avg_overlap"]
-                                <= float(stuck)
-                            ):
-                                decay_due = False
-                    except Exception:
-                        depth = None  # no stats → day cadence only
-                if decay_due or _due(
-                    props.last_optimized_on, props.days_to_optimize, now
-                ):
-                    table.optimize(
-                        clock=self.clock,
-                        sort_by=self.optimize_sort_columns,
-                        zorder_by=self.optimize_zorder_columns,
-                    )
-                    self._stamp_watermark(
-                        props.table_name, "last_optimized_on"
-                    )
-                    # post-optimize effectiveness check for the decay
-                    # trigger: stamp the stuck-at overlap when the
-                    # rewrite did not improve it (suppresses the next
-                    # sweeps), clear any stamp once it DID improve
-                    if decay_due and depth is not None:
-                        try:
-                            post = table.clustering_depth_report(
-                                self.optimize_decay_column
-                            )
-                            if (
-                                post["with_stats"] > 0
-                                and post["avg_overlap"]
-                                >= depth["avg_overlap"]
-                            ):
-                                table.set_table_properties({
-                                    _DECAY_STUCK_OVERLAP_KEY:
-                                        repr(post["avg_overlap"]),
-                                })
-                            else:
-                                table.unset_table_properties(
-                                    [_DECAY_STUCK_OVERLAP_KEY]
-                                )
-                        except Exception:
-                            pass  # best-effort, like the measure
-                if depth is not None:
-                    self._append_clustering_audit(
-                        props.table_name, now, depth, decay_due
-                    )
-
-            # 4. analyze (__main__.py:179-199). Partitioned tables use
-            # the incremental path: only partitions whose file set
-            # changed since the previous ANALYZE are rescanned — the
-            # 100 TB replacement for the reference's full-table
-            # re-ANALYZE every period (plans/incremental.py).
-            if _truthy(props.should_analyze) and _due(
-                props.last_analyzed_on, props.days_to_analyze, now
-            ):
-                # stats-store convergence (VERDICT r10 #2): ANALYZE is
-                # the one stage that would footer-read pre-store files
-                # anyway, so adopt them into the commit-time store NOW
-                # — a legacy table becomes footer-free after its first
-                # scheduled ANALYZE with no manual backfill call.
-                # Complete-store tables pay one keys-only read.
-                # Best-effort: a read-only store must not fail stage 4.
-                try:
-                    self.last_stats_backfill[props.table_name] = (
-                        table.backfill_file_stats()
-                    )
-                except Exception:
-                    self.last_stats_backfill[props.table_name] = 0
-                stats = None
-                if self.analyze_from_footers:
-                    stats = self._footer_null_fractions(table, props)
-                if stats is not None:
-                    pass  # metadata-only fast path qualified
-                elif table.partition_cols:
-                    stats = self._incremental_analyze(table, props)
-                else:
-                    df = table.read()
-                    cols = list(props.columns_to_analyze or df.columns)
-                    stats = stats_plans.null_fraction_stats(df, cols)
-                if (
-                    self.analyze_from_footers
-                    and "min_value" not in stats.columns
-                ):
-                    # schema stability: with the fast path enabled the
-                    # stage ALWAYS delivers the widened 6-column
-                    # relation — fallback runs (empty table, MoR
-                    # deletes, unknowable column, partitioned) pad
-                    # bounds with NULL (bounds are exact-or-NULL, and
-                    # the data path does not compute them), so a
-                    # durable sink never sees a run-dependent schema
-                    stats = stats.select(
-                        "*",
-                        F.lit(None).cast("double").alias("min_value"),
-                        F.lit(None).cast("double").alias("max_value"),
-                    )
-                if self.stats_sink:
-                    self.stats_sink(props.table_name, stats)
-                else:
-                    stats.collect()
-                self._stamp_watermark(props.table_name, "last_analyzed_on")
-
-            # 5. expectations check (extension stage; flag + cadence +
-            # watermark mirror the reference's stage shape,
-            # __main__.py:141-199). All rules for the table run as ONE
-            # aggregate pass over one scan; results are rule-count-
-            # sized (bounded) and kept for fleet_report.
-            rules = self.expectation_rules.get(props.table_name)
-            if (
-                rules
-                and _truthy(props.should_check_expectations)
-                and _due(props.last_checked_on, props.days_to_check, now)
-            ):
-                from trino_iceberg_maintenance_spark.plans.audit import (
-                    check_expectations,
-                )
-
-                report = check_expectations(table.read(), rules)
-                checked = report.collect()
-                self.last_expectations[props.table_name] = checked
-                # durable twin of the in-memory report (rule-count-
-                # sized): survives a restart, queryable as history
-                self._append_expectation_audit(
-                    props.table_name, now, checked
-                )
-                self._stamp_watermark(props.table_name, "last_checked_on")
-
-            # 6. index maintenance (extension stage; flag + cadence +
-            # watermark mirror the reference's stage shape). Each
-            # registered index is brought current through the source
-            # table's HEAD snapshot: rows inserted since the index's
-            # covers_snapshot cursor feed extend_fn — change-sized
-            # work (snapshot_diff reads only files outside the
-            # snapshot intersection), never a corpus rescan.
-            regs = self.index_maintainers.get(props.table_name)
-            if (
-                regs
-                and _truthy(props.should_maintain_indexes)
-                and _due(props.last_indexed_on, props.days_to_index, now)
-            ):
-                cur = table.current_snapshot()
-                if cur is not None and cur.files:
-                    live = {s.snapshot_id for s in table._load_manifest()}
-                    for index_name, index_table, extend_fn in regs:
-                        covered = _covered_snapshot_id(
-                            index_table, props.table_name, index_name
-                        )
-                        if covered == cur.snapshot_id:
-                            continue  # already current — zero work
-                        if covered is not None and covered not in live:
-                            # the cursor's source snapshot was expired
-                            # (snapshot retention shorter than the
-                            # index cadence): the diff is gone and a
-                            # full re-read would DUPLICATE index rows.
-                            if self.rebuild_at_risk_indexes:
-                                # opt-in auto-remediation: truncate +
-                                # full re-extend + fresh cursor, same
-                                # fault-isolation contract as the rest
-                                # of this task. The cadence misconfig
-                                # (if any) keeps flagging in
-                                # fleet_report — policy fixes the
-                                # index, not the configuration.
-                                self.rebuild_index(
-                                    props.table_name, index_name
-                                )
-                                continue
-                            # Fail loud with the remediation instead
-                            # of letting snapshot_diff raise a bare
-                            # 'unknown snapshot id'.
-                            raise ValueError(
-                                f"index {index_name!r} on"
-                                f" {props.table_name!r} covers source"
-                                f" snapshot {covered}, which snapshot"
-                                " expiry has dropped — the incremental"
-                                " diff is unrecoverable. Run"
-                                " rebuild_index("
-                                f"{props.table_name!r}, {index_name!r})"
-                                " (truncate + full re-extend + fresh"
-                                " cursor), and keep"
-                                " retention_days_snapshots above the"
-                                " days_to_index cadence (fleet_report"
-                                " flags this as"
-                                " index_cursor_at_risk;"
-                                " rebuild_at_risk_indexes=True makes"
-                                " stage 6 run the rebuild itself)."
-                            )
-                        if covered is None:
-                            new_rows = table.read()
-                        else:
-                            diff = table.snapshot_diff(
-                                covered, cur.snapshot_id
-                            )
-                            rkey = (
-                                self.index_retraction_keys.get(
-                                    props.table_name
-                                ) or {}
-                            ).get(index_name)
-                            if rkey:
-                                # one materialization: the diff feeds
-                                # the retraction probe, the delete-key
-                                # write, AND the extend below — without
-                                # this each would recompute the
-                                # changelog's exceptAll from the scans
-                                diff = diff.localCheckpoint(eager=False)
-                                gone = (
-                                    diff.where(
-                                        F.col("_change_type") == "delete"
-                                    )
-                                    # equality deletes match NULL keys
-                                    # via eqNullSafe — a deleted
-                                    # NULL-key source row must NOT wipe
-                                    # NULL-keyed index rows (e.g. IVF
-                                    # centroids carry vec_id NULL)
-                                    .where(F.col(rkey).isNotNull())
-                                    .select(rkey).dropDuplicates()
-                                )
-                                if gone.take(1):
-                                    # retract BEFORE extending: the
-                                    # equality delete's sequence number
-                                    # predates the extend append, so an
-                                    # updated key's NEW index rows
-                                    # survive while its old ones drop
-                                    index_table.delete_by_key(
-                                        gone, on=[rkey],
-                                        clock=self.clock,
-                                    )
-                            new_rows = diff.where(
-                                F.col("_change_type") == "insert"
-                            ).drop("_change_type")
-                        extend_fn(index_table, new_rows, {
-                            "index_of": props.table_name,
-                            "index_name": index_name,
-                            "covers_snapshot": cur.snapshot_id,
-                        })
-                        # durable cursor twin: survives index-side
-                        # compaction/expiry of the marker snapshot
-                        # (the atomic snapshot property remains the
-                        # crash-safe source of truth)
-                        index_table.set_table_properties({
-                            _cursor_property_key(
-                                props.table_name, index_name
-                            ): cur.snapshot_id,
-                        })
-                self._stamp_watermark(props.table_name, "last_indexed_on")
-            # per-sweep staleness observation (VERDICT r11 #8):
-            # record the post-stage-6 lag whether or not maintenance
-            # was due, so the durable trend captures both the growth
-            # between extends and the drop when one runs —
-            # fleet_report.index_lag_delta reads the last two rows
-            if regs:
-                snaps_now = table._load_manifest()
-                cur_id = snaps_now[-1].snapshot_id if snaps_now else 0
-                lag = max(
-                    cur_id - (
-                        _covered_snapshot_id(it, props.table_name, nm)
-                        or 0
-                    )
-                    for nm, it, _fn in regs
-                )
-                self._append_index_lag_audit(props.table_name, now, lag)
+            for stage in STAGES:
+                if stage.flag and not _truthy(getattr(props, stage.flag)):
+                    continue
+                day_due = functools.partial(stage.due, props, now)
+                if stage.run(self, table, props, now, day_due):
+                    self._stamp_watermark(props.table_name, stage.watermark)
         except BaseException as exc:  # wrap with the row (__main__.py:200-201)
             raise MaintenanceTaskException(props, exc) from exc
+
+    # Stage methods: ``(table, props, now, day_due) -> bool``. ``day_due``
+    # evaluates the stage's cadence on demand — a row with a watermark
+    # and NULL days raises only when a stage actually consults it.
+    # True means "stamp my watermark".
+
+    def _remove_orphan_files(self, table, props, now, day_due) -> bool:
+        """__main__.py:141-148."""
+        table.remove_orphan_files(older_than=now - dt.timedelta(
+            days=props.retention_days_orphan_files or 0
+        ))
+        return False
+
+    def _expire_snapshots(self, table, props, now, day_due) -> bool:
+        """__main__.py:151-158."""
+        table.expire_snapshots(older_than=now - dt.timedelta(
+            days=props.retention_days_snapshots or 0
+        ))
+        return False
+
+    def _enforce_delete_file_budget(self, table, props, now, day_due) -> bool:
+        """Merge-on-read delete-file maintenance: readers pay a
+        per-scan anti-join for every pending delete file (SCALING.md
+        probe) — over budget, first merge positional files without
+        touching data, then materialize if a long equality backlog
+        remains."""
+        if self.max_delete_files is None:
+            return False
+        cur = table.current_snapshot()
+        entries = list(cur.delete_files or []) if cur else []
+        n_pos = sum(1 for e in entries if e["content"] == "position")
+        if n_pos > self.max_delete_files:
+            entries = list(
+                table.compact_delete_files(clock=self.clock).delete_files
+                or []
+            )
+        if len(entries) > self.max_delete_files:
+            table.purge_deletes(clock=self.clock)
+        return False
+
+    def _rewrite_manifests(self, table, props, now, day_due) -> bool:
+        """Iceberg's rewrite_manifests: fold the commit journal into
+        the compacted base once it exceeds the budget, bounding
+        manifest-load cost on long-history tables. Metadata-only;
+        idempotent."""
+        if (
+            self.rewrite_manifests_max_entries is not None
+            and table.manifest_log_entries()
+            > self.rewrite_manifests_max_entries
+        ):
+            table.rewrite_manifests()
+        return False
+
+    def _optimize(self, table, props, now, day_due) -> bool:
+        """__main__.py:161-177. Day-due is the reference cadence; the
+        r11 decay gate MEASURES clustering depth (metadata-only,
+        stats-store-backed) every sweep and pulls optimize forward
+        when the table has actually decayed — a still-clustered table
+        inside its period is never rewritten early, an interleaved one
+        doesn't wait out the calendar. So a decay-triggered optimize
+        runs even where the day cadence would fail on NULL days."""
+        decay_due = False
+        depth = None
+        if self.optimize_decay_column:
+            try:
+                depth = table.clustering_depth_report(
+                    self.optimize_decay_column
+                )
+                decay_due = (
+                    depth["with_stats"] > 0
+                    and depth["avg_overlap"] > self.optimize_decay_max_overlap
+                )
+                # re-trigger suppression (ADVICE r11): a size-capped
+                # compact-only optimize can leave the SAME overlapping
+                # files above the bar — without this, the gate would
+                # rewrite the table every sweep for no improvement
+                # (unbounded write amplification). A prior
+                # decay-triggered optimize that could not improve
+                # stamps the overlap it got stuck at; the gate re-arms
+                # only once the table decays PAST that point (new
+                # files changed the picture, optimize may help again).
+                if decay_due:
+                    stuck = table.table_properties().get(
+                        _DECAY_STUCK_OVERLAP_KEY
+                    )
+                    if (
+                        stuck is not None
+                        and depth["avg_overlap"] <= float(stuck)
+                    ):
+                        decay_due = False
+            except Exception:
+                depth = None  # no stats → day cadence only
+        optimized = decay_due or day_due()
+        if optimized:
+            table.optimize(
+                clock=self.clock,
+                sort_by=self.optimize_sort_columns,
+                zorder_by=self.optimize_zorder_columns,
+            )
+            if decay_due and depth is not None:
+                self._record_decay_effect(table, depth)
+        if depth is not None:
+            self._append_audit(
+                self.clustering_audit_path, CLUSTERING_AUDIT_SCHEMA,
+                lambda _t: [(
+                    props.table_name, now, self.optimize_decay_column,
+                    int(depth["n_files"]), int(depth["with_stats"]),
+                    float(depth["avg_overlap"]), int(depth["max_overlap"]),
+                    bool(decay_due),
+                )],
+            )
+        return optimized
+
+    def _record_decay_effect(self, table, depth: dict) -> None:
+        """Post-optimize effectiveness check for the decay trigger:
+        stamp the stuck-at overlap when the rewrite did not improve
+        it (suppresses the next sweeps), clear any stamp once it DID
+        improve. Best-effort, like the measure."""
+        try:
+            post = table.clustering_depth_report(self.optimize_decay_column)
+            if (
+                post["with_stats"] > 0
+                and post["avg_overlap"] >= depth["avg_overlap"]
+            ):
+                table.set_table_properties({
+                    _DECAY_STUCK_OVERLAP_KEY: repr(post["avg_overlap"]),
+                })
+            else:
+                table.unset_table_properties([_DECAY_STUCK_OVERLAP_KEY])
+        except Exception:
+            pass
+
+    def _analyze(self, table, props, now, day_due) -> bool:
+        """__main__.py:179-199. Partitioned tables use the incremental
+        path: only partitions whose file set changed since the
+        previous ANALYZE are rescanned — the 100 TB replacement for the
+        reference's full-table re-ANALYZE every period
+        (plans/incremental.py)."""
+        if not day_due():
+            return False
+        # stats-store convergence (VERDICT r10 #2): ANALYZE is the one
+        # stage that would footer-read pre-store files anyway, so
+        # adopt them into the commit-time store NOW — a legacy table
+        # becomes footer-free after its first scheduled ANALYZE with
+        # no manual backfill call. Complete-store tables pay one
+        # keys-only read. Best-effort: a read-only store must not
+        # fail stage 4.
+        try:
+            self.last_stats_backfill[props.table_name] = (
+                table.backfill_file_stats()
+            )
+        except Exception:
+            self.last_stats_backfill[props.table_name] = 0
+        stats = None
+        if self.analyze_from_footers:
+            stats = self._footer_null_fractions(table, props)
+        if stats is not None:
+            pass  # metadata-only fast path qualified
+        elif table.partition_cols:
+            stats = self._incremental_analyze(table, props)
+        else:
+            df = table.read()
+            cols = list(props.columns_to_analyze or df.columns)
+            stats = stats_plans.null_fraction_stats(df, cols)
+        if self.analyze_from_footers and "min_value" not in stats.columns:
+            # schema stability: with the fast path enabled the stage
+            # ALWAYS delivers the widened 6-column relation — fallback
+            # runs (empty table, MoR deletes, unknowable column,
+            # partitioned) pad bounds with NULL (bounds are
+            # exact-or-NULL, and the data path does not compute them),
+            # so a durable sink never sees a run-dependent schema
+            stats = stats.select(
+                "*",
+                F.lit(None).cast("double").alias("min_value"),
+                F.lit(None).cast("double").alias("max_value"),
+            )
+        if self.stats_sink:
+            self.stats_sink(props.table_name, stats)
+        else:
+            stats.collect()
+        return True
+
+    def _check_expectations(self, table, props, now, day_due) -> bool:
+        """Stage 5: all rules for the table run as ONE aggregate pass
+        over one scan; results are rule-count-sized (bounded), kept
+        for fleet_report and appended to the durable audit relation
+        (survives a restart, queryable as history)."""
+        rules = self.expectation_rules.get(props.table_name)
+        if not rules or not day_due():
+            return False
+        from trino_iceberg_maintenance_spark.plans.audit import (
+            check_expectations,
+        )
+
+        checked = check_expectations(table.read(), rules).collect()
+        self.last_expectations[props.table_name] = checked
+        self._append_audit(
+            self.audit_path, EXPECTATION_AUDIT_SCHEMA,
+            lambda _t: [
+                (props.table_name, now, r.rule, r.n_rows, r.n_violations,
+                 r.passed)
+                for r in checked
+            ],
+        )
+        return True
+
+    def _maintain_indexes(self, table, props, now, day_due) -> bool:
+        """Stage 6: each registered index is brought current through
+        the source table's HEAD snapshot: rows inserted since the
+        index's covers_snapshot cursor feed extend_fn — change-sized
+        work (snapshot_diff reads only files outside the snapshot
+        intersection), never a corpus rescan."""
+        regs = self.index_maintainers.get(props.table_name)
+        if not regs or not day_due():
+            return False
+        cur = table.current_snapshot()
+        if cur is not None and cur.files:
+            live = {s.snapshot_id for s in table._load_manifest()}
+            for index_name, index_table, extend_fn in regs:
+                self._extend_index(
+                    table, props.table_name, cur, live,
+                    index_name, index_table, extend_fn,
+                )
+        return True
+
+    def _extend_index(
+        self, table, source_name: str, cur, live: set,
+        index_name: str, index_table, extend_fn,
+    ) -> None:
+        covered = _covered_snapshot_id(index_table, source_name, index_name)
+        if covered == cur.snapshot_id:
+            return  # already current — zero work
+        if covered is not None and covered not in live:
+            # the cursor's source snapshot was expired (snapshot
+            # retention shorter than the index cadence): the diff is
+            # gone and a full re-read would DUPLICATE index rows.
+            if self.rebuild_at_risk_indexes:
+                # opt-in auto-remediation: truncate + full re-extend +
+                # fresh cursor, same fault-isolation contract as the
+                # rest of this task. The cadence misconfig (if any)
+                # keeps flagging in fleet_report — policy fixes the
+                # index, not the configuration.
+                self.rebuild_index(source_name, index_name)
+                return
+            # Fail loud with the remediation instead of letting
+            # snapshot_diff raise a bare 'unknown snapshot id'.
+            raise ValueError(
+                f"index {index_name!r} on {source_name!r} covers source"
+                f" snapshot {covered}, which snapshot expiry has dropped"
+                " — the incremental diff is unrecoverable. Run"
+                f" rebuild_index({source_name!r}, {index_name!r})"
+                " (truncate + full re-extend + fresh cursor), and keep"
+                " retention_days_snapshots above the days_to_index"
+                " cadence (fleet_report flags this as"
+                " index_cursor_at_risk; rebuild_at_risk_indexes=True"
+                " makes stage 6 run the rebuild itself)."
+            )
+        if covered is None:
+            new_rows = table.read()
+        else:
+            diff = table.snapshot_diff(covered, cur.snapshot_id)
+            rkey = (
+                self.index_retraction_keys.get(source_name) or {}
+            ).get(index_name)
+            if rkey:
+                # one materialization: the diff feeds the retraction
+                # probe, the delete-key write, AND the extend below —
+                # without this each would recompute the changelog's
+                # exceptAll from the scans
+                diff = diff.localCheckpoint(eager=False)
+                gone = (
+                    diff.where(F.col("_change_type") == "delete")
+                    # equality deletes match NULL keys via eqNullSafe —
+                    # a deleted NULL-key source row must NOT wipe
+                    # NULL-keyed index rows (e.g. IVF centroids carry
+                    # vec_id NULL)
+                    .where(F.col(rkey).isNotNull())
+                    .select(rkey).dropDuplicates()
+                )
+                if gone.take(1):
+                    # retract BEFORE extending: the equality delete's
+                    # sequence number predates the extend append, so an
+                    # updated key's NEW index rows survive while its old
+                    # ones drop
+                    index_table.delete_by_key(
+                        gone, on=[rkey], clock=self.clock,
+                    )
+            new_rows = diff.where(
+                F.col("_change_type") == "insert"
+            ).drop("_change_type")
+        extend_fn(index_table, new_rows, {
+            "index_of": source_name,
+            "index_name": index_name,
+            "covers_snapshot": cur.snapshot_id,
+        })
+        # durable cursor twin: survives index-side compaction/expiry of
+        # the marker snapshot (the atomic snapshot property remains the
+        # crash-safe source of truth)
+        index_table.set_table_properties({
+            _cursor_property_key(source_name, index_name): cur.snapshot_id,
+        })
+
+    def _record_index_lag(self, table, props, now, day_due) -> bool:
+        """Per-sweep staleness observation (VERDICT r11 #8): record the
+        post-stage-6 lag whether or not maintenance was due, so the
+        durable trend captures both the growth between extends and the
+        drop when one runs — fleet_report.index_lag_delta reads the
+        last two rows."""
+        regs = self.index_maintainers.get(props.table_name)
+        if not regs:
+            return False
+        snaps = table._load_manifest()
+        cur_id = snaps[-1].snapshot_id if snaps else 0
+        lag = max(
+            cur_id - (_covered_snapshot_id(it, props.table_name, nm) or 0)
+            for nm, it, _fn in regs
+        )
+
+        def rows(audit):
+            # per-table monotone counter, counted under the append's lock
+            seq = 0
+            if audit.current_snapshot() is not None:
+                seq = audit.read().where(
+                    F.col("table_name") == props.table_name
+                ).count()
+            return [(props.table_name, now, int(seq), int(lag))]
+
+        self._append_audit(
+            self.index_lag_audit_path, INDEX_LAG_AUDIT_SCHEMA, rows
+        )
+        return False
 
     def _footer_null_fractions(self, table, props):
         """The stage-4 metadata-only fast path: the data-path
@@ -1329,8 +1258,6 @@ class Orchestrator:
         a table is partitioned (matching the reference's full-table
         ANALYZE, ``__main__.py:190-192``); ``_read_files`` reads with
         ``basePath`` so hive partition columns are scannable."""
-        import os
-
         cols = list(props.columns_to_analyze or table.read().columns)
         state_path = os.path.join(table.path, "_stats_state.parquet")
         prior = None
@@ -1403,14 +1330,18 @@ class Orchestrator:
                 missing_stats = 0
                 decay_stuck = None
 
-            def due(flag, watermark, days):
-                if not _truthy(flag):
-                    return False
+            due = {}
+            for stage in STAGES:
+                if stage.watermark is None:
+                    continue
                 try:
-                    return _due(watermark, days, now)
+                    due[stage.name] = (
+                        _truthy(getattr(props, stage.flag))
+                        and stage.due(props, now)
+                    )
                 except ValueError:
-                    return True  # misconfigured row surfaces as due
-
+                    # a misconfigured row surfaces as due
+                    due[stage.name] = True
             checked = self.last_expectations.get(props.table_name)
             violations = (
                 sum(int(x.n_violations) for x in checked)
@@ -1466,15 +1397,11 @@ class Orchestrator:
                 int(bytes_),
                 n_deletes,
                 journal,
-                due(props.should_optimize, props.last_optimized_on,
-                    props.days_to_optimize),
-                due(props.should_analyze, props.last_analyzed_on,
-                    props.days_to_analyze),
-                due(props.should_check_expectations, props.last_checked_on,
-                    props.days_to_check),
+                due["optimize"],
+                due["analyze"],
+                due["expectations"],
                 violations,  # NULL = never checked (any session)
-                due(props.should_maintain_indexes, props.last_indexed_on,
-                    props.days_to_index),
+                due["indexes"],
                 index_lag,  # NULL = no registered indexes
                 index_cursor_at_risk,  # NULL = no registered indexes
                 # staleness TREND: latest − previous sweep-recorded
@@ -1524,3 +1451,47 @@ class Orchestrator:
                     )
                     self.errors.append(exc)
         return done
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One step of the per-table task. ``flag`` is the schedule column
+    that enables it (None: the step gates itself on the orchestrator's
+    settings); ``watermark``/``days`` are its cadence columns (None
+    for steps without a cadence); ``run`` is the Orchestrator method
+    doing the work, returning True when the watermark is to be
+    stamped."""
+
+    name: str
+    flag: str | None
+    watermark: str | None
+    days: str | None
+    run: Callable[..., bool]
+
+    def due(self, props: MaintenanceProperties, now: dt.datetime) -> bool:
+        return _due(getattr(props, self.watermark),
+                    getattr(props, self.days), now)
+
+
+#: The per-table task in order (__main__.py:121-201 plus the extension
+#: stages): the one place a stage's flag, cadence and watermark are
+#: named. The reference's four triples come from ``plans.due.ACTIONS``;
+#: fleet_report's ``<name>_due`` columns come from the watermarked
+#: entries.
+STAGES: tuple[Stage, ...] = (
+    Stage("remove_orphan_files", *ACTIONS["remove_orphan_files"],
+          Orchestrator._remove_orphan_files),
+    Stage("expire_snapshots", *ACTIONS["expire_snapshots"],
+          Orchestrator._expire_snapshots),
+    Stage("delete_file_budget", None, None, None,
+          Orchestrator._enforce_delete_file_budget),
+    Stage("rewrite_manifests", None, None, None,
+          Orchestrator._rewrite_manifests),
+    Stage("optimize", *ACTIONS["optimize"], Orchestrator._optimize),
+    Stage("analyze", *ACTIONS["analyze"], Orchestrator._analyze),
+    Stage("expectations", "should_check_expectations", "last_checked_on",
+          "days_to_check", Orchestrator._check_expectations),
+    Stage("indexes", "should_maintain_indexes", "last_indexed_on",
+          "days_to_index", Orchestrator._maintain_indexes),
+    Stage("index_lag", None, None, None, Orchestrator._record_index_lag),
+)
