@@ -2255,8 +2255,8 @@ def _dedup_funnel(spark, sf_dir):
 
 # Registry entries whose wall-clock is dominated by serialized
 # per-iteration job launches on local[N] rather than data volume
-# (driver-looped algorithms with lineage cuts between rounds). bench.py
-# surfaces this set in its output so round-over-round comparisons don't
+# (driver-looped algorithms with lineage cuts between rounds). A timing
+# report should list this set apart, so comparisons between runs don't
 # read job-launch latency as a plan regression — e.g. supplier_pagerank's
 # per-iteration data pass is ~0.35 s at sf0.1 while its wall is ~10 s.
 ITERATIVE_QUERIES: frozenset[str] = frozenset({

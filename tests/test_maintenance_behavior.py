@@ -1042,7 +1042,7 @@ def test_incremental_analyze_rescans_only_changed_partitions(spark, tmp_path):
     state2, computed2 = incremental_partition_stats(t, ["id", "val"], prior=state1)
     assert computed2 == ["p=1"], "unchanged partition must not rescan"
 
-    got = table_null_fractions(state2, ["id", "val"])
+    got = table_null_fractions(spark, state2.collect(), ["id", "val"])
     want = null_fraction_stats(t.read(), ["id", "val"])
     as_map = lambda df: {
         r["column_name"]: (r["row_count"], r["null_count"], r["null_fraction"])

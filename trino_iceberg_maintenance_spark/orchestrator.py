@@ -26,21 +26,32 @@ Reference mapping (SURVEY.md §2.5, §3):
   are driver-side, so the reference's client/server split collapses
   deliberately.
 - The reference's process-wide ``RLock`` around watermark UPDATEs
-  (``__main__.py:18,171-176``) becomes a lock around a driver-side
-  stamp of the config table (``sources.schedule.stamp``): pyarrow
-  re-reads the schedule's one parquet file, sets the watermark on the
-  matching row, writes a hidden temp file and ``os.replace``s it over
-  the data file. A stamp takes milliseconds and runs no Spark job, so
+  (``__main__.py:18,171-176``) becomes the schedule's process lock
+  (``sources.schedule.schedule_lock``, one per schedule path) around a
+  driver-side stamp of the config table (``sources.schedule.stamp``):
+  pyarrow re-reads the schedule's one parquet file, sets the watermark
+  on the matching row, writes a hidden temp file and ``os.replace``s it
+  over the data file. ``write_schedule`` takes the same lock for its
+  file replace, so an edit and a stamp never overwrite each other with
+  a stale table. A stamp takes milliseconds and runs no Spark job, so
   the workers barely queue on the lock, and a crash leaves the old or
   the new schedule whole. The index registry beside the schedule is
   rewritten the same way. Like the reference's, the lock serializes
-  stamps of one process only; it does not protect multi-process runs
+  writers of one process only; it does not protect multi-process runs
   (with an Iceberg catalog this would be an optimistic-concurrency
   MERGE instead).
 - The expectation, clustering-decay and index-lag histories are
   maintained tables beside the schedule, appended under the same lock
   through ``_append_audit`` (which self-compacts them) and read
   through ``_read_audit``.
+- Bookkeeping runs on the driver. The schedule read, the rows an audit
+  appends, ``fleet_report`` and the lake's metadata relations are
+  built by ``sources.tables.local_frame`` as Arrow ``LocalRelation``
+  frames, whose ``collect()`` runs no Spark job. Stage 4 on a
+  partitioned table collects the incremental state once, writes it
+  and folds it into the stats relation on the driver
+  (``plans.incremental.table_null_fractions``), so when no partition
+  changed, ANALYZE and the stats sink's ``collect()`` run no job.
 
 Spark's scheduler is thread-safe, so concurrent per-table jobs simply
 interleave on the cluster; with many tables this fans out cluster-wide
@@ -54,7 +65,6 @@ import functools
 import glob
 import logging
 import os
-import threading
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 from typing import Callable
@@ -76,10 +86,12 @@ from trino_iceberg_maintenance_spark.sources.schedule import (
     data_file,
     read_schedule,
     read_table,
+    schedule_lock,
     stamp,
     to_rows,
     write_rows,
 )
+from trino_iceberg_maintenance_spark.sources.tables import local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -367,9 +379,11 @@ class Orchestrator:
         #: self-regulating (gated by the measured journal length, so a
         #: quiet table is never touched). None disables the step.
         self.rewrite_manifests_max_entries = rewrite_manifests_max_entries
-        # serializes config-table writes within this process only —
-        # same scope as the reference's RLock (__main__.py:18)
-        self._watermark_lock = threading.RLock()
+        # the schedule's process lock (sources.schedule.schedule_lock):
+        # serializes stamps, write_schedule and the sibling relations
+        # below within this process only — same scope as the
+        # reference's RLock (__main__.py:18)
+        self._watermark_lock = schedule_lock(schedule_path)
         self.errors: list[MaintenanceTaskException] = []
         #: per-table partitions rescanned by the last incremental
         #: ANALYZE (observability + tests)
@@ -473,14 +487,11 @@ class Orchestrator:
     def _stamp_watermark(self, table_name: str, column: str) -> None:
         """UPDATE cfg SET <column> = now WHERE table_name = ?
         (__main__.py:172-176) as a driver-side atomic file replace of
-        the config table (``sources.schedule.stamp``). The process
-        lock serializes stamps within this process only — same scope
-        as the reference's RLock — and no Spark job runs under it.
-        Each stamp re-reads the file, so an edit written between two
-        stamps survives."""
-        now = self.clock()
-        with self._watermark_lock:
-            stamp(self.schedule_path, table_name, column, now)
+        the config table (``sources.schedule.stamp``), under the
+        schedule's process lock — the one ``write_schedule`` takes —
+        with no Spark job run under it. Each stamp re-reads the file,
+        so an edit written between two stamps survives."""
+        stamp(self.schedule_path, table_name, column, self.clock())
 
     # -- durable index registration (VERDICT r7 #3) -----------------------
     def register_index(
@@ -720,10 +731,8 @@ class Orchestrator:
         history, so K sweeps never mean K files on disk forever."""
         with self._watermark_lock:
             t = self._audit_table(path, create=True)
-            t.append(
-                self.spark.createDataFrame(make_rows(t), schema),
-                clock=self.clock,
-            )
+            t.append(local_frame(self.spark, make_rows(t), schema),
+                     clock=self.clock)
             if t.file_count() >= AUDIT_COMPACT_FILE_THRESHOLD:
                 t.optimize(clock=self.clock)
                 # rows carry the history; pre-compaction snapshots
@@ -746,7 +755,7 @@ class Orchestrator:
                 return t.read()
         if schema is None:
             return None
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, [], schema)
 
     def expectation_audit(self) -> DataFrame:
         """The durable stage-5 audit relation (empty-but-typed when no
@@ -1229,8 +1238,8 @@ class Orchestrator:
                 float(lo) if c in numeric and lo is not None else None,
                 float(hi) if c in numeric and hi is not None else None,
             ))
-        return self.spark.createDataFrame(
-            counts,
+        return local_frame(
+            self.spark, counts,
             "column_name string, row_count long, null_count long,"
             " min_value double, max_value double",
         ).select(
@@ -1269,19 +1278,16 @@ class Orchestrator:
         if os.path.exists(state_path):
             cand = read_table(state_path)
             if set(cand.column_names) == expected:
-                schema = from_arrow_schema(cand.schema)
-                prior = self.spark.createDataFrame(
-                    to_rows(cand, schema), schema
-                )
+                prior = local_frame(self.spark, cand,
+                                    from_arrow_schema(cand.schema))
         state, recomputed = incremental_partition_stats(table, cols, prior)
         self.last_recomputed[props.table_name] = recomputed
-        # partition-count-sized: swapped in with the schedule's atomic
-        # file replace, and the stats relation is built from the rows
+        # partition-count-sized: collected once (no job when nothing
+        # changed), swapped in with the schedule's atomic file replace,
+        # and folded on the driver into the stats relation
         rows = state.collect()
         write_rows(state_path, rows, state.schema)
-        return table_null_fractions(
-            self.spark.createDataFrame(rows, state.schema), cols
-        )
+        return table_null_fractions(self.spark, rows, cols)
 
     # -- fleet health report ---------------------------------------------
     def fleet_report(self) -> DataFrame:
@@ -1416,8 +1422,8 @@ class Orchestrator:
                 clustering_state.get(props.table_name, (None, None))[1],
                 decay_stuck,  # NULL = gate armed (no ineffective stamp)
             ))
-        return self.spark.createDataFrame(
-            out,
+        return local_frame(
+            self.spark, out,
             "table_name string, n_snapshots int, n_files int, "
             "total_bytes long, pending_delete_files int, "
             "manifest_journal_entries int, optimize_due boolean, "

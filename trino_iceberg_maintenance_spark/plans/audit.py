@@ -23,6 +23,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from trino_iceberg_maintenance_spark.sources.tables import local_frame
+
 
 def _count_where(df: DataFrame, rule: str, cond) -> DataFrame:
     return df.agg(
@@ -134,8 +136,8 @@ def check_expectations(df, rules) -> "DataFrame":
 
     if not rules:
         # a legal (if pointless) input — an empty relation, not None
-        return df.sparkSession.createDataFrame(
-            [],
+        return local_frame(
+            df.sparkSession, [],
             "rule string, n_rows bigint, n_violations bigint, "
             "passed boolean",
         )

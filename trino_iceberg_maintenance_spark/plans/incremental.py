@@ -8,9 +8,11 @@ the last run and merges with the carried-forward results.
 
 Mechanics:
 
-- each partition's identity is the md5 of its sorted data-file list —
-  appends, compaction, and GC all change it; untouched partitions
-  keep theirs;
+- each partition's identity is the md5 of its sorted data-file list,
+  followed by the paths of the pending merge-on-read delete entries
+  that can remove its rows (none: the file list alone) — appends,
+  compaction, GC and row-level DELETEs all change it; untouched
+  partitions keep theirs;
 - per-partition stats are MERGEABLE aggregates only: row count +
   per-column null counts (the SHOW STATS null-fraction numerator/
   denominator, SURVEY.md §2.6) and per-column HLL sketches for
@@ -18,12 +20,17 @@ Mechanics:
   the estimate of the UNION of partition sketches — identical to
   sketching the whole table (HLL registers are a pure max-merge), so
   carrying forward loses nothing;
-- the scan job unions only the changed partitions' files; stats for
-  unchanged partitions are reused verbatim from the prior state.
+- the scan job unions only the changed partitions' files, with their
+  delete entries applied (the rows every reader sees); stats for
+  unchanged partitions are reused verbatim from the prior state;
+- the table-level fold (:func:`table_null_fractions`) runs on the
+  driver over the collected state, one row per partition.
 
 The state relation is ``(partition, fingerprint, row_count,
 null_<col>...)`` — one row per partition, stored wherever the caller
-keeps stats (tests round-trip it through a DataFrame).
+keeps stats (tests round-trip it through a DataFrame). Carried-forward
+rows and the folded result are local frames
+(``sources.tables.local_frame``): collecting them runs no Spark job.
 """
 
 from __future__ import annotations
@@ -33,28 +40,47 @@ import hashlib
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from trino_iceberg_maintenance_spark.sources.lake import ParquetMaintainedTable
+from trino_iceberg_maintenance_spark.sources.lake import (
+    ParquetMaintainedTable,
+    _canon,
+)
+from trino_iceberg_maintenance_spark.sources.tables import local_frame
 
 
 def partition_fingerprints(table: ParquetMaintainedTable) -> dict[str, tuple]:
-    """``{partition: (fingerprint, [files])}`` for the current
-    snapshot — pure manifest metadata, no data scan."""
+    """``{partition: (fingerprint, [files], [delete entries])}`` for
+    the current snapshot — pure manifest metadata, no data scan. The
+    entries are the snapshot's pending deletes that can remove rows of
+    the partition (:meth:`ParquetMaintainedTable._entry_applies`); their
+    paths follow the file list in the fingerprint, so a DELETE that
+    leaves the data files alone still re-arms the partitions it
+    touches, and a partition no entry applies to keeps the files-only
+    fingerprint of earlier states."""
+    snap = table.current_snapshot()
+    if snap is None:
+        return {}
+    entries = list(snap.delete_files or [])
+    seq = table._file_seq_of() if entries else {}
     by_part: dict[str, list[str]] = {}
-    for f in table.current_files():
+    for f in snap.files:
         by_part.setdefault(table._partition_of(f), []).append(f)
-    return {
-        part: (
-            hashlib.md5("\n".join(sorted(files)).encode()).hexdigest(),
-            sorted(files),
-        )
-        for part, files in by_part.items()
-    }
+    out = {}
+    for part, files in by_part.items():
+        files = sorted(files)
+        canon = {_canon(f) for f in files}
+        applied = [e for e in entries
+                   if table._entry_applies(e, canon, seq)]
+        key = files + sorted(e["path"] for e in applied)
+        out[part] = (hashlib.md5("\n".join(key).encode()).hexdigest(),
+                     files, applied)
+    return out
 
 
 def _stats_for_files(
-    table: ParquetMaintainedTable, part: str, files: list[str], columns: list[str]
+    table: ParquetMaintainedTable, part: str, files: list[str],
+    entries: list, columns: list[str],
 ) -> DataFrame:
-    df = table._read_files(files)
+    df = table._read_effective(files, entries)
     return df.agg(
         F.count(F.lit(1)).alias("row_count"),
         *[
@@ -98,8 +124,8 @@ def incremental_partition_stats(
         + ", ".join(f"ndv_{c} binary" for c in columns)
     )
     reused_rows = []
-    to_compute: list[tuple[str, str, list[str]]] = []
-    for part, (fp, files) in sorted(current.items()):
+    to_compute: list[tuple[str, str, list[str], list]] = []
+    for part, (fp, files, entries) in sorted(current.items()):
         prev = prior_fps.get(part)
         if prev is not None and prev["fingerprint"] == fp:
             reused_rows.append(
@@ -111,11 +137,11 @@ def incremental_partition_stats(
                 )
             )
         else:
-            to_compute.append((part, fp, files))
+            to_compute.append((part, fp, files, entries))
 
     computed = None
-    for part, fp, files in to_compute:
-        one = _stats_for_files(table, part, files, columns).select(
+    for part, fp, files, entries in to_compute:
+        one = _stats_for_files(table, part, files, entries, columns).select(
             "partition",
             F.lit(fp).alias("fingerprint"),
             "row_count",
@@ -124,28 +150,34 @@ def incremental_partition_stats(
         )
         computed = one if computed is None else computed.unionByName(one)
 
-    reused = spark.createDataFrame(reused_rows, schema) if reused_rows else None
+    reused = local_frame(spark, reused_rows, schema) if reused_rows else None
     if computed is None and reused is None:
-        return spark.createDataFrame([], schema), []
+        return local_frame(spark, [], schema), []
     state = (
         computed
         if reused is None
         else (reused if computed is None else reused.unionByName(computed))
     )
-    return state, [p for p, _, _ in to_compute]
+    return state, [p for p, _, _, _ in to_compute]
 
 
-def table_null_fractions(state: DataFrame, columns: list[str]) -> DataFrame:
-    """Fold the partition state into the table-level SHOW STATS
-    relation — exact, because counts are mergeable."""
-    totals = state.agg(
-        F.sum("row_count").alias("row_count"),
-        *[F.sum(f"null_{c}").alias(f"null_{c}") for c in columns],
-    )
-    stack_args = ", ".join(f"'{c}', `null_{c}`" for c in columns)
-    return totals.select(
-        "row_count",
-        F.expr(f"stack({len(columns)}, {stack_args}) AS (column_name, null_count)"),
+def table_null_fractions(spark, rows: list, columns: list[str]) -> DataFrame:
+    """Fold the partition-state ``rows`` into the table-level SHOW
+    STATS relation — exact, because counts are mergeable. The sums run
+    on the driver (SQL ``sum``: NULL over no values) and the result is
+    a local frame; the null fraction stays Spark's
+    ``null_count / row_count`` double division, folded into the local
+    relation, so collecting it runs no Spark job."""
+
+    def total(name: str):
+        vals = [r[name] for r in rows if r[name] is not None]
+        return sum(vals) if vals else None
+
+    n = total("row_count")
+    return local_frame(
+        spark,
+        [(c, n, total(f"null_{c}")) for c in columns],
+        "column_name string, row_count long, null_count long",
     ).select(
         "column_name",
         "row_count",

@@ -46,6 +46,8 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from trino_iceberg_maintenance_spark.sources.tables import local_frame
+
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
 
 import re as _re
@@ -712,7 +714,7 @@ class ParquetMaintainedTable:
         if jsonl:
             parts.append(self.spark.read.schema(schema).json(jsonl))
         if not parts:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1251,7 +1253,7 @@ class ParquetMaintainedTable:
             schema = self.tracked_schema()
             if schema is None:
                 raise ValueError(f"table {self.path} has no snapshots")
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self._read_effective(snap.files, snap.delete_files)
 
     def read_as_of(
@@ -1361,8 +1363,8 @@ class ParquetMaintainedTable:
         if eqs:
             seq_rows = [(p, s) for p, s in self._file_seq_of().items()]
             # one row per data file ever committed — metadata-sized
-            seq_df = F.broadcast(self.spark.createDataFrame(
-                seq_rows, f"{_FP} string, {_FSEQ} long"
+            seq_df = F.broadcast(local_frame(
+                self.spark, seq_rows, f"{_FP} string, {_FSEQ} long"
             ))
             df = df.join(seq_df, _FP, "left")
             to_cur = self._alias_to_current()
@@ -1420,15 +1422,20 @@ class ParquetMaintainedTable:
             return None
         canon = {_canon(f) for f in surviving_files}
         seqmap = self._file_seq_of()
-        kept = []
-        for e in entries:
-            if e["content"] == "position":
-                tgts = e.get("targets")
-                if tgts is None or any(t in canon for t in tgts):
-                    kept.append(e)
-            elif any(seqmap.get(c, 0) < e["seq"] for c in canon):
-                kept.append(e)
-        return kept or None
+        return [e for e in entries
+                if self._entry_applies(e, canon, seqmap)] or None
+
+    @staticmethod
+    def _entry_applies(entry: dict, canon: set[str],
+                       seqmap: dict[str, int]) -> bool:
+        """Whether delete ``entry`` can remove rows of the data files
+        ``canon`` (canonical paths): a positional entry that targets
+        one of them or names no targets (match-anything), or an
+        equality entry newer than one of them."""
+        if entry["content"] == "position":
+            tgts = entry.get("targets")
+            return tgts is None or any(t in canon for t in tgts)
+        return any(seqmap.get(c, 0) < entry["seq"] for c in canon)
 
     def delete_where(
         self,
@@ -1605,8 +1612,8 @@ class ParquetMaintainedTable:
             return snap
         keep = [e for e in entries if e["content"] != "position"]
         live = {_canon(f) for f in snap.files}
-        live_df = self.spark.createDataFrame(
-            [(p,) for p in sorted(live)], "file_path string"
+        live_df = local_frame(
+            self.spark, [(p,) for p in sorted(live)], "file_path string"
         )
         # dead positions (their target file left the snapshot) are
         # dropped in the rewrite, not just from the targets metadata —
@@ -1693,8 +1700,8 @@ class ParquetMaintainedTable:
         if not eligible:
             return set()
         df = self._read_files(eligible, with_lineage=True)
-        seq_df = F.broadcast(self.spark.createDataFrame(
-            [(p, s) for p, s in seqmap.items()], f"{_FP} string, {_FSEQ} long"
+        seq_df = F.broadcast(local_frame(
+            self.spark, list(seqmap.items()), f"{_FP} string, {_FSEQ} long"
         ))
         df = df.join(seq_df, _FP, "left")
         canon_live = {_canon(f): f for f in files}
@@ -1778,8 +1785,8 @@ class ParquetMaintainedTable:
             )
             for e in entries
         ]
-        return self.spark.createDataFrame(
-            rows or [],
+        return local_frame(
+            self.spark, rows,
             "file_path string, content string, seq long, "
             "equality_cols string, file_size_bytes long",
         )
@@ -2232,8 +2239,8 @@ class ParquetMaintainedTable:
             values.append(mins[c] if valid[c] else None)
             values.append(maxs[c] if valid[c] else None)
             values.append(int(nulls[c]) if null_valid[c] else None)
-        return self.spark.createDataFrame(
-            [tuple(values)], T.StructType(fields)
+        return local_frame(
+            self.spark, [tuple(values)], T.StructType(fields)
         )
 
     def metadata_numeric_stats(self, columns: list[str] | None = None
@@ -2269,8 +2276,9 @@ class ParquetMaintainedTable:
             )
             for c in (columns or [])
         ]
-        return self.spark.createDataFrame(
-            rows, "column_name string, min_value double, max_value double"
+        return local_frame(
+            self.spark, rows,
+            "column_name string, min_value double, max_value double",
         )
 
     def read_pruned(self, col: str, lo, hi) -> DataFrame:
@@ -2313,8 +2321,9 @@ class ParquetMaintainedTable:
             (f, self._partition_of(f), os.path.getsize(f))
             for f in self.current_files()
         ]
-        return self.spark.createDataFrame(
-            rows or [], "file_path string, partition string, file_size_bytes long"
+        return local_frame(
+            self.spark, rows,
+            "file_path string, partition string, file_size_bytes long",
         )
 
     def evolve_partition_spec(self, new_cols: list[str] | None) -> None:
@@ -2367,8 +2376,8 @@ class ParquetMaintainedTable:
             (part, n_files, n_rows, n_bytes)
             for part, (n_files, n_rows, n_bytes) in sorted(agg.items())
         ]
-        return self.spark.createDataFrame(
-            rows or [],
+        return local_frame(
+            self.spark, rows,
             "partition string, file_count int, row_count long, "
             "total_bytes long",
         )
@@ -2548,8 +2557,8 @@ class ParquetMaintainedTable:
                 s.operation,
                 len(s.delete_files or []),
             ))
-        return self.spark.createDataFrame(
-            rows or [],
+        return local_frame(
+            self.spark, rows,
             "snapshot_id long, committed_at timestamp, file_count int, "
             "parent_id long, added_files int, removed_files int, "
             "operation string, delete_file_count int",
@@ -2593,8 +2602,8 @@ class ParquetMaintainedTable:
                     seq.get(c),
                     sizes.get(c),
                 ))
-        return self.spark.createDataFrame(
-            rows or [],
+        return local_frame(
+            self.spark, rows,
             "snapshot_id long, status string, file_path string, "
             "sequence long, file_size_bytes long",
         )
@@ -2626,8 +2635,8 @@ class ParquetMaintainedTable:
             )
             for s in snaps
         ]
-        return self.spark.createDataFrame(
-            rows or [],
+        return local_frame(
+            self.spark, rows,
             "made_current_at timestamp, snapshot_id long, "
             "parent_id long, is_current_ancestor boolean",
         )
@@ -2781,8 +2790,8 @@ class ParquetMaintainedTable:
                         # the loader skips it, so this relation must
                         continue
                     scan([d], "journal")
-        return self.spark.createDataFrame(
-            rows or [],
+        return local_frame(
+            self.spark, rows,
             "snapshot_id long, stored_in string, encoding string, "
             "delta_base long, n_added int, n_removed int, n_files int, "
             "entry_bytes int",
@@ -2800,8 +2809,8 @@ class ParquetMaintainedTable:
             (name, "tag", int(sid))
             for name, sid in sorted(self.tags().items())
         ]
-        return self.spark.createDataFrame(
-            rows or [], "name string, type string, snapshot_id long"
+        return local_frame(
+            self.spark, rows, "name string, type string, snapshot_id long"
         )
 
     # -- maintenance operations ------------------------------------------

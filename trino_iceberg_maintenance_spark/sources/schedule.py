@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import threading
 import uuid
 
 import pyarrow as pa
@@ -33,9 +34,13 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
-from trino_iceberg_maintenance_spark.sources.tables import load_table
+from trino_iceberg_maintenance_spark.sources.tables import (
+    arrow_table,
+    conform,
+    load_table,
+    local_frame,
+)
 
 #: __main__.py:42-55, Trino types mapped per SURVEY.md §1.1
 SCHEDULE_SCHEMA = T.StructType(
@@ -230,13 +235,9 @@ def to_rows(table: pa.Table, schema: T.StructType) -> list[tuple]:
     """``table`` as Python rows in ``schema``'s column order, values as
     Spark's ``collect`` gives them. Columns the file lacks read as
     NULL, like a Spark read with an explicit schema."""
-    arrow = to_arrow_schema(schema)
+    table = conform(table, schema)
     cols = []
-    for field, af in zip(schema.fields, arrow):
-        if field.name not in table.column_names:
-            cols.append([None] * table.num_rows)
-            continue
-        col = table.column(field.name).cast(af.type)
+    for field, col in zip(schema.fields, table.columns):
         if isinstance(field.dataType, T.TimestampType):
             # through Spark's own converter, so naive datetimes
             # round-trip exactly as they do through createDataFrame
@@ -279,30 +280,37 @@ def _replace(path: str, table: pa.Table) -> None:
 def write_rows(path: str, rows: list, schema: T.StructType) -> None:
     """Atomically replace the relation at ``path`` with ``rows``
     (tuples or Rows in ``schema``'s column order)."""
-    arrow = to_arrow_schema(schema)
-    arrays = []
-    for i, (field, af) in enumerate(zip(schema.fields, arrow)):
-        values = [r[i] for r in rows]
-        if isinstance(field.dataType, T.TimestampType):
-            values = [None if v is None else field.dataType.toInternal(v)
-                      for v in values]
-        arrays.append(pa.array(values, af.type))
-    _replace(path, pa.Table.from_arrays(arrays, schema=arrow))
+    _replace(path, arrow_table(rows, schema))
+
+
+_locks: dict[str, threading.RLock] = {}
+_locks_guard = threading.Lock()
+
+
+def schedule_lock(path: str) -> threading.RLock:
+    """The process lock of the schedule at ``path``: one per path, so
+    every writer of one schedule in this process — stamps, whole-table
+    rewrites, the orchestrator's sibling relations — serializes on it.
+    Like the reference's RLock (__main__.py:18) it does not reach other
+    processes."""
+    with _locks_guard:
+        return _locks.setdefault(os.path.abspath(path), threading.RLock())
 
 
 def stamp(path: str, table_name: str, column: str, value) -> None:
     """``UPDATE schedule SET <column> = value WHERE table_name = ?``
-    (__main__.py:172-176) without Spark: re-read the schedule's data
-    file, set ``column`` on the matching row and swap the file in with
-    :func:`write_rows`'s atomic replace. Callers serialize concurrent
-    stamps (the orchestrator's lock)."""
+    (__main__.py:172-176) without Spark: under :func:`schedule_lock`,
+    re-read the schedule's data file, set ``column`` on the matching
+    row and swap the file in with :func:`write_rows`'s atomic
+    replace."""
     i = SCHEDULE_SCHEMA.fieldNames().index(column)
-    rows = [
-        # table_name is the first column
-        r[:i] + (value,) + r[i + 1:] if r[0] == table_name else r
-        for r in to_rows(read_table(path), SCHEDULE_SCHEMA)
-    ]
-    write_rows(path, rows, SCHEDULE_SCHEMA)
+    with schedule_lock(path):
+        rows = [
+            # table_name is the first column
+            r[:i] + (value,) + r[i + 1:] if r[0] == table_name else r
+            for r in to_rows(read_table(path), SCHEDULE_SCHEMA)
+        ]
+        write_rows(path, rows, SCHEDULE_SCHEMA)
 
 
 def create_if_not_exists_schedule(spark: SparkSession, path: str) -> None:
@@ -319,16 +327,22 @@ def create_if_not_exists_schedule(spark: SparkSession, path: str) -> None:
 
 def read_schedule(spark: SparkSession, path: str) -> DataFrame:
     """S1 — full config scan (__main__.py:62-63), read driver-side:
-    the rows of the schedule's one data file as a local DataFrame."""
-    return spark.createDataFrame(to_rows(read_table(path), SCHEDULE_SCHEMA),
-                                 SCHEDULE_SCHEMA)
+    the schedule's one data file as a local DataFrame
+    (:func:`~trino_iceberg_maintenance_spark.sources.tables.local_frame`).
+    Every sweep and every ``fleet_report`` starts with this read, and
+    its ``collect()`` runs no Spark job."""
+    return local_frame(spark, read_table(path), SCHEDULE_SCHEMA)
 
 
 def write_schedule(df: DataFrame, path: str) -> None:
     """Replace the (tiny, bounded) config table with ``df``'s rows:
-    collected to the driver, written as one parquet file and swapped
-    in with an atomic ``os.replace`` (:func:`write_rows`). Not
-    serialized with the orchestrator's stamps: a write racing a sweep
-    of the same schedule in this process can lose either side."""
-    write_rows(path, df.select(*SCHEDULE_SCHEMA.fieldNames()).collect(),
-               SCHEDULE_SCHEMA)
+    collected to the driver, then written as one parquet file and
+    swapped in with an atomic ``os.replace`` (:func:`write_rows`)
+    under :func:`schedule_lock`. The collect runs outside the lock, so
+    no Spark job holds up the sweep's stamps. The rewrite replaces the
+    whole table: a stamp that lands before it is replaced with the
+    rest, a stamp that waits on the lock is applied to the new table,
+    and no stamp written from the old table can overwrite the edit."""
+    rows = df.select(*SCHEDULE_SCHEMA.fieldNames()).collect()
+    with schedule_lock(path):
+        write_rows(path, rows, SCHEDULE_SCHEMA)

@@ -4,12 +4,19 @@ Mirrors the reference's source surface (SURVEY.md §2.1 S1/S2): plain
 scans that Catalyst can push filters and column pruning into. At
 cluster scale these would be Iceberg/warehouse tables; the parquet
 reader keeps the same DataFrame contract.
+
+Also home of :func:`local_frame`, the one way the driver turns rows it
+already holds (metadata relations, the schedule, stats state) into a
+DataFrame.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TABLES = (
     "region",
@@ -106,3 +113,55 @@ def register_views(
         load_table(spark, sf_dir, t).createOrReplaceTempView(view)
         out.append(view)
     return out
+
+
+def arrow_table(rows, schema: T.StructType) -> pa.Table:
+    """``rows`` (tuples or Rows in ``schema``'s column order) as an
+    Arrow table of ``schema``'s Arrow type. Timestamps go through
+    Spark's own ``toInternal``, so a naive datetime maps to the same
+    instant as it does through ``createDataFrame(rows)``."""
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for i, (field, af) in enumerate(zip(schema.fields, arrow)):
+        values = [r[i] for r in rows]
+        if isinstance(field.dataType, T.TimestampType):
+            values = [None if v is None else field.dataType.toInternal(v)
+                      for v in values]
+        arrays.append(pa.array(values, af.type))
+    return pa.Table.from_arrays(arrays, schema=arrow)
+
+
+def conform(table: pa.Table, schema: T.StructType) -> pa.Table:
+    """``table`` with ``schema``'s columns, in its order and Arrow
+    types. Columns the table lacks read as NULL, like a Spark read
+    with an explicit schema."""
+    arrow = to_arrow_schema(schema)
+    return pa.Table.from_arrays(
+        [
+            table.column(af.name).cast(af.type)
+            if af.name in table.column_names
+            else pa.nulls(table.num_rows, af.type)
+            for af in arrow
+        ],
+        schema=arrow,
+    )
+
+
+def local_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """Driver-held ``data`` — a list of rows in ``schema``'s column
+    order, or an Arrow table — as a DataFrame over a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list of rows>)`` builds an RDD through
+    Python workers, so every action on it is a Spark job. From an Arrow
+    table Spark builds a ``LocalRelation`` instead: ``collect()``, and
+    projections or filters that the optimizer folds into it, run on the
+    driver with no job. Metadata-sized relations are built here so the
+    sweep runs no Spark job over its own bookkeeping. ``schema`` is a
+    ``StructType`` or a DDL string."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    if isinstance(data, pa.Table):
+        data = conform(data, schema)
+    else:
+        data = arrow_table(data, schema)
+    return spark.createDataFrame(data, schema)
