@@ -1585,57 +1585,6 @@ def test_ingest_curated_is_incremental_and_idempotent(spark, tmp_path):
     assert len(table._load_manifest()) == 2
 
 
-def test_write_audit_publish_gates_bad_batches(spark, tmp_path):
-    """WAP: a clean batch publishes a snapshot; a rule-violating batch
-    leaves NO new snapshot, NO staged files, and the table readable at
-    its prior state."""
-    import glob
-
-    import pyspark.sql.functions as F
-
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "wap"))
-    rules = [
-        ("null_id", F.col("id").isNull()),
-        ("negative_amount", F.col("amount") < 0),
-    ]
-    good = spark.createDataFrame([(1, 10.0), (2, 5.0)], "id long, amount double")
-    r1 = t.write_audit_publish(good, rules)
-    assert r1["published"] and r1["violations"] == {"null_id": 0,
-                                                    "negative_amount": 0}
-    assert t.read().count() == 2
-
-    bad = spark.createDataFrame([(3, -7.0)], "id long, amount double")
-    n_files_before = len(glob.glob(str(tmp_path / "wap" / "data" / "**" / "*"),
-                                   recursive=True))
-    r2 = t.write_audit_publish(bad, rules)
-    assert not r2["published"] and r2["violations"]["negative_amount"] == 1
-    assert r2["snapshot_id"] is None
-    assert t.read().count() == 2  # visible state untouched
-    assert len(t._load_manifest()) == 1  # no snapshot committed
-    n_files_after = len(glob.glob(str(tmp_path / "wap" / "data" / "**" / "*"),
-                                  recursive=True))
-    assert n_files_after == n_files_before  # staged DIR gone (markers incl.)
-
-    # a rejected batch carrying a new column must not evolve the schema
-    bad_wide = spark.createDataFrame(
-        [(4, -1.0, "x")], "id long, amount double, extra string"
-    )
-    r3 = t.write_audit_publish(bad_wide, rules)
-    assert not r3["published"]
-    assert "extra" not in t.read().columns
-    schema = t.tracked_schema()
-    assert schema is None or "extra" not in [f.name for f in schema.fields]
-
-    # an empty batch audits cleanly (sum over zero rows is not a crash)
-    empty = spark.createDataFrame([], "id long, amount double")
-    r4 = t.write_audit_publish(empty, rules)
-    assert r4["violations"] == {"null_id": 0, "negative_amount": 0}
-
-
 def test_rollback_restores_old_state_preserving_history(spark, tmp_path):
     """rollback(snapshot_id) commits a NEW snapshot with the old file
     set: reads return the old state, history keeps the bad snapshot,
@@ -2778,60 +2727,6 @@ def test_fleet_report_stats_no_data_files(env, monkeypatch):
     assert data_stats == [], data_stats
 
 
-def test_cherrypick_snapshot_publishes_staged_appends(spark, tmp_path):
-    """Iceberg's cherrypick_snapshot: a staged branch append is applied
-    onto a DIVERGED main head as a new commit (the WAP publish path
-    when fast_forward is impossible); the staged snapshot stays in the
-    log untouched; re-picking is an idempotent no-op; non-append
-    snapshots and delete-shadowed picks are rejected."""
-    import pytest as _pytest
-
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "cp"))
-    t.append(spark.createDataFrame([(1,)], "id long"))
-    base = t.current_snapshot().snapshot_id
-    t.create_branch("wap")
-    t.append(spark.createDataFrame([(2,)], "id long"), branch="wap")
-    staged = t.branches()["wap"]
-    t.append(spark.createDataFrame([(3,)], "id long"))  # main diverges
-    assert sorted(r.id for r in t.read().collect()) == [1, 3]
-
-    snap = t.cherrypick_snapshot(staged)
-    assert snap.operation == "cherrypick"
-    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
-    # the staged snapshot and its branch ref are untouched
-    assert t.branches()["wap"] == staged
-    assert sorted(r.id for r in t.read_branch("wap").collect()) == [1, 2]
-
-    # idempotent: re-picking an already-published snapshot is a no-op
-    again = t.cherrypick_snapshot(staged)
-    assert again.snapshot_id == snap.snapshot_id
-    assert t.read().count() == 3
-
-    # a rollback snapshot removes files vs its parent — not
-    # append-shaped, rejected
-    rb = t.rollback(base)
-    with _pytest.raises(ValueError, match="append"):
-        t.cherrypick_snapshot(rb.snapshot_id)
-    with _pytest.raises(ValueError, match="not found"):
-        t.cherrypick_snapshot(999_999)
-
-    # delete-shadow gate: stage an append, then commit an equality
-    # delete on main — the pick would re-scope the newer delete onto
-    # the staged rows (Iceberg re-stamps sequence numbers at publish,
-    # this format does not), so it must refuse
-    t.rollback(snap.snapshot_id)
-    t.create_branch("wap2")
-    t.append(spark.createDataFrame([(7,)], "id long"), branch="wap2")
-    staged2 = t.branches()["wap2"]
-    t.delete_by_key(spark.createDataFrame([(1,)], "id long"), on=["id"])
-    with _pytest.raises(ValueError, match="delete files newer"):
-        t.cherrypick_snapshot(staged2)
-
-
 def test_tag_max_ref_age_expires_the_ref_then_the_snapshot(spark, tmp_path):
     """Iceberg max-ref-age semantics: an aged-out tag is removed at
     the START of expire_snapshots, so the snapshot it pinned expires
@@ -2866,61 +2761,6 @@ def test_tag_max_ref_age_expires_the_ref_then_the_snapshot(spark, tmp_path):
     assert {r.v for r in t.read_tag("forever").collect()} == {"a", "b", "c"}
 
 
-def test_cherrypick_refuses_when_staging_parent_expired(spark, tmp_path):
-    """Lineage-contraction interaction: once expire_snapshots drops
-    the staging parent, the append delta is underivable — the pick
-    must REFUSE rather than treat the staged snapshot's whole file
-    set as added (which would silently duplicate base rows)."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-
-    clock = FakeClock()
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "cpe"))
-    t.append(spark.createDataFrame([(1,)], "id long"), clock=clock)
-    t.create_branch("wap")
-    t.append(spark.createDataFrame([(2,)], "id long"), branch="wap",
-             clock=clock)
-    staged = t.branches()["wap"]
-    t.optimize()  # rewrites main's head; s1 becomes expirable
-    clock.advance(days=30)
-    t.expire_snapshots(older_than=clock(), retain_last=1, clock=clock)
-    assert 1 not in {s.snapshot_id for s in t._load_manifest()}
-    n_before = t.read().count()
-    with _pytest.raises(ValueError, match="expired|underivable"):
-        t.cherrypick_snapshot(staged)
-    assert t.read().count() == n_before  # nothing duplicated
-
-
-def test_cherrypick_idempotent_across_head_rewrites(spark, tmp_path):
-    """A retried pick after the head was compacted must still no-op:
-    the pick commit carries source-snapshot-id (Iceberg's summary
-    marker), so idempotence does not depend on the staged file path
-    surviving in the current file set."""
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "cpi"))
-    t.append(spark.createDataFrame([(1,)], "id long"))
-    t.create_branch("wap")
-    t.append(spark.createDataFrame([(2,)], "id long"), branch="wap")
-    staged = t.branches()["wap"]
-    t.append(spark.createDataFrame([(3,)], "id long"))
-    snap = t.cherrypick_snapshot(staged)
-    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
-    assert snap.properties["source-snapshot-id"] == str(staged)
-
-    t.optimize()  # staged file path leaves the head's file set
-    again = t.cherrypick_snapshot(staged)  # retry (e.g. crash replay)
-    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
-    assert again.snapshot_id == t.current_snapshot().snapshot_id
-
-
 def test_entries_df_no_phantom_tombstones_after_contraction(spark, tmp_path):
     """$entries parent resolution: a contraction-nulled parent reads
     as NO parent — never the log-order neighbor (which can be an
@@ -2948,67 +2788,6 @@ def test_entries_df_no_phantom_tombstones_after_contraction(spark, tmp_path):
     row3 = [r for r in t.snapshots_df().collect()
             if r.snapshot_id == s3.snapshot_id][0]
     assert row3.removed_files == 0
-
-
-def test_cherrypick_refuses_reparented_snapshot(spark, tmp_path):
-    """Contraction RE-PARENTS onto the nearest retained ancestor when
-    one survives — a delta against that ancestor would absorb the
-    dropped intermediate's file additions. The contracted-from-parent
-    marker must make the pick refuse instead of silently duplicating
-    the intermediate's rows."""
-    import pytest as _pytest
-
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-
-    clock = FakeClock()
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "cprp"))
-    s1 = t.append(spark.createDataFrame([(1,)], "id long"), clock=clock)
-    t.create_tag("pin", s1.snapshot_id)          # retained ancestor
-    t.append(spark.createDataFrame([(2,)], "id long"), clock=clock)  # s2
-    t.create_branch("wap")
-    t.append(spark.createDataFrame([(3,)], "id long"), branch="wap",
-             clock=clock)                        # s3, parent s2
-    staged = t.branches()["wap"]
-    t.append(spark.createDataFrame([(4,)], "id long"), clock=clock)  # s4
-    clock.advance(days=30)
-    t.expire_snapshots(older_than=clock(), retain_last=1, clock=clock)
-    # s2 dropped; s3 re-parented onto s1 and marker-stamped
-    s3 = [s for s in t._load_manifest() if s.snapshot_id == staged][0]
-    assert s3.parent_id == s1.snapshot_id
-    assert s3.properties["contracted-from-parent"] == "2"
-    n_before = sorted(r.id for r in t.read().collect())
-    with _pytest.raises(ValueError, match="re-parented|re-stage"):
-        t.cherrypick_snapshot(staged)
-    assert sorted(r.id for r in t.read().collect()) == n_before
-
-
-def test_cherrypick_replay_noops_after_parent_expiry(spark, tmp_path):
-    """Idempotence must survive staging-parent expiry: the
-    source-snapshot-id marker is checked BEFORE delta derivability,
-    so a crash-replay retry of a published pick no-ops instead of
-    raising (or re-applying)."""
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-
-    clock = FakeClock()
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "cprn"))
-    t.append(spark.createDataFrame([(1,)], "id long"), clock=clock)
-    t.create_branch("wap")
-    t.append(spark.createDataFrame([(2,)], "id long"), branch="wap",
-             clock=clock)
-    staged = t.branches()["wap"]
-    t.append(spark.createDataFrame([(3,)], "id long"), clock=clock)
-    t.cherrypick_snapshot(staged, clock=clock)
-    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
-    clock.advance(days=30)
-    t.expire_snapshots(older_than=clock(), retain_last=1, clock=clock)
-    # staging parent s1 expired; the staged snapshot is marker-stamped
-    again = t.cherrypick_snapshot(staged, clock=clock)  # replay
-    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
-    assert again.snapshot_id == t.current_snapshot().snapshot_id
 
 
 def test_entries_df_mixed_legacy_manifest_keeps_log_order(env):

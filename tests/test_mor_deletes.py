@@ -463,35 +463,6 @@ def test_snapshot_operations_and_refs_relation(spark, tmp_path):
     assert ("main", "branch", head) in refs
 
 
-def test_update_where_merge_on_read(spark, tmp_path):
-    """MoR UPDATE: one commit adds a positional delete + the updated
-    rows as a new file; no existing data file is rewritten."""
-    t = _mk(spark, tmp_path / "t", ROWS, n_appends=2)
-    before = set(t.current_files())
-    snap = t.update_where("id >= 8", {"v": F.concat(F.col("v"), F.lit("!"))})
-    assert before <= set(snap.files) and len(snap.files) == 3
-    assert len(snap.delete_files) == 1
-    got = {(r.id, r.v) for r in t.read().collect()}
-    assert (8, "v8!") in got and (9, "v9!") in got
-    assert (8, "v8") not in got
-    assert t.read().count() == 10
-    # updating again touches the updated rows (visible state)
-    t.update_where("id = 8", {"v": F.lit("twice")})
-    got = {(r.id, r.v) for r in t.read().collect()}
-    assert (8, "twice") in got and (8, "v8!") not in got
-    # optimize materializes everything back to a clean file set
-    s = t.optimize(clock=lambda: dt.datetime(2024, 6, 1))
-    assert not s.delete_files
-    assert {(r.id, r.v) for r in t.read().collect()} == got
-
-
-def test_update_where_no_match_is_noop_commit(spark, tmp_path):
-    t = _mk(spark, tmp_path / "t", ROWS)
-    snap = t.update_where("id > 999", {"v": F.lit("x")})
-    assert not snap.delete_files
-    assert t.read().count() == 10
-
-
 def test_compact_delete_files_merges_positional(spark, tmp_path):
     t = _mk(spark, tmp_path / "t", ROWS, n_appends=2)
     t.delete_where("id = 1")

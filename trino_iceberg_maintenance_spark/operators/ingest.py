@@ -276,17 +276,9 @@ def stream_ingest_near_dedup(
         )
         if stats["snapshot_id"] is None:
             # all-dup batch appended nothing — stamp the epoch on a
-            # no-op commit so a replay doesn't re-run the gate. The
-            # commit must CARRY the current snapshot's pending delete
-            # files: a raw re-commit of the file list with
-            # delete_files=None would resurrect deleted rows.
-            cur = table.current_snapshot()
-            table._commit(
-                list(cur.files) if cur else [],
-                operation="append",
-                delete_files=list(cur.delete_files or []) if cur else None,
-                properties=props,
-            )
+            # no-op commit (an empty delta on the current snapshot) so
+            # a replay doesn't re-run the gate
+            table._commit(table.current_snapshot(), properties=props)
 
     return (
         stream_df.writeStream.foreachBatch(ingest_batch)

@@ -26,7 +26,7 @@ Reference mapping (SURVEY.md §2.5, §3):
   are driver-side, so the reference's client/server split collapses
   deliberately.
 - The reference's process-wide ``RLock`` around watermark UPDATEs
-  (``__main__.py:18,171-176``) becomes the schedule's process lock
+  (``__main__.py:18,171-176``) becomes the schedule's lock
   (``sources.schedule.schedule_lock``, one per schedule path) around a
   driver-side stamp of the config table (``sources.schedule.stamp``):
   pyarrow re-reads the schedule's one parquet file, sets the watermark
@@ -36,10 +36,9 @@ Reference mapping (SURVEY.md §2.5, §3):
   a stale table. A stamp takes milliseconds and runs no Spark job, so
   the workers barely queue on the lock, and a crash leaves the old or
   the new schedule whole. The index registry beside the schedule is
-  rewritten the same way. Like the reference's, the lock serializes
-  writers of one process only; it does not protect multi-process runs
-  (with an Iceberg catalog this would be an optimistic-concurrency
-  MERGE instead).
+  rewritten the same way. Unlike the reference's, the lock also
+  reaches other processes (``fcntl.flock``, ``sources.locks``). It is
+  taken before any table lock, never after one.
 - The expectation, clustering-decay and index-lag histories are
   maintained tables beside the schedule, appended under the same lock
   through ``_append_audit`` (which self-compacts them) and read
@@ -98,7 +97,7 @@ logger = logging.getLogger(__name__)
 DEFAULT_NUM_WORKERS = 5  # __main__.py:13
 
 #: durable stage-5 audit relation: one row per (table, check, rule) —
-#: rule-count-sized per run, appended under the process lock
+#: rule-count-sized per run, appended under the schedule lock
 EXPECTATION_AUDIT_SCHEMA = (
     "table_name string, checked_on timestamp, rule string, "
     "n_rows bigint, n_violations bigint, passed boolean"
@@ -379,10 +378,9 @@ class Orchestrator:
         #: self-regulating (gated by the measured journal length, so a
         #: quiet table is never touched). None disables the step.
         self.rewrite_manifests_max_entries = rewrite_manifests_max_entries
-        # the schedule's process lock (sources.schedule.schedule_lock):
+        # the schedule's lock (sources.schedule.schedule_lock):
         # serializes stamps, write_schedule and the sibling relations
-        # below within this process only — same scope as the
-        # reference's RLock (__main__.py:18)
+        # below, across threads and processes
         self._watermark_lock = schedule_lock(schedule_path)
         self.errors: list[MaintenanceTaskException] = []
         #: per-table partitions rescanned by the last incremental
@@ -488,7 +486,7 @@ class Orchestrator:
         """UPDATE cfg SET <column> = now WHERE table_name = ?
         (__main__.py:172-176) as a driver-side atomic file replace of
         the config table (``sources.schedule.stamp``), under the
-        schedule's process lock — the one ``write_schedule`` takes —
+        schedule lock — the one ``write_schedule`` takes —
         with no Spark job run under it. Each stamp re-reads the file,
         so an edit written between two stamps survives."""
         stamp(self.schedule_path, table_name, column, self.clock())
@@ -725,7 +723,7 @@ class Orchestrator:
         make_rows: Callable[[ParquetMaintainedTable], list],
     ) -> None:
         """Append ``make_rows(table)`` to the audit relation at
-        ``path`` under the process lock (creating it on first use).
+        ``path`` under the schedule lock (creating it on first use).
         Self-regulating: past AUDIT_COMPACT_FILE_THRESHOLD live files
         the append also bin-packs the relation and GCs the replaced
         history, so K sweeps never mean K files on disk forever."""

@@ -66,14 +66,15 @@ def build_file_value_index(
     # generation's rows (stale entries for compacted-away files
     # included) instead of accreting them forever
     index_table.overwrite(rows)
-    meta = index_table._load_meta()
-    meta["value_index"] = {
-        "source_snapshot": snap.snapshot_id,
-        "column": col,
-        "n_buckets": n_buckets,
-        "covered_files": sorted(_canon(f) for f in snap.files),
-    }
-    index_table._save_meta(meta)
+    with index_table._lock:
+        meta = index_table._load_meta()
+        meta["value_index"] = {
+            "source_snapshot": snap.snapshot_id,
+            "column": col,
+            "n_buckets": n_buckets,
+            "covered_files": sorted(_canon(f) for f in snap.files),
+        }
+        index_table._save_meta(meta)
 
 
 def extend_file_value_index(
@@ -111,8 +112,10 @@ def extend_file_value_index(
     info["covered_files"] = sorted(
         covered | {_canon(f) for f in new_files}
     )
-    meta["value_index"] = info
-    index_table._save_meta(meta)
+    with index_table._lock:
+        meta = index_table._load_meta()
+        meta["value_index"] = info
+        index_table._save_meta(meta)
     return len(new_files)
 
 

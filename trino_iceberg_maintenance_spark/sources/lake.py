@@ -34,6 +34,7 @@ only sees this protocol.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import glob
 import json
@@ -46,6 +47,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from trino_iceberg_maintenance_spark.sources.locks import dir_lock
 from trino_iceberg_maintenance_spark.sources.tables import local_frame
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
@@ -158,6 +160,14 @@ def _dec_stat(tag: str, s: str):
     raise ValueError(f"unknown stat tag {tag!r}")
 
 
+class CommitConflict(Exception):
+    """A commit whose delta no longer applies to the table's head
+    (Iceberg's ``CommitFailedException`` after validation): a file or
+    delete entry it removes has left the head, a delete entry committed
+    since its base applies to a file it rewrites, or a positional
+    delete it adds targets a file that has left the head."""
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -209,6 +219,9 @@ class ParquetMaintainedTable:
             with open(self.table_meta_path) as f:
                 partition_cols = json.load(f).get("partition_cols") or None
         self.partition_cols = partition_cols
+        #: the table lock: every read-modify-write of the manifest,
+        #: the journal, ``_table.json`` and the stats store holds it
+        self._lock = dir_lock(path)
 
     # -- manifest ---------------------------------------------------------
     #
@@ -231,6 +244,14 @@ class ParquetMaintainedTable:
     # long-history table's append writes bytes proportional to the
     # appended files, and the 200-commit behavior test pins that the
     # per-commit journal bytes stay flat as history grows.
+    #
+    # Writers never build a snapshot's file list themselves. Each plans
+    # from the snapshot it read (its BASE) and hands _commit only its
+    # delta: data files added and removed, delete entries added and
+    # removed. Under the table lock, _commit reloads the head, checks
+    # the delta still applies to it and derives the next snapshot from
+    # the head (see _commit). A concurrent commit therefore can only
+    # fail with CommitConflict, never drop another writer's files.
 
     _SNAP_DEFAULTS = {
         "parent_id": None,
@@ -604,21 +625,22 @@ class ParquetMaintainedTable:
         mid-append can never make later records undecodable."""
         if not records:
             return
-        os.makedirs(os.path.dirname(self.filestats_log_path), exist_ok=True)
-        lead = ""
-        if os.path.exists(self.filestats_log_path):
-            size = os.path.getsize(self.filestats_log_path)
-            if size > 0:
-                with open(self.filestats_log_path, "rb") as rf:
-                    rf.seek(size - 1)
-                    if rf.read(1) != b"\n":
-                        lead = "\n"
-        with open(self.filestats_log_path, "a") as f:
-            f.write(lead + "\n".join(
-                json.dumps(r, separators=(",", ":")) for r in records
-            ) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
+        with self._lock:
+            os.makedirs(os.path.dirname(self.filestats_log_path), exist_ok=True)
+            lead = ""
+            if os.path.exists(self.filestats_log_path):
+                size = os.path.getsize(self.filestats_log_path)
+                if size > 0:
+                    with open(self.filestats_log_path, "rb") as rf:
+                        rf.seek(size - 1)
+                        if rf.read(1) != b"\n":
+                            lead = "\n"
+            with open(self.filestats_log_path, "a") as f:
+                f.write(lead + "\n".join(
+                    json.dumps(r, separators=(",", ":")) for r in records
+                ) + "\n")
+                f.flush()
+                os.fsync(f.fileno())
 
     def _record_file_stats(self, files: list[str]) -> None:
         """Best-effort stats recording at commit time — a file whose
@@ -742,34 +764,35 @@ class ParquetMaintainedTable:
         shards and the legacy base are deleted only after the index
         cutover; a crash before cleanup leaves ignorable garbage that
         the next fold removes."""
-        prior_idx = self._load_filestats_index()
-        live = {
-            os.path.relpath(_canon(f), self.path)
-            for s in self._load_manifest()
-            for f in s.files
-        }
-        os.makedirs(os.path.dirname(self.filestats_path), exist_ok=True)
-        if prior_idx is not None:
-            removed = self._fold_filestats_incremental(prior_idx, live)
-        else:
-            store = self._load_filestats()
-            kept = [rec for key, rec in sorted(store.items())
-                    if key in live]
-            if len(kept) > self.FILESTATS_SHARD_ROWS:
-                self._write_stats_shards(kept, None)
+        with self._lock:
+            prior_idx = self._load_filestats_index()
+            live = {
+                os.path.relpath(_canon(f), self.path)
+                for s in self._load_manifest()
+                for f in s.files
+            }
+            os.makedirs(os.path.dirname(self.filestats_path), exist_ok=True)
+            if prior_idx is not None:
+                removed = self._fold_filestats_incremental(prior_idx, live)
             else:
-                tmp = self.filestats_path + ".tmp"
-                with open(tmp, "w") as f:
-                    for rec in kept:
-                        f.write(json.dumps(rec, separators=(",", ":"))
-                                + "\n")
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, self.filestats_path)
-            removed = len(store) - len(kept)
-        if os.path.exists(self.filestats_log_path):
-            os.remove(self.filestats_log_path)
-        return removed
+                store = self._load_filestats()
+                kept = [rec for key, rec in sorted(store.items())
+                        if key in live]
+                if len(kept) > self.FILESTATS_SHARD_ROWS:
+                    self._write_stats_shards(kept, None)
+                else:
+                    tmp = self.filestats_path + ".tmp"
+                    with open(tmp, "w") as f:
+                        for rec in kept:
+                            f.write(json.dumps(rec, separators=(",", ":"))
+                                    + "\n")
+                        f.flush()
+                        os.fsync(f.fileno())
+                    os.replace(tmp, self.filestats_path)
+                removed = len(store) - len(kept)
+            if os.path.exists(self.filestats_log_path):
+                os.remove(self.filestats_log_path)
+            return removed
 
     def _fold_filestats_incremental(self, prior_idx: dict, live: set
                                     ) -> int:
@@ -982,14 +1005,15 @@ class ParquetMaintainedTable:
         this format: fold the append-only commit journal into the
         compacted base, bounding manifest-load cost after long commit
         runs. Idempotent; returns observability stats."""
-        journal_bytes = (
-            os.path.getsize(self.manifest_log_path)
-            if os.path.exists(self.manifest_log_path)
-            else 0
-        )
-        folded = self.manifest_log_entries()
-        self._write_manifest(self._load_manifest())
-        stats_pruned = self._fold_filestats()
+        with self._lock:
+            journal_bytes = (
+                os.path.getsize(self.manifest_log_path)
+                if os.path.exists(self.manifest_log_path)
+                else 0
+            )
+            folded = self.manifest_log_entries()
+            self._write_manifest(self._load_manifest())
+            stats_pruned = self._fold_filestats()
         return {
             "entries_folded": folded,
             "journal_bytes_folded": journal_bytes,
@@ -997,75 +1021,142 @@ class ParquetMaintainedTable:
             "filestats_pruned": stats_pruned,
         }
 
-    def _next_snapshot_id(self) -> int:
-        snapshots = self._load_manifest()
-        return (snapshots[-1].snapshot_id + 1) if snapshots else 1
-
-    def _commit(self, files: list[str], clock=None,
-                ref: str = "main",
-                delete_files: list | None = None,
+    def _commit(self, base: Snapshot | None, added=(), removed=(),
+                add_deletes=(), remove_deletes=(),
                 operation: str = "append",
-                properties: dict | None = None) -> Snapshot:
-        """Append a snapshot to the log and advance ``ref`` (Iceberg's
-        refs model: the manifest list is the snapshot LOG; branches are
-        named pointers into it, ``main`` being the default read head).
-        Tables that never used a branch carry no refs and keep the
-        log-tail-is-current behavior.
+                properties: dict | None = None,
+                ref: str = "main", clock=None) -> Snapshot:
+        """Commit the delta a writer planned from ``base`` (the
+        snapshot it read, None for an empty table) as the next snapshot
+        of ``ref`` (Iceberg's refs model: the manifest list is the
+        snapshot LOG; branches are named pointers into it, ``main``
+        being the default read head; tables that never used a branch
+        carry no refs and keep the log-tail-is-current behavior).
 
-        Every data file's first-commit snapshot id is recorded
-        persistently in ``_table.json`` (Iceberg's data sequence
-        number) — equality-delete scoping must survive
-        ``expire_snapshots`` dropping the snapshot that introduced a
-        still-live file, so the manifest walk alone is not a safe
-        source of sequence numbers."""
-        snapshots = self._load_manifest()
-        next_id = (snapshots[-1].snapshot_id + 1) if snapshots else 1
-        now = (clock or _utcnow)()
-        meta = self._load_meta()
-        branches = meta.get("branches", {})
-        parent = branches.get(ref) if ref in branches else (
-            snapshots[-1].snapshot_id if snapshots else None
-        )
-        snap = Snapshot(next_id, now.isoformat(sep=" "), sorted(files),
-                        parent_id=parent,
-                        delete_files=list(delete_files) if delete_files
-                        else None,
-                        operation=operation,
-                        properties=dict(properties) if properties else None)
-        # O(|delta|) journal append — never a full-log rewrite
-        self._append_manifest_entry(
-            snap, {s.snapshot_id: s.files for s in snapshots}
-        )
-        seq = meta.setdefault("file_seq", {})
-        sizes = meta.setdefault("file_sizes", {})
-        meta_dirty = False
-        fresh: list[str] = []
-        for f in snap.files:
-            if _canon(f) not in seq:
+        The delta is ``added``/``removed`` data files and
+        ``add_deletes``/``remove_deletes`` delete entries (removal
+        matches by path). Under the table lock the head of ``ref`` is
+        reloaded; the new snapshot holds the head's files minus
+        ``removed`` plus ``added``, and the head's delete entries minus
+        ``remove_deletes`` plus ``add_deletes``. An added entry without
+        a ``seq`` is stamped with the id being committed. Carried
+        entries that can no longer remove a row of the new file list
+        (:meth:`_entry_applies`) are dropped, so snapshot metadata
+        never accretes dead deletes.
+
+        When the head moved since ``base``, the delta is validated
+        against it first (Iceberg's optimistic concurrency,
+        https://iceberg.apache.org/spec/#optimistic-concurrency);
+        appends simply rebase. :class:`CommitConflict` is raised when
+
+        - a file or delete entry the commit removes is no longer live;
+        - the commit removes data files and a delete entry committed
+          since ``base`` applies to one of them (its rows were
+          rewritten from a state that did not apply that delete);
+        - an added positional entry targets a file that left the head.
+
+        Every added data file's sequence number (the id that first
+        committed it) and size are recorded in ``_table.json`` after
+        the journal line. A crash between the two leaves the file out
+        of the map; :meth:`_file_seq_of` then takes it from the log,
+        and :meth:`expire_snapshots` records it before dropping the
+        snapshot that added it."""
+        removed = set(removed)
+        gone = {e["path"] for e in remove_deletes}
+        with self._lock:
+            snapshots = self._load_manifest()
+            meta = self._load_meta()
+            branches = meta.get("branches", {})
+            head_id = branches.get(ref) if ref in branches else (
+                snapshots[-1].snapshot_id if snapshots else None
+            )
+            head = next((s for s in snapshots if s.snapshot_id == head_id),
+                        None)
+            next_id = (snapshots[-1].snapshot_id + 1) if snapshots else 1
+            head_files = set(head.files) if head else set()
+            head_entries = list(head.delete_files or []) if head else []
+            files = sorted((head_files - removed) | set(added))
+            entries = [e for e in head_entries if e["path"] not in gone] + [
+                {**e, "seq": e.get("seq", next_id)} for e in add_deletes
+            ]
+            seqmap = self._file_seq_of() if entries else {}
+            for f in added:
+                seqmap.setdefault(_canon(f), next_id)
+            if head_id != (base.snapshot_id if base else None):
+                self._validate_rebase(base, head, removed, gone,
+                                      add_deletes, seqmap)
+            canon = {_canon(f) for f in files}
+            entries = [e for e in entries
+                       if self._entry_applies(e, canon, seqmap)]
+            snap = Snapshot(next_id, (clock or _utcnow)().isoformat(sep=" "),
+                            files, parent_id=head_id,
+                            delete_files=entries or None,
+                            operation=operation,
+                            properties=dict(properties) if properties
+                            else None)
+            # O(|delta|) journal append — never a full-log rewrite
+            self._append_manifest_entry(
+                snap, {s.snapshot_id: s.files for s in snapshots}
+            )
+            seq = meta.setdefault("file_seq", {})
+            sizes = meta.setdefault("file_sizes", {})
+            fresh = [f for f in added if _canon(f) not in seq]
+            for f in fresh:
                 seq[_canon(f)] = next_id
-                fresh.append(f)
-                meta_dirty = True
-            # record the file's size ONCE, at its first commit (we just
-            # wrote it, so the stat is storage-local) — live_bytes()
-            # and fleet dashboards then never stat data files again
-            # (an S3 stat is a round trip, not a syscall)
-            if _canon(f) not in sizes:
-                try:
+                # the size is recorded ONCE, at first commit (we just
+                # wrote the file, so the stat is storage-local) —
+                # live_bytes() and fleet dashboards never stat it again
+                with contextlib.suppress(OSError):
                     sizes[_canon(f)] = os.path.getsize(f)
-                    meta_dirty = True
-                except OSError:
-                    pass
-        if ref is not None and (ref != "main" or "branches" in meta):
-            meta.setdefault("branches", {})[ref] = next_id
-            meta_dirty = True
-        if meta_dirty:
-            self._save_meta(meta)
-        # manifest-persisted column stats: the writer holds these
-        # files' footers RIGHT NOW (just written / just adopted) —
-        # record them once so no stats consult ever re-opens them
-        if fresh:
-            self._record_file_stats(fresh)
+            moved_ref = ref != "main" or "branches" in meta
+            if moved_ref:
+                meta.setdefault("branches", {})[ref] = next_id
+            if fresh or moved_ref:
+                self._save_meta(meta)
+            # manifest-persisted column stats: the writer holds these
+            # files' footers RIGHT NOW (just written / just adopted) —
+            # record them once so no stats consult ever re-opens them
+            if fresh:
+                self._record_file_stats(fresh)
         return snap
+
+    def _validate_rebase(self, base: Snapshot | None, head: Snapshot | None,
+                         removed: set[str], gone: set[str], add_deletes,
+                         seqmap: dict[str, int]) -> None:
+        """Raise :class:`CommitConflict` unless a delta planned from
+        ``base`` still applies to ``head`` (the rules in
+        :meth:`_commit`)."""
+        head_files = set(head.files) if head else set()
+        head_entries = list(head.delete_files or []) if head else []
+        at = f"head {head.snapshot_id if head else None}"
+        if not removed <= head_files or not gone <= {
+            e["path"] for e in head_entries
+        }:
+            raise CommitConflict(
+                f"{self.path}: files or delete entries the commit "
+                f"removes are no longer live at {at}"
+            )
+        if removed:
+            known = ({e["path"] for e in (base.delete_files or [])}
+                     if base else set())
+            rewritten = {_canon(f) for f in removed}
+            for e in head_entries:
+                if e["path"] not in known and self._entry_applies(
+                    e, rewritten, seqmap
+                ):
+                    raise CommitConflict(
+                        f"{self.path}: delete {e['path']} committed since "
+                        f"the base applies to a file the commit rewrites"
+                    )
+        live = {_canon(f) for f in head_files}
+        for e in add_deletes:
+            if e["content"] == "position" and any(
+                t not in live for t in e.get("targets") or ()
+            ):
+                raise CommitConflict(
+                    f"{self.path}: a positional delete targets a file "
+                    f"that left {at}"
+                )
 
     # -- core I/O ---------------------------------------------------------
     @classmethod
@@ -1077,11 +1168,11 @@ class ParquetMaintainedTable:
     ) -> "ParquetMaintainedTable":
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         t = cls(spark, path, partition_cols)
-        if not os.path.exists(t.manifest_path):
-            t._write_manifest([])
-        if partition_cols and not os.path.exists(t.table_meta_path):
-            with open(t.table_meta_path, "w") as f:
-                json.dump({"partition_cols": partition_cols}, f)
+        with t._lock:
+            if not os.path.exists(t.manifest_path):
+                t._write_manifest([])
+            if partition_cols and not os.path.exists(t.table_meta_path):
+                t._save_meta({"partition_cols": partition_cols})
         return t
 
     def current_snapshot(self) -> Snapshot | None:
@@ -1147,13 +1238,14 @@ class ParquetMaintainedTable:
                 # remember every hidden dir column ever written so
                 # reads can strip them from legacy snaps after spec
                 # evolution
-                meta = self._load_meta()
-                known = set(meta.get("derived_partition_names", []))
-                if not known.issuperset(derived):
-                    meta["derived_partition_names"] = sorted(
-                        known | set(derived)
-                    )
-                    self._save_meta(meta)
+                with self._lock:
+                    meta = self._load_meta()
+                    known = set(meta.get("derived_partition_names", []))
+                    if not known.issuperset(derived):
+                        meta["derived_partition_names"] = sorted(
+                            known | set(derived)
+                        )
+                        self._save_meta(meta)
         writer = df.write.mode("overwrite")
         if part_names:
             writer = writer.partitionBy(*part_names)
@@ -1174,15 +1266,13 @@ class ParquetMaintainedTable:
         # resolve the branch FIRST: a typo'd branch name must not
         # evolve the schema or leave orphaned snap dirs behind
         bsnap = self._branch_snapshot(branch)
-        base = list(bsnap.files) if bsnap else []
+        self._evolve_schema(df.schema)
+        new_files = self._write_data(df, num_files=1 if single_file else None)
         # pending delete files carry forward: they keep applying to the
         # old files; the appended file's sequence number is newer than
         # every pending delete, so its rows are never filtered
-        entries = list(bsnap.delete_files or []) if bsnap else None
-        self._evolve_schema(df.schema)
-        new_files = self._write_data(df, num_files=1 if single_file else None)
-        return self._commit(base + new_files, clock, ref=branch,
-                            delete_files=entries, properties=properties)
+        return self._commit(bsnap, added=new_files, ref=branch,
+                            properties=properties, clock=clock)
 
     def overwrite(self, df: DataFrame, clock=None,
                   single_file: bool = False) -> Snapshot:
@@ -1196,8 +1286,7 @@ class ParquetMaintainedTable:
         new_files = self._write_data(
             df, num_files=1 if single_file else None
         )
-        return self._commit(new_files, clock, delete_files=None,
-                            operation="overwrite")
+        return self._replace_all(new_files, clock)
 
     def truncate(self, clock=None) -> Snapshot:
         """TRUNCATE TABLE as one commit: the new snapshot references
@@ -1206,8 +1295,17 @@ class ParquetMaintainedTable:
         half of :meth:`overwrite` with nothing to write. Pending
         delete entries do not carry: nothing they referenced is
         visible."""
-        return self._commit([], clock, delete_files=None,
-                            operation="overwrite")
+        return self._replace_all([], clock)
+
+    def _replace_all(self, new_files: list[str], clock) -> Snapshot:
+        """Commit ``new_files`` as the table's whole content, dropping
+        every data file and delete entry of the current snapshot."""
+        snap = self.current_snapshot()
+        files, entries = ((snap.files, snap.delete_files or []) if snap
+                          else ([], []))
+        return self._commit(snap, added=new_files, removed=files,
+                            remove_deletes=entries, operation="overwrite",
+                            clock=clock)
 
     def add_files(self, paths: list[str], clock=None,
                   branch: str = "main") -> Snapshot:
@@ -1232,15 +1330,13 @@ class ParquetMaintainedTable:
             rep = [c for c in canon if c in seen or seen.add(c)]
             raise ValueError(f"add_files: duplicate inputs {rep[:3]}")
         bsnap = self._branch_snapshot(branch)
-        base = list(bsnap.files) if bsnap else []
-        entries = list(bsnap.delete_files or []) if bsnap else None
-        dupes = {_canon(f) for f in base} & set(canon)
+        live = {_canon(f) for f in bsnap.files} if bsnap else set()
+        dupes = live & set(canon)
         if dupes:
             raise ValueError(
                 f"add_files: already referenced: {sorted(dupes)[:3]}"
             )
-        return self._commit(base + canon, clock, ref=branch,
-                            delete_files=entries, operation="append")
+        return self._commit(bsnap, added=canon, ref=branch, clock=clock)
 
     def read(self) -> DataFrame:
         snap = self.current_snapshot()
@@ -1317,7 +1413,10 @@ class ParquetMaintainedTable:
         """Canonical data-file path → data sequence number (the
         snapshot id that first committed the file). Persisted in
         ``_table.json`` by :meth:`_commit`; falls back to a manifest
-        walk for tables created before the map existed."""
+        walk for files the map lacks (tables created before the map
+        existed, or a crash between the journal line and the map
+        write — :meth:`expire_snapshots` records those before the walk
+        could lose them)."""
         meta = self._load_meta()
         seq = {p: int(s) for p, s in meta.get("file_seq", {}).items()}
         for s in self._load_manifest():
@@ -1412,18 +1511,16 @@ class ParquetMaintainedTable:
         df.coalesce(1).write.mode("overwrite").parquet(out)
         return sorted(glob.glob(os.path.join(out, "*.parquet")))[0]
 
-    def _prune_entries(self, entries: list | None,
-                       surviving_files: list[str]) -> list | None:
-        """Drop delete entries that can no longer match any surviving
-        data file: positional entries whose target files were all
-        rewritten away, equality entries with no older-sequence file
-        left. Keeps snapshot metadata from accreting dead deletes."""
-        if not entries:
-            return None
-        canon = {_canon(f) for f in surviving_files}
-        seqmap = self._file_seq_of()
-        return [e for e in entries
-                if self._entry_applies(e, canon, seqmap)] or None
+    def _write_rewrite(self, rows: DataFrame, n: int) -> list[str]:
+        """Write the surviving rows of ``n`` rewritten files, given with
+        their ``_FP`` lineage. On a partitioned table rows are grouped
+        by the file they came from, so no partition gets more files
+        than the rewrite removed from it (a round-robin deal would
+        spread every partition over all ``n`` tasks: up to n × P
+        files)."""
+        if self.partition_cols:
+            rows, n = rows.repartition(n, _FP), None
+        return self._write_data(rows.drop(_FP, _POS), num_files=n)
 
     @staticmethod
     def _entry_applies(entry: dict, canon: set[str],
@@ -1463,20 +1560,16 @@ class ParquetMaintainedTable:
                 for r in eff.filter(cond).select(_FP).distinct().collect()
             }
             hit = [f for f in snap.files if _canon(f) in hit_set]
-            untouched = [f for f in snap.files if _canon(f) not in hit_set]
             new_files = []
             if hit:
                 # DELETE removes rows where cond IS TRUE; NULL-cond
                 # rows survive — hence coalesce, not bare negation
-                survivors = self._read_effective(hit, entries).filter(
-                    ~F.coalesce(cond, F.lit(False))
-                )
-                new_files = self._write_data(survivors, num_files=len(hit))
-            return self._commit(
-                untouched + new_files, clock,
-                delete_files=self._prune_entries(entries, untouched),
-                operation="overwrite",
-            )
+                survivors = self._read_effective(
+                    hit, entries, with_lineage=True
+                ).filter(~F.coalesce(cond, F.lit(False)))
+                new_files = self._write_rewrite(survivors, len(hit))
+            return self._commit(snap, added=new_files, removed=hit,
+                                operation="overwrite", clock=clock)
         if mode != "merge-on-read":
             raise ValueError("mode must be 'merge-on-read' or 'copy-on-write'")
         eff = self._read_effective(snap.files, entries, with_lineage=True)
@@ -1488,20 +1581,11 @@ class ParquetMaintainedTable:
         targets = sorted(
             r[0] for r in written.select("file_path").distinct().collect()
         )
+        entry = {"path": path, "content": "position", "targets": targets}
         if not targets:  # nothing matched — keep state, drop empty file
             shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-            return self._commit(snap.files, clock,
-                                delete_files=entries or None,
-                                operation="delete")
-        entry = {
-            "path": path,
-            "content": "position",
-            "seq": self._next_snapshot_id(),
-            "targets": targets,
-        }
-        return self._commit(snap.files, clock,
-                            delete_files=entries + [entry],
-                            operation="delete")
+        return self._commit(snap, add_deletes=[entry] if targets else (),
+                            operation="delete", clock=clock)
 
     def delete_by_key(
         self, keys: DataFrame, on: list[str], clock=None
@@ -1523,77 +1607,10 @@ class ParquetMaintainedTable:
             if missing:
                 raise ValueError(f"equality columns not in schema: {missing}")
         path = self._write_delete_file(keys.select(*on).dropDuplicates())
-        entry = {
-            "path": path,
-            "content": "equality",
-            "equality_cols": list(on),
-            "seq": self._next_snapshot_id(),
-        }
-        return self._commit(
-            snap.files, clock,
-            delete_files=list(snap.delete_files or []) + [entry],
-            operation="delete",
-        )
-
-    def update_where(
-        self,
-        condition,
-        assignments: dict,
-        clock=None,
-    ) -> Snapshot:
-        """Merge-on-read UPDATE (Iceberg v2 `UPDATE` on a MoR table):
-        ONE commit that adds a positional delete file claiming every
-        currently-visible matching row AND a data file holding those
-        rows with ``assignments`` applied (``{col: Column|sql-string}``).
-        No existing data file is rewritten — the write is sized by the
-        match, not by the files it touches (the advantage over
-        copy-on-write ``merge_into`` for small updates of huge
-        files)."""
-        snap = self.current_snapshot()
-        if snap is None or not snap.files:
-            raise ValueError(f"table {self.path} has no snapshots")
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        entries = list(snap.delete_files or [])
-        cols = self._read_files(snap.files).columns
-        eff = self._read_effective(snap.files, entries, with_lineage=True)
-        matched = eff.filter(cond).persist()
-        try:
-            dels = matched.select(
-                F.col(_FP).alias("file_path"), F.col(_POS).alias("pos")
-            )
-            path = self._write_delete_file(dels)
-            written = self.spark.read.parquet(path)
-            targets = sorted(
-                r[0]
-                for r in written.select("file_path").distinct().collect()
-            )
-            if not targets:  # nothing matched
-                shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-                return self._commit(snap.files, clock,
-                                    delete_files=entries or None,
-                                    operation="overwrite")
-            updated = matched
-            for col, expr in assignments.items():
-                if col not in cols:
-                    raise ValueError(f"no column {col!r}")
-                updated = updated.withColumn(
-                    col,
-                    F.expr(expr) if isinstance(expr, str) else expr,
-                )
-            new_files = self._write_data(updated.select(cols), num_files=1)
-        finally:
-            matched.unpersist()
-        entry = {
-            "path": path,
-            "content": "position",
-            "seq": self._next_snapshot_id(),
-            "targets": targets,
-        }
-        return self._commit(
-            snap.files + new_files, clock,
-            delete_files=entries + [entry],
-            operation="overwrite",
-        )
+        entry = {"path": path, "content": "equality",
+                 "equality_cols": list(on)}
+        return self._commit(snap, add_deletes=[entry], operation="delete",
+                            clock=clock)
 
     def compact_delete_files(self, clock=None) -> Snapshot:
         """Iceberg's ``rewrite_position_deletes``: merge the pending
@@ -1610,7 +1627,6 @@ class ParquetMaintainedTable:
         pos = [e for e in entries if e["content"] == "position"]
         if len(pos) <= 1:
             return snap
-        keep = [e for e in entries if e["content"] != "position"]
         live = {_canon(f) for f in snap.files}
         live_df = local_frame(
             self.spark, [(p,) for p in sorted(live)], "file_path string"
@@ -1638,9 +1654,8 @@ class ParquetMaintainedTable:
             "seq": max(int(e["seq"]) for e in pos),
             "targets": targets,
         }
-        return self._commit(list(snap.files), clock,
-                            delete_files=keep + [entry],
-                            operation="replace")
+        return self._commit(snap, add_deletes=[entry], remove_deletes=pos,
+                            operation="replace", clock=clock)
 
     def upsert_by_key(
         self, source: DataFrame, on: list[str], clock=None
@@ -1661,8 +1676,7 @@ class ParquetMaintainedTable:
         later."""
         snap = self.current_snapshot()
         src = source.dropDuplicates(on)
-        entries = list(snap.delete_files or []) if snap else []
-        new_entries = entries
+        new_entries = []
         if snap is not None and snap.files:
             schema = self.tracked_schema()
             if schema is not None:
@@ -1675,18 +1689,12 @@ class ParquetMaintainedTable:
             del_path = self._write_delete_file(
                 src.select(*on).dropDuplicates()
             )
-            new_entries = entries + [{
-                "path": del_path,
-                "content": "equality",
-                "equality_cols": list(on),
-                "seq": self._next_snapshot_id(),
-            }]
-        base = list(snap.files) if snap else []
+            new_entries = [{"path": del_path, "content": "equality",
+                            "equality_cols": list(on)}]
         self._evolve_schema(src.schema)
         data_files = self._write_data(src, num_files=1)
-        return self._commit(base + data_files, clock,
-                            delete_files=new_entries or None,
-                            operation="overwrite")
+        return self._commit(snap, added=data_files, add_deletes=new_entries,
+                            operation="overwrite", clock=clock)
 
     def _eq_matched_files(self, files: list[str], eqs: list) -> set[str]:
         """Data files (manifest paths) holding at least one row an
@@ -1750,9 +1758,9 @@ class ParquetMaintainedTable:
                 if tgts is None:
                     # a positional entry with NO target list (legacy /
                     # hand-authored manifest) must be treated as
-                    # match-anything, mirroring _prune_entries — the
-                    # zero-file reading would commit delete_files=None
-                    # and resurrect the deleted rows
+                    # match-anything, mirroring _entry_applies — the
+                    # zero-file reading would drop the entry and
+                    # resurrect the deleted rows
                     affected |= set(canon_live.values())
                 else:
                     affected |= {
@@ -1761,13 +1769,14 @@ class ParquetMaintainedTable:
         affected |= self._eq_matched_files(
             snap.files, [e for e in entries if e["content"] == "equality"]
         )
-        untouched = [f for f in snap.files if f not in affected]
         new_files = []
         if affected:
-            survivors = self._read_effective(sorted(affected), entries)
-            new_files = self._write_data(survivors, num_files=len(affected))
-        return self._commit(untouched + new_files, clock,
-                            delete_files=None, operation="replace")
+            survivors = self._read_effective(sorted(affected), entries,
+                                             with_lineage=True)
+            new_files = self._write_rewrite(survivors, len(affected))
+        return self._commit(snap, added=new_files, removed=affected,
+                            remove_deletes=entries, operation="replace",
+                            clock=clock)
 
     def delete_files_df(self) -> DataFrame:
         """The ``$delete_files`` metadata relation: pending delete
@@ -1847,56 +1856,57 @@ class ParquetMaintainedTable:
         would resurface under the new column."""
         from pyspark.sql import types as T
 
-        current = self.tracked_schema()
-        meta = self._load_meta()
-        dropped = set(meta.get("dropped_columns", []))
-        legacy = {
-            a for als in meta.get("renamed_from", {}).values() for a in als
-        }
-        if current is None:
-            merged = df_schema
-        else:
-            by_name = {f.name: f for f in current.fields}
-            for f in df_schema.fields:
-                prev = by_name.get(f.name)
-                if prev is None:
-                    if f.name in dropped:
-                        raise ValueError(
-                            f"cannot re-add dropped column {f.name!r}: "
-                            "old data files still carry its values and "
-                            "this name-based format has no field ids to "
-                            "hide them"
-                        )
-                    if f.name in legacy:
-                        raise ValueError(
-                            f"cannot add column {f.name!r}: the name is a "
-                            "pre-rename alias still served from old files"
-                        )
-                    by_name[f.name] = f
-                elif prev.dataType != f.dataType:
-                    if self._is_safe_widening(prev.dataType, f.dataType):
-                        by_name[f.name] = T.StructField(
-                            f.name, f.dataType, True
-                        )
-                    elif self._is_safe_widening(f.dataType, prev.dataType):
-                        pass  # narrower write under a wider tracked
-                        # type: the file stores the narrow physical
-                        # type, the read schema widens it — no change
-                    else:
-                        raise TypeError(
-                            f"schema evolution cannot change column "
-                            f"{f.name!r}: {prev.dataType.simpleString()} -> "
-                            f"{f.dataType.simpleString()}"
-                        )
-            # stable order: existing columns first, new ones appended
-            merged = T.StructType(
-                [by_name[f.name] for f in current.fields]
-                + [f for f in df_schema.fields if f.name not in
-                   {g.name for g in current.fields}]
-            )
-        meta = self._load_meta()
-        meta["schema"] = json.dumps(merged.jsonValue())
-        self._save_meta(meta)
+        with self._lock:
+            current = self.tracked_schema()
+            meta = self._load_meta()
+            dropped = set(meta.get("dropped_columns", []))
+            legacy = {
+                a for als in meta.get("renamed_from", {}).values() for a in als
+            }
+            if current is None:
+                merged = df_schema
+            else:
+                by_name = {f.name: f for f in current.fields}
+                for f in df_schema.fields:
+                    prev = by_name.get(f.name)
+                    if prev is None:
+                        if f.name in dropped:
+                            raise ValueError(
+                                f"cannot re-add dropped column {f.name!r}: "
+                                "old data files still carry its values and "
+                                "this name-based format has no field ids to "
+                                "hide them"
+                            )
+                        if f.name in legacy:
+                            raise ValueError(
+                                f"cannot add column {f.name!r}: the name is a "
+                                "pre-rename alias still served from old files"
+                            )
+                        by_name[f.name] = f
+                    elif prev.dataType != f.dataType:
+                        if self._is_safe_widening(prev.dataType, f.dataType):
+                            by_name[f.name] = T.StructField(
+                                f.name, f.dataType, True
+                            )
+                        elif self._is_safe_widening(f.dataType, prev.dataType):
+                            pass  # narrower write under a wider tracked
+                            # type: the file stores the narrow physical
+                            # type, the read schema widens it — no change
+                        else:
+                            raise TypeError(
+                                f"schema evolution cannot change column "
+                                f"{f.name!r}: {prev.dataType.simpleString()} -> "
+                                f"{f.dataType.simpleString()}"
+                            )
+                # stable order: existing columns first, new ones appended
+                merged = T.StructType(
+                    [by_name[f.name] for f in current.fields]
+                    + [f for f in df_schema.fields if f.name not in
+                       {g.name for g in current.fields}]
+                )
+            meta = self._load_meta()
+            meta["schema"] = json.dumps(merged.jsonValue())
+            self._save_meta(meta)
 
     def rename_column(self, old: str, new: str) -> None:
         """Metadata-only column RENAME (Iceberg `ALTER TABLE … RENAME
@@ -1906,40 +1916,41 @@ class ParquetMaintainedTable:
         the same mechanism as Iceberg's name-mapping fallback for
         id-less files. The old name is retired permanently: re-adding
         it would make old files' physical data resurface."""
-        schema = self.tracked_schema()
-        if schema is None:
-            raise ValueError("table has no tracked schema yet")
-        from pyspark.sql import types as T
+        with self._lock:
+            schema = self.tracked_schema()
+            if schema is None:
+                raise ValueError("table has no tracked schema yet")
+            from pyspark.sql import types as T
 
-        names = {f.name for f in schema.fields}
-        if old not in names:
-            raise ValueError(f"no column {old!r}")
-        meta = self._load_meta()
-        aliases = meta.get("renamed_from", {})
-        legacy = {a for als in aliases.values() for a in als}
-        if new in names or new in legacy or new in meta.get(
-            "dropped_columns", []
-        ):
-            raise ValueError(f"column name {new!r} is taken or retired")
-        for spec in self.partition_cols or []:
-            if parse_partition_spec(spec)["col"] == old:
-                raise ValueError(
-                    f"cannot rename partition source column {old!r}; "
-                    "evolve the partition spec first"
-                )
-        merged = T.StructType(
-            [
-                T.StructField(
-                    new if f.name == old else f.name, f.dataType, f.nullable
-                )
-                for f in schema.fields
-            ]
-        )
-        meta["schema"] = json.dumps(merged.jsonValue())
-        chain = aliases.pop(old, [])
-        aliases[new] = chain + [old]
-        meta["renamed_from"] = aliases
-        self._save_meta(meta)
+            names = {f.name for f in schema.fields}
+            if old not in names:
+                raise ValueError(f"no column {old!r}")
+            meta = self._load_meta()
+            aliases = meta.get("renamed_from", {})
+            legacy = {a for als in aliases.values() for a in als}
+            if new in names or new in legacy or new in meta.get(
+                "dropped_columns", []
+            ):
+                raise ValueError(f"column name {new!r} is taken or retired")
+            for spec in self.partition_cols or []:
+                if parse_partition_spec(spec)["col"] == old:
+                    raise ValueError(
+                        f"cannot rename partition source column {old!r}; "
+                        "evolve the partition spec first"
+                    )
+            merged = T.StructType(
+                [
+                    T.StructField(
+                        new if f.name == old else f.name, f.dataType, f.nullable
+                    )
+                    for f in schema.fields
+                ]
+            )
+            meta["schema"] = json.dumps(merged.jsonValue())
+            chain = aliases.pop(old, [])
+            aliases[new] = chain + [old]
+            meta["renamed_from"] = aliases
+            self._save_meta(meta)
 
     def drop_column(self, name: str) -> None:
         """Metadata-only column DROP: the tracked (explicit) read
@@ -1948,45 +1959,46 @@ class ParquetMaintainedTable:
         pre-rename aliases that fed it — is tombstoned against re-add
         (old files still physically carry the values and this
         name-based format has no field ids to mask them)."""
-        schema = self.tracked_schema()
-        if schema is None:
-            raise ValueError("table has no tracked schema yet")
-        from pyspark.sql import types as T
+        with self._lock:
+            schema = self.tracked_schema()
+            if schema is None:
+                raise ValueError("table has no tracked schema yet")
+            from pyspark.sql import types as T
 
-        if name not in {f.name for f in schema.fields}:
-            raise ValueError(f"no column {name!r}")
-        for spec in self.partition_cols or []:
-            if parse_partition_spec(spec)["col"] == name:
-                raise ValueError(
-                    f"cannot drop partition source column {name!r}; "
-                    "evolve the partition spec first"
-                )
-        # pending equality deletes keyed on the column would become
-        # unapplicable — require materializing them first
-        to_cur = self._alias_to_current()
-        for s in self._load_manifest():
-            for e in s.delete_files or []:
-                if e["content"] == "equality" and name in {
-                    to_cur.get(c, c) for c in e["equality_cols"]
-                }:
+            if name not in {f.name for f in schema.fields}:
+                raise ValueError(f"no column {name!r}")
+            for spec in self.partition_cols or []:
+                if parse_partition_spec(spec)["col"] == name:
                     raise ValueError(
-                        f"cannot drop column {name!r}: snapshot "
-                        f"{s.snapshot_id} carries an equality delete "
-                        "keyed on it — run purge_deletes() (and expire "
-                        "old snapshots) first"
+                        f"cannot drop partition source column {name!r}; "
+                        "evolve the partition spec first"
                     )
-        meta = self._load_meta()
-        aliases = meta.get("renamed_from", {})
-        retired = [name] + aliases.pop(name, [])
-        meta["renamed_from"] = aliases
-        meta["dropped_columns"] = sorted(
-            set(meta.get("dropped_columns", [])) | set(retired)
-        )
-        merged = T.StructType(
-            [f for f in schema.fields if f.name != name]
-        )
-        meta["schema"] = json.dumps(merged.jsonValue())
-        self._save_meta(meta)
+            # pending equality deletes keyed on the column would become
+            # unapplicable — require materializing them first
+            to_cur = self._alias_to_current()
+            for s in self._load_manifest():
+                for e in s.delete_files or []:
+                    if e["content"] == "equality" and name in {
+                        to_cur.get(c, c) for c in e["equality_cols"]
+                    }:
+                        raise ValueError(
+                            f"cannot drop column {name!r}: snapshot "
+                            f"{s.snapshot_id} carries an equality delete "
+                            "keyed on it — run purge_deletes() (and expire "
+                            "old snapshots) first"
+                        )
+            meta = self._load_meta()
+            aliases = meta.get("renamed_from", {})
+            retired = [name] + aliases.pop(name, [])
+            meta["renamed_from"] = aliases
+            meta["dropped_columns"] = sorted(
+                set(meta.get("dropped_columns", [])) | set(retired)
+            )
+            merged = T.StructType(
+                [f for f in schema.fields if f.name != name]
+            )
+            meta["schema"] = json.dumps(merged.jsonValue())
+            self._save_meta(meta)
 
     def _read_files(
         self, files: list[str], with_lineage: bool = False
@@ -2336,21 +2348,22 @@ class ParquetMaintainedTable:
         under the spec that didn't). No data rewrite at evolution
         time; :meth:`optimize` migrates old partitions to the current
         spec as a natural side effect of its rewrite."""
-        schema = self.tracked_schema()
-        if new_cols and schema is not None:
-            known = {f.name for f in schema.fields}
-            missing = [
-                t for t in new_cols
-                if parse_partition_spec(t)["col"] not in known
-            ]
-            if missing:
-                raise ValueError(
-                    f"partition columns not in table schema: {missing}"
-                )
-        meta = self._load_meta()
-        meta["partition_cols"] = new_cols
-        self._save_meta(meta)
-        self.partition_cols = new_cols
+        with self._lock:
+            schema = self.tracked_schema()
+            if new_cols and schema is not None:
+                known = {f.name for f in schema.fields}
+                missing = [
+                    t for t in new_cols
+                    if parse_partition_spec(t)["col"] not in known
+                ]
+                if missing:
+                    raise ValueError(
+                        f"partition columns not in table schema: {missing}"
+                    )
+            meta = self._load_meta()
+            meta["partition_cols"] = new_cols
+            self._save_meta(meta)
+            self.partition_cols = new_cols
 
     def partitions_df(self) -> DataFrame:
         """The ``$partitions`` metadata relation: per hive-partition
@@ -2721,19 +2734,21 @@ class ParquetMaintainedTable:
         """``ALTER TABLE ... SET TBLPROPERTIES`` — metadata-only merge
         into ``_table.json``. Values are stored as strings (the
         Iceberg/Hive convention)."""
-        meta = self._load_meta()
-        cur = meta.setdefault("properties", {})
-        cur.update({str(k): str(v) for k, v in props.items()})
-        self._save_meta(meta)
+        with self._lock:
+            meta = self._load_meta()
+            cur = meta.setdefault("properties", {})
+            cur.update({str(k): str(v) for k, v in props.items()})
+            self._save_meta(meta)
 
     def unset_table_properties(self, keys) -> None:
         """``ALTER TABLE ... UNSET TBLPROPERTIES`` — idempotent."""
-        meta = self._load_meta()
-        cur = meta.get("properties", {})
-        for k in keys:
-            cur.pop(str(k), None)
-        meta["properties"] = cur
-        self._save_meta(meta)
+        with self._lock:
+            meta = self._load_meta()
+            cur = meta.get("properties", {})
+            for k in keys:
+                cur.pop(str(k), None)
+            meta["properties"] = cur
+            self._save_meta(meta)
 
     def manifests_df(self) -> DataFrame:
         """The ``$manifests`` metadata relation for this format: one
@@ -2912,32 +2927,33 @@ class ParquetMaintainedTable:
             # full rewrite reads EFFECTIVE rows, so pending deletes are
             # materialized and the new snapshot carries none — exactly
             # Iceberg's rewrite_data_files compacting delete files away
-            return self._commit(_rewrite(self.read(), k), clock,
-                                operation="replace")
+            rows = (self._read_effective(files, entries) if files
+                    else self.read())
+            return self._commit(snap, added=_rewrite(rows, k),
+                                removed=files, remove_deletes=entries,
+                                operation="replace", clock=clock)
 
         by_part: dict[str, list[str]] = {}
         for f in files:
             by_part.setdefault(self._partition_of(f), []).append(f)
-        keep, new_files = [], []
+        rewritten, new_files = [], []
         for part, pfiles in sorted(by_part.items()):
             if where_partition is not None and not part.startswith(
                 where_partition
             ):
-                keep.extend(pfiles)  # out of scope — carried untouched
-                continue
+                continue  # out of scope — carried untouched
             total = sum(os.path.getsize(f) for f in pfiles)
             k = max(1, math.ceil(total / target_file_size))
             if not (sort_by or zorder_by) and (
                 len(pfiles) < max(min_input_files, 2) or k >= len(pfiles)
             ):
-                keep.extend(pfiles)  # already healthy — no rewrite
-                continue
+                continue  # already healthy — no rewrite
+            rewritten.extend(pfiles)
             new_files.extend(_rewrite(self._read_effective(pfiles, entries), k))
         # delete entries survive only while a non-rewritten file still
         # needs them (rewritten partitions had theirs applied above)
-        return self._commit(keep + new_files, clock,
-                            delete_files=self._prune_entries(entries, keep),
-                            operation="replace")
+        return self._commit(snap, added=new_files, removed=rewritten,
+                            operation="replace", clock=clock)
 
     def merge_into(
         self,
@@ -2981,23 +2997,22 @@ class ParquetMaintainedTable:
             .collect()  # ≤ one row per data file — metadata-sized
         }
         hit = [f for f in target_files if _canon(f) in hit_set]
-        untouched = [f for f in target_files if _canon(f) not in hit_set]
 
         new_files: list[str] = []
         cols = self._read_files(target_files).columns if target_files else src.columns
         if hit:
-            survivors = self._read_effective(hit, entries).join(
-                src.select(on), on, "left_anti"
-            )
+            hit_rows = self._read_effective(hit, entries,
+                                            with_lineage=True).drop(_POS)
+            survivors = hit_rows.join(src.select(on), on, "left_anti")
             if when_matched == "update":
+                # an updated row takes the lineage of a file its key
+                # lived in, so it is written beside that file's rows
                 survivors = survivors.unionByName(
-                    self._read_effective(hit, entries)
-                    .select(on)
-                    .distinct()
+                    hit_rows.groupBy(*on).agg(F.min(_FP).alias(_FP))
                     .join(src, on, "inner")
-                    .select(cols)
+                    .select(*cols, _FP)
                 )
-            new_files.extend(self._write_data(survivors, num_files=len(hit)))
+            new_files.extend(self._write_rewrite(survivors, len(hit)))
         if insert_not_matched:
             existing_keys = (
                 self._read_effective(target_files, entries)
@@ -3014,11 +3029,9 @@ class ParquetMaintainedTable:
                 new_files.extend(
                     self._write_data(inserts.select(cols), num_files=1)
                 )
-        return self._commit(untouched + new_files, clock,
-                            delete_files=self._prune_entries(entries,
-                                                             untouched),
-                            operation="overwrite",
-                            properties=properties)
+        return self._commit(snap, added=new_files, removed=hit,
+                            operation="overwrite", properties=properties,
+                            clock=clock)
 
     def snapshot_diff(
         self, from_snapshot_id: int, to_snapshot_id: int
@@ -3144,27 +3157,28 @@ class ParquetMaintainedTable:
         ``expire_snapshots`` run removes refs older than their age
         budget FIRST (Iceberg's ``max-ref-age-ms``), after which the
         snapshot is expirable like any other."""
-        snaps = {s.snapshot_id for s in self._load_manifest()}
-        if snapshot_id is None:
-            cur = self.current_snapshot()
-            if cur is None:
-                raise ValueError(f"table {self.path} has no snapshots")
-            snapshot_id = cur.snapshot_id
-        if snapshot_id not in snaps:
-            raise ValueError(f"unknown snapshot {snapshot_id}")
-        meta = self._load_meta()
-        if max_ref_age_days is None:
-            # legacy plain-int encoding — older tables stay readable
-            meta.setdefault("tags", {})[name] = snapshot_id
-        else:
-            now = (clock or _utcnow)()
-            meta.setdefault("tags", {})[name] = {
-                "snapshot_id": snapshot_id,
-                "created_at": now.isoformat(sep=" "),
-                "max_ref_age_days": int(max_ref_age_days),
-            }
-        self._save_meta(meta)
-        return snapshot_id
+        with self._lock:
+            snaps = {s.snapshot_id for s in self._load_manifest()}
+            if snapshot_id is None:
+                cur = self.current_snapshot()
+                if cur is None:
+                    raise ValueError(f"table {self.path} has no snapshots")
+                snapshot_id = cur.snapshot_id
+            if snapshot_id not in snaps:
+                raise ValueError(f"unknown snapshot {snapshot_id}")
+            meta = self._load_meta()
+            if max_ref_age_days is None:
+                # legacy plain-int encoding — older tables stay readable
+                meta.setdefault("tags", {})[name] = snapshot_id
+            else:
+                now = (clock or _utcnow)()
+                meta.setdefault("tags", {})[name] = {
+                    "snapshot_id": snapshot_id,
+                    "created_at": now.isoformat(sep=" "),
+                    "max_ref_age_days": int(max_ref_age_days),
+                }
+            self._save_meta(meta)
+            return snapshot_id
 
     @staticmethod
     def _tag_snapshot_id(entry) -> int:
@@ -3197,11 +3211,12 @@ class ParquetMaintainedTable:
         return removed
 
     def drop_tag(self, name: str) -> None:
-        meta = self._load_meta()
-        if name not in meta.get("tags", {}):
-            raise ValueError(f"unknown tag {name}")
-        del meta["tags"][name]
-        self._save_meta(meta)
+        with self._lock:
+            meta = self._load_meta()
+            if name not in meta.get("tags", {}):
+                raise ValueError(f"unknown tag {name}")
+            del meta["tags"][name]
+            self._save_meta(meta)
 
     def read_tag(self, name: str) -> DataFrame:
         """Read the table as of a tag — time travel by name."""
@@ -3224,198 +3239,18 @@ class ParquetMaintainedTable:
             raise ValueError(
                 f"snapshot {snapshot_id} not found in {self.path}"
             )
-        return self._commit(list(targets[0].files), clock,
-                            delete_files=targets[0].delete_files,
-                            operation="rollback")
-
-    def cherrypick_snapshot(self, snapshot_id: int, clock=None) -> Snapshot:
-        """Iceberg's ``cherrypick_snapshot`` procedure: apply the file
-        CHANGES of ``snapshot_id`` (typically a staged branch append —
-        the write-audit-publish audit branch) onto the CURRENT main
-        head as a new commit. The original snapshot is left untouched
-        in the log; history stays linear and append-only.
-
-        Like Iceberg, only append-shaped snapshots qualify: a snapshot
-        that removed files or added delete files relative to its
-        parent is rejected (its changes are not context-free).
-        Re-picking an already-published snapshot is a no-op returning
-        the current head (Iceberg's wap.id idempotence).
-
-        Sequence-number caveat, documented divergence: this format
-        stamps a file's data sequence number at its FIRST commit (the
-        staging append), while Iceberg re-stamps at publish. Pending
-        equality deletes committed AFTER the staging snapshot would
-        therefore apply to the cherry-picked rows here but not in
-        Iceberg — so that case is rejected outright (compact or purge
-        the delete files, then cherry-pick).
-
-        The append DELTA requires the staging parent's ORIGINAL file
-        set: if expire_snapshots dropped the parent, lineage
-        contraction re-parents the snapshot onto the nearest retained
-        ANCESTOR (stamping ``contracted-from-parent`` in its
-        properties) — a delta against that ancestor would absorb the
-        dropped intermediates' file additions and silently duplicate
-        their rows, so any contraction-marked snapshot is REFUSED
-        (re-stage the batch instead). Parent ``None`` without the
-        marker is accepted only for a genuine root: snapshot id 1,
-        the only id a first-ever commit can carry. The idempotence
-        check runs BEFORE the derivability checks — replaying an
-        already-published pick is a no-op even after its staging
-        parent expired (the delta is not needed on replay)."""
-        log = self._load_manifest()
-        snaps = {s.snapshot_id: s for s in log}
-        if snapshot_id not in snaps:
-            raise ValueError(
-                f"snapshot {snapshot_id} not found in {self.path}"
-            )
-        cur = self.current_snapshot()
-        # idempotence, Iceberg-style — FIRST, before derivability: a
-        # prior pick is recognized by the source-snapshot-id property
-        # it committed with. This survives head rewrites (optimize
-        # moves the rows into new files, so the file-presence check
-        # below would stop seeing them) AND staging-parent expiry (a
-        # replay needs no delta). Bounded like Iceberg's wap.id dedup:
-        # the marker lives in the snapshot log, so expiring the pick
-        # commit AND rewriting the head makes a replay undetectable.
-        for s in log:
-            if (s.properties or {}).get("source-snapshot-id") == str(
-                snapshot_id
-            ):
-                return cur
-        target = snaps[snapshot_id]
-        if (target.properties or {}).get("contracted-from-parent"):
-            raise ValueError(
-                f"snapshot {snapshot_id}'s staging parent was expired "
-                "(lineage contraction re-parented it onto snapshot "
-                f"{target.parent_id}) — a delta against the ancestor "
-                "would absorb the dropped intermediates' changes; "
-                "re-stage the batch instead"
-            )
-        if target.parent_id is not None and target.parent_id not in snaps:
-            raise ValueError(
-                f"snapshot {snapshot_id}'s staging parent "
-                f"{target.parent_id} was expired — the append delta is "
-                "no longer derivable; re-stage the batch instead"
-            )
-        if target.parent_id is None and target.snapshot_id != 1:
-            raise ValueError(
-                f"snapshot {snapshot_id} has no resolvable parent "
-                "(expired by lineage contraction?) and is not the "
-                "table's root — refusing an underivable cherry-pick"
-            )
-        parent = (snaps.get(target.parent_id)
-                  if target.parent_id is not None else None)
-        parent_files = set(parent.files) if parent else set()
-        parent_deletes = ({json.dumps(e, sort_keys=True)
-                           for e in (parent.delete_files or [])}
-                          if parent else set())
-        target_deletes = {json.dumps(e, sort_keys=True)
-                          for e in (target.delete_files or [])}
-        added = [f for f in target.files if f not in parent_files]
-        removed = parent_files - set(target.files)
-        if removed or (target_deletes - parent_deletes):
-            raise ValueError(
-                f"snapshot {snapshot_id} is not append-shaped "
-                "(it removes files or adds delete files); only append "
-                "snapshots can be cherry-picked"
-            )
-        cur_files = set(cur.files) if cur else set()
-        already = [f for f in added if f in cur_files]
-        if added and len(already) == len(added):
-            return cur  # already published — idempotent no-op
-        if already:
-            raise ValueError(
-                f"snapshot {snapshot_id} is partially applied to the "
-                f"current state ({len(already)}/{len(added)} files) — "
-                "refusing an ambiguous cherry-pick"
-            )
-        stale_deletes = [
-            e for e in ((cur.delete_files or []) if cur else [])
-            if e.get("seq", 0) > snapshot_id
-        ]
-        if stale_deletes:
-            raise ValueError(
-                "current head carries delete files newer than the "
-                f"staged snapshot {snapshot_id}; they would re-scope "
-                "onto the cherry-picked rows (Iceberg re-stamps "
-                "sequence numbers at publish, this format does not) — "
-                "compact_delete_files()/purge_deletes() first"
-            )
+        to, cur = targets[0], self.current_snapshot()
+        files, entries = set(cur.files), list(cur.delete_files or [])
+        paths = {e["path"] for e in entries}
+        to_entries = list(to.delete_files or [])
+        to_paths = {e["path"] for e in to_entries}
         return self._commit(
-            (list(cur.files) if cur else []) + added, clock,
-            delete_files=(cur.delete_files if cur else None),
-            operation="cherrypick",
-            properties={"source-snapshot-id": str(snapshot_id)},
+            cur, added=[f for f in to.files if f not in files],
+            removed=files - set(to.files),
+            add_deletes=[e for e in to_entries if e["path"] not in paths],
+            remove_deletes=[e for e in entries if e["path"] not in to_paths],
+            operation="rollback", clock=clock,
         )
-
-    def write_audit_publish(
-        self,
-        df: DataFrame,
-        rules: list[tuple[str, object]],
-        clock=None,
-    ) -> dict:
-        """Iceberg's write-audit-publish workflow on this table
-        format: STAGE the append's data files without committing,
-        AUDIT the candidate table state (current ∪ staged), PUBLISH
-        the snapshot only when every rule reports zero violations —
-        otherwise delete the staged files and leave the table's
-        visible state untouched.
-
-        ``rules`` is ``[(name, violation_condition)]`` — each
-        condition a boolean Column evaluated per row of the candidate
-        state; all rules fold into ONE aggregation pass (adding a rule
-        adds an expression, not a scan — the plans/audit.py shape).
-        Returns ``{"published": bool, "snapshot_id": id | None,
-        "violations": {rule: n}}``."""
-        # schema evolution must be reversible: a rejected batch may not
-        # leave its new columns in the tracked schema
-        prev_meta = self._load_meta()
-        cur = self.current_snapshot()
-        cur_entries = list(cur.delete_files or []) if cur else []
-        self._evolve_schema(df.schema)
-        staged = self._write_data(df)
-        candidate_files = self.current_files() + staged
-        counts: dict[str, int] = {}
-        if rules:
-            # staged files are newer than every pending delete entry
-            # (no sequence number yet → never filtered), so applying
-            # the current entries to the union audits exactly the state
-            # a publish would make visible
-            candidate = self._read_effective(candidate_files, cur_entries)
-            agg = candidate.agg(
-                *[
-                    F.sum(F.when(cond, 1).otherwise(0))
-                    .cast("bigint")
-                    .alias(name)
-                    for name, cond in rules
-                ]
-            )
-            # sum() over zero rows is NULL — an empty candidate state
-            # has zero violations by definition
-            counts = {
-                k: int(v or 0) for k, v in agg.first().asDict().items()
-            }
-        if all(v == 0 for v in counts.values()):
-            snap = self._commit(candidate_files, clock,
-                                delete_files=cur_entries or None)
-            return {
-                "published": True,
-                "snapshot_id": snap.snapshot_id,
-                "violations": counts,
-            }
-        # reject: remove the staged snap dir(s) wholesale (markers and
-        # crc files included — bare os.remove of *.parquet would leak
-        # a directory no GC path can ever reclaim) and restore the
-        # pre-evolution tracked schema
-        for snap_dir in {
-            os.path.join(
-                self.data_dir, os.path.relpath(f, self.data_dir).split(os.sep)[0]
-            )
-            for f in staged
-        }:
-            shutil.rmtree(snap_dir, ignore_errors=True)
-        self._save_meta(prev_meta)
-        return {"published": False, "snapshot_id": None, "violations": counts}
 
     def create_branch(self, name: str, snapshot_id: int | None = None) -> int:
         """Create a named branch ref (Iceberg branch semantics) at
@@ -3423,36 +3258,38 @@ class ParquetMaintainedTable:
         with ``append(..., branch=name)`` advance only this ref; main
         readers never see them until :meth:`fast_forward` publishes
         the branch — the audit-branch half of write-audit-publish."""
-        snaps = {s.snapshot_id for s in self._load_manifest()}
-        if snapshot_id is None:
-            cur = self.current_snapshot()
-            if cur is None:
-                raise ValueError("cannot branch an empty table")
-            snapshot_id = cur.snapshot_id
-        if snapshot_id not in snaps:
-            raise ValueError(f"snapshot {snapshot_id} not found")
-        meta = self._load_meta()
-        branches = meta.setdefault("branches", {})
-        if "main" not in branches:
-            # pin main explicitly the moment refs exist — branch
-            # commits append to the shared snapshot log, so the
-            # log-tail-is-current fallback would follow them
-            branches["main"] = self.current_snapshot().snapshot_id
-        branches[name] = snapshot_id
-        self._save_meta(meta)
-        return snapshot_id
+        with self._lock:
+            snaps = {s.snapshot_id for s in self._load_manifest()}
+            if snapshot_id is None:
+                cur = self.current_snapshot()
+                if cur is None:
+                    raise ValueError("cannot branch an empty table")
+                snapshot_id = cur.snapshot_id
+            if snapshot_id not in snaps:
+                raise ValueError(f"snapshot {snapshot_id} not found")
+            meta = self._load_meta()
+            branches = meta.setdefault("branches", {})
+            if "main" not in branches:
+                # pin main explicitly the moment refs exist — branch
+                # commits append to the shared snapshot log, so the
+                # log-tail-is-current fallback would follow them
+                branches["main"] = self.current_snapshot().snapshot_id
+            branches[name] = snapshot_id
+            self._save_meta(meta)
+            return snapshot_id
 
     def branches(self) -> dict[str, int]:
         return dict(self._load_meta().get("branches", {}))
 
     def drop_branch(self, name: str) -> None:
-        if name == "main":
-            raise ValueError("cannot drop main")
-        meta = self._load_meta()
-        if name not in meta.get("branches", {}):
-            raise ValueError(f"branch {name} not found")
-        meta["branches"].pop(name)
-        self._save_meta(meta)
+        with self._lock:
+            if name == "main":
+                raise ValueError("cannot drop main")
+            meta = self._load_meta()
+            if name not in meta.get("branches", {}):
+                raise ValueError(f"branch {name} not found")
+            meta["branches"].pop(name)
+            self._save_meta(meta)
 
     def _branch_snapshot(self, name: str) -> Snapshot | None:
         head = self.branches().get(name)
@@ -3464,10 +3301,6 @@ class ParquetMaintainedTable:
             if snap.snapshot_id == head:
                 return snap
         raise ValueError(f"branch {name} points at missing snapshot {head}")
-
-    def _branch_files(self, name: str) -> list[str]:
-        snap = self._branch_snapshot(name)
-        return list(snap.files) if snap else []
 
     def read_branch(self, name: str) -> DataFrame:
         snap = self._branch_snapshot(name)
@@ -3483,34 +3316,35 @@ class ParquetMaintainedTable:
         (walked over the snapshots' parent pointers), exactly
         Iceberg's 'not an ancestor' error — silently moving main
         backward would hide published commits."""
-        head = self.branches().get(from_branch)
-        if head is None:
-            raise ValueError(f"branch {from_branch} not found")
-        to_head = self.branches().get(to_branch)
-        if to_head is None and to_branch == "main":
-            cur = self.current_snapshot()
-            to_head = cur.snapshot_id if cur else None
-        if to_head is not None:
-            parents = {s.snapshot_id: s.parent_id
-                       for s in self._load_manifest()}
-            node: int | None = head
-            seen = set()
-            while node is not None and node not in seen:
-                if node == to_head:
-                    break
-                seen.add(node)
-                node = parents.get(node)
-            else:
-                node = None
-            if node != to_head:
-                raise ValueError(
-                    f"cannot fast-forward: {to_branch} (head {to_head}) is "
-                    f"not an ancestor of {from_branch} (head {head})"
-                )
-        meta = self._load_meta()
-        meta.setdefault("branches", {})[to_branch] = head
-        self._save_meta(meta)
-        return head
+        with self._lock:
+            head = self.branches().get(from_branch)
+            if head is None:
+                raise ValueError(f"branch {from_branch} not found")
+            to_head = self.branches().get(to_branch)
+            if to_head is None and to_branch == "main":
+                cur = self.current_snapshot()
+                to_head = cur.snapshot_id if cur else None
+            if to_head is not None:
+                parents = {s.snapshot_id: s.parent_id
+                           for s in self._load_manifest()}
+                node: int | None = head
+                seen = set()
+                while node is not None and node not in seen:
+                    if node == to_head:
+                        break
+                    seen.add(node)
+                    node = parents.get(node)
+                else:
+                    node = None
+                if node != to_head:
+                    raise ValueError(
+                        f"cannot fast-forward: {to_branch} (head {to_head}) is "
+                        f"not an ancestor of {from_branch} (head {head})"
+                    )
+            meta = self._load_meta()
+            meta.setdefault("branches", {})[to_branch] = head
+            self._save_meta(meta)
+            return head
 
     def expire_snapshots(
         self,
@@ -3522,74 +3356,73 @@ class ParquetMaintainedTable:
         keeping the ``retain_last`` newest AND every tagged OR
         branch-referenced snapshot), then delete files only referenced
         by dropped snapshots. Returns deleted files."""
-        snaps = self._load_manifest()
-        if not snaps:
-            return []
-        # age-expired tag refs fall first (Iceberg max-ref-age), so
-        # the snapshots they pinned become expirable in the same run
-        self._sweep_expired_tags((clock or _utcnow)())
-        tagged = set(self.tags().values()) | set(self.branches().values())
-        keep, drop = [], []
-        for i, s in enumerate(snaps):
-            is_recent = i >= len(snaps) - retain_last
-            if (
-                is_recent
-                or s.snapshot_id in tagged
-                or dt.datetime.fromisoformat(s.committed_at) >= older_than
-            ):
-                keep.append(s)
-            else:
-                drop.append(s)
-        if not drop:
-            return []
-        # lineage contraction: re-parent each retained snapshot onto
-        # its nearest retained ancestor, so dropping intermediate
-        # snapshots preserves the ancestry RELATION (fast_forward's
-        # ancestor walk must keep working across expiry)
-        kept_ids = {s.snapshot_id for s in keep}
-        parent_of = {s.snapshot_id: s.parent_id for s in snaps}
-        for s in keep:
-            p = s.parent_id
-            seen: set[int] = set()
-            while p is not None and p not in kept_ids and p not in seen:
-                seen.add(p)
-                p = parent_of.get(p)
-            if p != s.parent_id:
-                # stamp the ORIGINAL pointer: the new parent is an
-                # ancestor, not the staging base, so file DELTAS vs
-                # the new parent absorb the dropped intermediates'
-                # changes — cherrypick_snapshot must refuse such
-                # snapshots, and only this marker can tell them apart
-                # from genuinely parent-intact ones
-                props = dict(s.properties or {})
-                props.setdefault(
-                    "contracted-from-parent", str(s.parent_id)
-                )
-                s.properties = props
-            s.parent_id = p
-        def _refs(s: Snapshot) -> set[str]:
-            return set(s.files) | {
-                e["path"] for e in (s.delete_files or [])
-            }
+        with self._lock:
+            snaps = self._load_manifest()
+            if not snaps:
+                return []
+            # age-expired tag refs fall first (Iceberg max-ref-age), so
+            # the snapshots they pinned become expirable in the same run
+            self._sweep_expired_tags((clock or _utcnow)())
+            tagged = set(self.tags().values()) | set(self.branches().values())
+            keep, drop = [], []
+            for i, s in enumerate(snaps):
+                is_recent = i >= len(snaps) - retain_last
+                if (
+                    is_recent
+                    or s.snapshot_id in tagged
+                    or dt.datetime.fromisoformat(s.committed_at) >= older_than
+                ):
+                    keep.append(s)
+                else:
+                    drop.append(s)
+            if not drop:
+                return []
+            # lineage contraction: re-parent each retained snapshot onto
+            # its nearest retained ancestor, so dropping intermediate
+            # snapshots preserves the ancestry RELATION (fast_forward's
+            # ancestor walk must keep working across expiry)
+            kept_ids = {s.snapshot_id for s in keep}
+            parent_of = {s.snapshot_id: s.parent_id for s in snaps}
+            for s in keep:
+                p = s.parent_id
+                seen: set[int] = set()
+                while p is not None and p not in kept_ids and p not in seen:
+                    seen.add(p)
+                    p = parent_of.get(p)
+                s.parent_id = p
+            def _refs(s: Snapshot) -> set[str]:
+                return set(s.files) | {
+                    e["path"] for e in (s.delete_files or [])
+                }
 
-        surviving = {f for s in keep for f in _refs(s)}
-        doomed = sorted({f for s in drop for f in _refs(s)} - surviving)
-        self._write_manifest(keep)
-        # data sequence numbers of GC'd files leave the persistent map
-        # (it stays metadata-sized: one entry per LIVE file)
-        meta = self._load_meta()
-        seq = meta.get("file_seq", {})
-        sizes = meta.get("file_sizes", {})
-        doomed_canon = {_canon(f) for f in doomed}
-        gone = doomed_canon & (set(seq) | set(sizes))
-        if gone:
-            meta["file_seq"] = {
-                p: s for p, s in seq.items() if p not in gone
-            }
-            meta["file_sizes"] = {
-                p: s for p, s in sizes.items() if p not in gone
-            }
-            self._save_meta(meta)
+            surviving = {f for s in keep for f in _refs(s)}
+            doomed = sorted({f for s in drop for f in _refs(s)} - surviving)
+            # a file the log holds but the map lacks (a crash between
+            # _commit's journal line and its _table.json write) takes its
+            # sequence number from the log NOW, while the log still holds
+            # the snapshot that added it
+            meta = self._load_meta()
+            seq = meta.setdefault("file_seq", {})
+            known = len(seq)
+            for s in snaps:
+                for f in s.files:
+                    seq.setdefault(_canon(f), s.snapshot_id)
+            if len(seq) > known:
+                self._save_meta(meta)
+            self._write_manifest(keep)
+            # data sequence numbers of GC'd files leave the persistent map
+            # (it stays metadata-sized: one entry per LIVE file)
+            sizes = meta.get("file_sizes", {})
+            doomed_canon = {_canon(f) for f in doomed}
+            gone = doomed_canon & (set(seq) | set(sizes))
+            if gone:
+                meta["file_seq"] = {
+                    p: s for p, s in seq.items() if p not in gone
+                }
+                meta["file_sizes"] = {
+                    p: s for p, s in sizes.items() if p not in gone
+                }
+                self._save_meta(meta)
         removed = []
         for f in doomed:
             if os.path.exists(f):

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import threading
 import uuid
 
 import pyarrow as pa
@@ -35,6 +34,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from trino_iceberg_maintenance_spark.sources.locks import DirLock, dir_lock
 from trino_iceberg_maintenance_spark.sources.tables import (
     arrow_table,
     conform,
@@ -283,18 +283,12 @@ def write_rows(path: str, rows: list, schema: T.StructType) -> None:
     _replace(path, arrow_table(rows, schema))
 
 
-_locks: dict[str, threading.RLock] = {}
-_locks_guard = threading.Lock()
-
-
-def schedule_lock(path: str) -> threading.RLock:
-    """The process lock of the schedule at ``path``: one per path, so
-    every writer of one schedule in this process — stamps, whole-table
-    rewrites, the orchestrator's sibling relations — serializes on it.
-    Like the reference's RLock (__main__.py:18) it does not reach other
-    processes."""
-    with _locks_guard:
-        return _locks.setdefault(os.path.abspath(path), threading.RLock())
+def schedule_lock(path: str) -> DirLock:
+    """The lock of the schedule at ``path`` (``sources.locks.dir_lock``):
+    every writer of one schedule — stamps, whole-table rewrites, the
+    orchestrator's sibling relations — serializes on it, in this
+    process and across processes."""
+    return dir_lock(path)
 
 
 def stamp(path: str, table_name: str, column: str, value) -> None:
