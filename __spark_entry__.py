@@ -1393,7 +1393,7 @@ def _scd2_tier_orders(spark, sf_dir):
 
 def _event_dedup_within(spark, sf_dir):
     """Debounce dedup: drop same-(user,type) events within 5 minutes
-    of the previous occurrence — batch twin of the streaming dedup."""
+    of the previous occurrence."""
     from trino_iceberg_maintenance_spark.operators.events import (
         event_dedup_within,
     )

@@ -114,21 +114,6 @@ def test_lsh_recall_vs_bruteforce(spark):
     assert recall >= 0.5, f"LSH recall too low: {recall}"
 
 
-def test_maintenance_loop_trigger(spark, tmp_path):
-    """The cron loop as a streaming trigger: availableNow runs exactly
-    one sweep through foreachBatch and terminates."""
-    from trino_iceberg_maintenance_spark.streaming.maintenance_loop import (
-        maintenance_stream,
-    )
-
-    sweeps: list[int] = []
-    q = maintenance_stream(
-        spark, sweeps.append, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(60)
-    assert len(sweeps) >= 1
-
-
 def test_multimodal_feature_extraction(spark):
     """Arrow-batched mapInPandas path: schema contract, deterministic
     features, binary column consumed and dropped."""
@@ -558,107 +543,6 @@ def test_resize_plumbing(spark):
         assert r["payload"] is not None
 
 
-def test_stateful_dedup_stream(spark, tmp_path):
-    """applyInPandasWithState dedup: a replayed (duplicated) backlog
-    file emits each event exactly once — parity with batch
-    dropDuplicates."""
-    import shutil
-
-    from trino_iceberg_maintenance_spark.operators.events import load_events
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        read_events_stream,
-        run_available_now,
-        stateful_dedup_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "dedup_landing"
-    landing.mkdir()
-    # same file twice: every event arrives as a duplicate in batch 2
-    shutil.copy(f"{sf_dir}/events.parquet", landing / "events-000.parquet")
-    shutil.copy(f"{sf_dir}/events.parquet", landing / "events-001.parquet")
-
-    deduped = stateful_dedup_stream(read_events_stream(spark, str(landing)))
-    result = run_available_now(deduped, "stateful_dedup_test", output_mode="append")
-    got = sorted(r["event_id"] for r in result.select("event_id").collect())
-    want = sorted(
-        r["event_id"]
-        for r in load_events(spark, sf_dir).select("event_id").distinct().collect()
-    )
-    assert got == want
-
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state-server protocol needs protobuf "
-    "(not in this container); operator gated per environment rules",
-)
-def test_stateful_dedup_tws(spark, tmp_path):
-    """transformWithStateInPandas dedup (ListState seen-ids): same
-    exactly-once contract as the applyInPandasWithState operator on a
-    replayed backlog — batch dropDuplicates parity."""
-    import shutil
-
-    from trino_iceberg_maintenance_spark.operators.events import load_events
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        read_events_stream,
-        rocksdb_state_store,
-        run_available_now,
-        stateful_dedup_tws,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "tws_landing"
-    landing.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", landing / "events-000.parquet")
-    shutil.copy(f"{sf_dir}/events.parquet", landing / "events-001.parquet")
-
-    with rocksdb_state_store(spark):
-        deduped = stateful_dedup_tws(read_events_stream(spark, str(landing)))
-        result = run_available_now(
-            deduped, "tws_dedup_test", output_mode="append"
-        )
-    got = sorted(r["event_id"] for r in result.select("event_id").collect())
-    want = sorted(
-        r["event_id"]
-        for r in load_events(spark, sf_dir).select("event_id").distinct().collect()
-    )
-    assert got == want
-
-def test_rocksdb_state_store_scoped(spark, tmp_path):
-    """stateful_dedup_tws must not silently flip the session-wide
-    state-store provider (r1 ADVICE): outside the context manager it
-    fails fast, inside it the provider is set, and on exit the prior
-    value is restored for later queries."""
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        read_events_stream,
-        rocksdb_state_store,
-        stateful_dedup_tws,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
-    assert "RocksDB" not in (prior or "")
-
-    stream = read_events_stream(spark, str(tmp_path))
-    with pytest.raises(RuntimeError, match="rocksdb_state_store"):
-        stateful_dedup_tws(stream)
-
-    with rocksdb_state_store(spark):
-        assert "RocksDBStateStoreProvider" in spark.conf.get(key)
-    assert spark.conf.get(key, None) == prior
-
-
 def test_trailing_spend_day_boundary_semantics(spark, tmp_path):
     """order_day must count day-BOUNDARY crossings (datediff on DATE),
     not complete 24h periods: a 23:00 order on Jan 2 is day 1, same as
@@ -687,208 +571,6 @@ def test_trailing_spend_day_boundary_semantics(spark, tmp_path):
     }
     assert out[1][0] == 1 and out[2][0] == 1 and out[3][0] == 2
     assert out[3][1] == 70.0  # all three inside the trailing window
-
-
-def test_watermark_drops_late_data(spark, tmp_path):
-    """Late-data contract: with a 1-hour watermark in append mode, an
-    event arriving in a later micro-batch for a window already
-    finalized by the watermark is dropped deterministically."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        read_events_stream,
-        run_available_now,
-        windowed_counts_stream,
-    )
-
-    landing = tmp_path / "late_landing"
-    landing.mkdir()
-
-    def write_events(name, rows, mtime):
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type", "value"]
-        )
-        pdf["props"] = "{}"
-        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[ns]")
-        path = landing / name
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-        # file streams order batches by modification time — pin it so
-        # the straggler file definitely arrives in a LATER micro-batch
-        import os
-
-        os.utime(path, (mtime, mtime))
-
-    ckpt = str(tmp_path / "late_ckpt")
-
-    def run(n):
-        stream = windowed_counts_stream(
-            read_events_stream(spark, str(landing)), watermark="1 hour"
-        )
-        rows = []
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, _bid: rows.extend(df.collect())
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        return {str(r["window_start"]): r["n_events"] for r in rows}
-
-    # run 1: events up to 12:10 → checkpointed watermark ≈ 11:10;
-    # the [10:00,11:00) window finalizes and emits
-    write_events(
-        "events-000.parquet",
-        [
-            (1, "2024-01-01 10:05:00", 1, "click", 1.0),
-            (2, "2024-01-01 12:10:00", 1, "click", 1.0),
-        ],
-        mtime=1_000_000,
-    )
-    got1 = run(1)
-    assert got1.get("2024-01-01 10:00:00") == 1
-
-    # run 2 (same checkpoint): an 08:30 straggler for a window long
-    # finalized by the restored watermark must be dropped
-    write_events(
-        "events-001.parquet",
-        [
-            (3, "2024-01-01 08:30:00", 1, "click", 1.0),
-            (4, "2024-01-01 12:20:00", 1, "click", 1.0),
-        ],
-        mtime=2_000_000,
-    )
-    got2 = run(2)
-    assert "2024-01-01 08:00:00" not in got1
-    assert "2024-01-01 08:00:00" not in got2
-
-
-def test_stream_matches_batch(spark, tmp_path):
-    """availableNow replay of the events backlog produces exactly the
-    batch window aggregation (batch/stream parity contract)."""
-    from trino_iceberg_maintenance_spark.operators.events import (
-        load_events,
-        tumbling_counts,
-    )
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        read_events_stream,
-        run_available_now,
-        windowed_counts_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in tumbling_counts(load_events(spark, sf_dir)).collect()
-    }
-    # file streams read directories — stage the backlog as a landing dir
-    import shutil
-
-    landing = tmp_path / "events_landing"
-    landing.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", landing / "events-000.parquet")
-    stream_df = windowed_counts_stream(
-        read_events_stream(spark, str(landing)),
-        watermark="365 days",  # replay: keep all state
-    )
-    result = run_available_now(stream_df, "stream_parity_test")
-    streamed = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in result.collect()
-    }
-    assert streamed == batch
-
-
-def test_stream_stream_join_matches_batch(spark, tmp_path):
-    """availableNow replay of the watermarked STREAM-STREAM click→
-    purchase join reproduces the batch attribution join exactly —
-    even with the backlog split across micro-batches (maxFilesPerTrigger
-    = 1 forces cross-batch join state to do real work)."""
-    import shutil
-
-    from trino_iceberg_maintenance_spark.operators.events import (
-        click_attribution,
-        load_events,
-    )
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        click_purchase_join_stream,
-        read_events_stream,
-        run_available_now,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    batch = {
-        (r["purchase_id"], r["click_id"])
-        for r in click_attribution(load_events(spark, sf_dir)).collect()
-    }
-    assert batch, "test data must produce at least one attribution pair"
-
-    landing = tmp_path / "ssj_landing"
-    landing.mkdir()
-    # split the backlog in two so maxFilesPerTrigger=1 yields two
-    # micro-batches: pairs straddling the split only match if join
-    # state survives across batches
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(f"{sf_dir}/events.parquet")
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "events-000.parquet")
-    pq.write_table(tbl.slice(half), landing / "events-001.parquet")
-    stream_df = click_purchase_join_stream(
-        read_events_stream(spark, str(landing)), watermark="365 days"
-    )
-    result = run_available_now(stream_df, "ssj_test", output_mode="append")
-    streamed = {
-        (r["purchase_id"], r["click_id"]) for r in result.collect()
-    }
-    assert streamed == batch
-
-
-def test_jsonl_roundtrip_nested(spark, tmp_path):
-    """JSONL round-trips the full typed schema — including the
-    array<float> embedding column and µs TIMESTAMP_NTZ — with an
-    explicit schema (zero inference jobs)."""
-    from trino_iceberg_maintenance_spark.sources.formats import (
-        ntz_schema,
-        read_jsonl,
-        roundtrip_check,
-        write_jsonl,
-    )
-
-    for table in ["embeddings", "events"]:
-        df = load_table(spark, "/root/testdata/sf0.001", table)
-        path = str(tmp_path / f"{table}_jsonl")
-        write_jsonl(df, path)
-        back = read_jsonl(spark, path, ntz_schema(df))
-        assert roundtrip_check(df, back), table
-
-
-def test_csv_roundtrip_flat_and_rejects_nested(spark, tmp_path):
-    """CSV round-trips flat tables (quoted newlines in documents.text
-    included) and refuses nested schemas loudly."""
-    import pytest as _pytest
-
-    from trino_iceberg_maintenance_spark.sources.formats import (
-        ntz_schema,
-        read_csv,
-        roundtrip_check,
-        write_csv,
-    )
-
-    for table in ["orders", "documents"]:
-        df = load_table(spark, "/root/testdata/sf0.001", table)
-        path = str(tmp_path / f"{table}_csv")
-        write_csv(df, path)
-        back = read_csv(spark, path, ntz_schema(df))
-        assert roundtrip_check(df, back), table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    with _pytest.raises(TypeError, match="JSONL for nested"):
-        write_csv(emb, str(tmp_path / "emb_csv"))
 
 
 def test_functions_surface(spark):
@@ -943,79 +625,6 @@ def test_simhash_banding_has_perfect_recall(spark):
         for r in simhash_near_dups(docs, max_hamming=3, n_bands=4).collect()
     }
     assert got == want
-
-
-def test_stream_into_lake_table(spark, tmp_path):
-    """foreachBatch streaming ingestion into the maintained table:
-    each micro-batch commits a snapshot, maintenance (compaction +
-    CDC diff) then applies to the streamed data, and re-running the
-    drained stream (same checkpoint) appends NOTHING — the
-    exactly-once restart contract."""
-    import shutil
-
-    from trino_iceberg_maintenance_spark.sources.lake import ParquetMaintainedTable
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        read_events_stream,
-        stream_into_table,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "ingest_landing"
-    landing.mkdir()
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(f"{sf_dir}/events.parquet")
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "events-000.parquet")
-    pq.write_table(tbl.slice(half), landing / "events-001.parquet")
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "ingested"))
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_into_table(
-        read_events_stream(spark, str(landing)), t, ckpt, "ingest_test"
-    )
-    q.awaitTermination()
-
-    # two micro-batches (maxFilesPerTrigger=1) -> two snapshots
-    snaps = [s.snapshot_id for s in t._load_manifest()]
-    assert len(snaps) == 2
-    assert t.read().count() == tbl.num_rows
-
-    # the small-file tail compacts; CDC between ingest snapshots works
-    t.optimize()
-    assert t.file_count() == 1
-    diff = t.snapshot_diff(snaps[0], snaps[1])
-    assert diff.where("_change_type = 'insert'").count() == tbl.num_rows - half
-
-    # restart over the drained checkpoint: no new snapshots
-    q2 = stream_into_table(
-        read_events_stream(spark, str(landing)), t, ckpt, "ingest_test2"
-    )
-    q2.awaitTermination()
-    assert t.read().count() == tbl.num_rows
-
-
-def test_orc_roundtrip_nested(spark, tmp_path):
-    """ORC read/write round-trip including nested types (built-in
-    format, no extra jar) — the columnar alternative landing format."""
-    from trino_iceberg_maintenance_spark.sources.formats import (
-        read_orc,
-        write_orc,
-    )
-
-    df = spark.createDataFrame(
-        [(1, ["a", "b"], {"k": 1}, ("x", 2.5)), (2, [], {}, ("y", -1.0))],
-        "id long, tags array<string>, counts map<string,int>, "
-        "meta struct<name:string, score:double>",
-    )
-    path = str(tmp_path / "orc_rt")
-    write_orc(df, path, num_files=1)
-    back = read_orc(spark, path)
-    assert back.schema == df.schema
-    assert sorted(r["id"] for r in back.collect()) == [1, 2]
-    got = {r["id"]: (r["tags"], dict(r["counts"]), tuple(r["meta"]))
-           for r in back.collect()}
-    assert got[1] == (["a", "b"], {"k": 1}, ("x", 2.5))
 
 
 def test_quality_audit_detects_planted_violations(spark):
@@ -1287,60 +896,6 @@ def test_pii_cross_engine_parity_on_crafted_corpus(spark):
     assert got_red == want_red
 
 
-def test_gopher_row_flags_equals_batch_operator(spark):
-    """The streamable per-row expression twin must be value-identical
-    to the batch (doc, word)-aggregation operator on the full corpus —
-    same pinned-equivalence contract as the UDTF chunking twin."""
-    from trino_iceberg_maintenance_spark.operators.text import gopher_quality_flags
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        gopher_row_flags,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    batch = {r["doc_id"]: r.asDict() for r in gopher_quality_flags(docs).collect()}
-    rowed = {r["doc_id"]: r.asDict() for r in gopher_row_flags(docs).collect()}
-    assert batch == rowed
-
-
-def test_curation_stream_matches_batch_on_replayed_backlog(spark, tmp_path):
-    """A duplicated backlog streamed through the curation pipeline
-    yields exactly the batch result on the deduped corpus: every
-    unique passing content exactly once."""
-    import shutil
-
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        curation_stream,
-        read_documents_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        run_available_now,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "docs_landing"
-    landing.mkdir()
-    shutil.copy(f"{sf_dir}/documents.parquet", landing / "docs-000.parquet")
-    shutil.copy(f"{sf_dir}/documents.parquet", landing / "docs-001.parquet")
-
-    streamed = curation_stream(
-        read_documents_stream(spark, str(landing)), min_words=20
-    )
-    got = run_available_now(streamed, "curation_stream_test", output_mode="append")
-    rows = {r["content_hash"]: (r["doc_id"], r["n_words"])
-            for r in got.collect()}
-
-    # batch twin over the single (unduplicated) corpus
-    batch = curation_stream(
-        load_table(spark, sf_dir, "documents"), min_words=20, dedup=False
-    ).dropDuplicates(["content_hash"])
-    want = {r["content_hash"]: (r["doc_id"], r["n_words"])
-            for r in batch.collect()}
-    assert set(rows) == set(want)
-    assert len(got.collect()) == len(want)
-    for h, (_, nw) in want.items():
-        assert rows[h][1] == nw
-
-
 def test_strip_boilerplate_removes_shared_spans_only(spark):
     """Tokens covered by a cross-doc hot span disappear; unique text
     survives verbatim; a fully-boilerplate doc strips to empty."""
@@ -1366,40 +921,6 @@ def test_strip_boilerplate_removes_shared_spans_only(spark):
     assert out[4]["clean_text"] == "totally unique words only here"
     assert out[4]["n_removed"] == 0
     assert out[5]["clean_text"] == "" and out[5]["n_removed"] == 4
-
-
-def test_curation_quality_stream_matches_batch(spark, tmp_path):
-    """The complete-mode running quality counters must equal the batch
-    aggregate over the same backlog after availableNow drains it."""
-    import shutil
-
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        curation_quality_stream,
-        read_documents_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        run_available_now,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "qual_landing"
-    landing.mkdir()
-    shutil.copy(f"{sf_dir}/documents.parquet", landing / "docs-000.parquet")
-
-    streamed = curation_quality_stream(read_documents_stream(spark, str(landing)))
-    got = {
-        r["lang"]: (r["n_docs"], r["n_pass"], r["pass_rate"])
-        for r in run_available_now(
-            streamed, "curation_quality_test", output_mode="complete"
-        ).collect()
-    }
-    want = {
-        r["lang"]: (r["n_docs"], r["n_pass"], r["pass_rate"])
-        for r in curation_quality_stream(
-            load_table(spark, sf_dir, "documents")
-        ).collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_equi_depth_buckets_approx_and_exact_paths_agree_structurally(spark):
@@ -1671,63 +1192,6 @@ def test_quantize_fast_path_is_bit_identical_to_decimal(spark):
         for r in out:
             assert r.fast == r.slow, (lo, hi, r)
         assert all(0 <= r.slow <= 255 for r in out)
-
-
-def test_stream_maintained_summary_matches_batch(spark, tmp_path):
-    """foreachBatch incremental MV maintenance: after draining the
-    landing backlog the maintained summary table equals the batch
-    aggregate; a second batch folds change-sized deltas; restarting
-    over the drained checkpoint (and a direct replay of an applied
-    epoch) changes nothing — the exactly-once contract."""
-    import pyarrow.parquet as pq
-
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.summary_stream import (
-        maintain_summary_stream,
-        summarize_documents,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "docs_landing"
-    landing.mkdir()
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet")
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "docs-000.parquet")
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "summary"))
-    ckpt = str(tmp_path / "ckpt")
-    q = maintain_summary_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt, "mv_test"
-    )
-    q.awaitTermination()
-
-    def as_set(df):
-        return {(r.source, r.n_rows, r.total_tokens) for r in df.collect()}
-
-    batch_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    first_half = spark.read.parquet(str(landing / "docs-000.parquet"))
-    assert as_set(t.read()) == as_set(summarize_documents(first_half))
-
-    # second landing file → incremental fold lands on the full batch
-    pq.write_table(tbl.slice(half), landing / "docs-001.parquet")
-    q2 = maintain_summary_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt, "mv_test2"
-    )
-    q2.awaitTermination()
-    assert as_set(t.read()) == as_set(summarize_documents(batch_docs))
-
-    # restart over the drained checkpoint: nothing changes
-    before = as_set(t.read())
-    q3 = maintain_summary_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt, "mv_test3"
-    )
-    q3.awaitTermination()
-    assert as_set(t.read()) == before
 
 
 def test_exact_stratified_sample_deficit_fallback(spark):
@@ -2081,83 +1545,6 @@ def test_persisted_dedup_index_matches_full_pipeline(spark, tmp_path):
     assert len(t._load_manifest()) == 2
 
 
-@pytest.mark.slowtier
-def test_near_dedup_gated_ingestion(spark, tmp_path):
-    """Batch 1 seeds corpus + index; batch 2 (heavy overlap with
-    batch 1 via near-identical docs) only adds its genuinely novel
-    docs; replaying batch 2 through the stream changes nothing."""
-    import pyarrow.parquet as pq
-    import pyspark.sql.functions as F
-
-    from trino_iceberg_maintenance_spark.operators.ingest import (
-        ingest_near_dedup,
-        stream_ingest_near_dedup,
-    )
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    docs = load_table(spark, sf, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    corpus = ParquetMaintainedTable.create(spark, str(tmp_path / "corpus"))
-    index = ParquetMaintainedTable.create(spark, str(tmp_path / "index"))
-
-    first = docs.where(F.col("doc_id") < 250)
-    stats1 = ingest_near_dedup(corpus, index, first)
-    assert stats1["novel"] > 0
-    base_count = corpus.read().count()
-    assert base_count == stats1["novel"]
-
-    # batch 2: 50 fresh docs + 30 EXACT copies of already-ingested
-    # docs under new ids (jaccard 1.0 — must be gated out)
-    fresh = docs.where(
-        (F.col("doc_id") >= 250) & (F.col("doc_id") < 300)
-    )
-    copies = (
-        docs.where(F.col("doc_id") < 30)
-        .withColumn("doc_id", F.col("doc_id") + F.lit(100000))
-    )
-    batch2 = fresh.unionByName(copies)
-    stats2 = ingest_near_dedup(corpus, index, batch2)
-    assert stats2["arrived"] == 80
-    assert stats2["near_dup_dropped"] >= 30  # every copy gated
-    got = corpus.read().count()
-    assert got == base_count + stats2["novel"]
-
-    # streaming twin over a landing dir: replaying the same drained
-    # checkpoint is a no-op (epoch recognized)
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    batch2.toPandas().pipe(
-        lambda pdf: pq.write_table(
-            __import__("pyarrow").Table.from_pandas(
-                pdf, preserve_index=False
-            ),
-            landing / "b2.parquet",
-        )
-    )
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-
-    ckpt = str(tmp_path / "ckpt")
-    before = corpus.read().count()
-    q = stream_ingest_near_dedup(
-        read_documents_stream(spark, str(landing)), corpus, index, ckpt
-    )
-    q.awaitTermination()
-    # batch2 content is already fully ingested -> nothing new
-    assert corpus.read().count() == before
-    q2 = stream_ingest_near_dedup(
-        read_documents_stream(spark, str(landing)), corpus, index, ckpt
-    )
-    q2.awaitTermination()
-    assert corpus.read().count() == before
-
-
 def test_dedup_index_survives_compaction(spark, tmp_path):
     """The persisted dedup index is an ordinary maintained table: the
     maintenance loop's optimize() bin-packs its extend-appended files
@@ -2388,147 +1775,6 @@ def test_zipf_fit_single_token_source_is_null(spark):
     assert rows["multi"].zipf_slope is not None
 
 
-def test_stream_ingest_repairs_half_applied_epoch(spark, tmp_path):
-    """Crash window between the corpus append and the index extend:
-    the replayed epoch must REPAIR the index (re-derive signatures
-    from the corpus snapshot's added files) instead of skipping and
-    leaving the index permanently blind to the batch."""
-    import os
-    import pyarrow.parquet as pq
-    import pyspark.sql.functions as F
-
-    from trino_iceberg_maintenance_spark.operators.ingest import (
-        stream_ingest_near_dedup,
-    )
-    from trino_iceberg_maintenance_spark.operators.dedup import (
-        near_dups_from_index,
-    )
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.sources.tables import load_table
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = load_table(spark, sf, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    ).where(F.col("doc_id") < 120)
-    corpus = ParquetMaintainedTable.create(spark, str(tmp_path / "c"))
-    index = ParquetMaintainedTable.create(spark, str(tmp_path / "i"))
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    pq.write_table(
-        __import__("pyarrow").Table.from_pandas(
-            docs.toPandas(), preserve_index=False
-        ),
-        landing / "b1.parquet",
-    )
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_ingest_near_dedup(
-        read_documents_stream(spark, str(landing)), corpus, index, ckpt
-    )
-    q.awaitTermination()
-    idx_rows = index.read().count()
-    assert idx_rows > 0
-    corpus_count = corpus.read().count()
-
-    # simulate the crash: the index extend never landed...
-    index._write_manifest(index._load_manifest()[:-1])
-    assert index.current_snapshot() is None or not index.current_files()
-    # ...and the checkpoint never acknowledged batch 0 (drop the crc
-    # sidecar too — a stale crc makes the commit-log rename fail)
-    os.remove(os.path.join(ckpt, "commits", "0"))
-    crc = os.path.join(ckpt, "commits", ".0.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    q2 = stream_ingest_near_dedup(
-        read_documents_stream(spark, str(landing)), corpus, index, ckpt
-    )
-    q2.awaitTermination()
-    # corpus untouched (epoch recognized), index repaired
-    assert corpus.read().count() == corpus_count
-    assert index.read().count() == idx_rows
-    # the repaired index gates a re-arrival of the same content
-    pairs = near_dups_from_index(index, docs)
-    assert pairs.where(F.col("jaccard") >= 0.99).count() > 0
-
-
-@pytest.mark.slowtier
-def test_stream_ingest_repair_after_parent_expiry_no_dup_rows(spark, tmp_path):
-    """Crash window + corpus expiry before the replay: expire's
-    lineage contraction re-parents the target snapshot (or leaves a
-    dangling parent id), so the repair's added-file delta degrades to
-    the FULL corpus file list. The repair must anti-join against the
-    index's existing doc_ids — otherwise the whole corpus's
-    signatures are appended again and near_dups_from_index emits
-    duplicated pairs forever after."""
-    import datetime as dt
-    import os
-    import pyarrow
-    import pyarrow.parquet as pq
-    import pyspark.sql.functions as F
-
-    from trino_iceberg_maintenance_spark.operators.ingest import (
-        stream_ingest_near_dedup,
-    )
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.sources.tables import load_table
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = load_table(spark, sf, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    corpus = ParquetMaintainedTable.create(spark, str(tmp_path / "c"))
-    index = ParquetMaintainedTable.create(spark, str(tmp_path / "i"))
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def land(batch_df, name):
-        pq.write_table(
-            pyarrow.Table.from_pandas(
-                batch_df.toPandas(), preserve_index=False
-            ),
-            landing / name,
-        )
-        q = stream_ingest_near_dedup(
-            read_documents_stream(spark, str(landing)), corpus, index, ckpt
-        )
-        q.awaitTermination()
-
-    land(docs.where(F.col("doc_id") < 60), "b1.parquet")
-    land(docs.where((F.col("doc_id") >= 60) & (F.col("doc_id") < 120)),
-         "b2.parquet")
-    idx_rows = index.read().count()
-    n_docs = index.read().select("doc_id").distinct().count()
-    assert idx_rows == n_docs  # one index row per doc
-
-    # crash: epoch 1's index extend never landed, nor its ckpt ack
-    index._write_manifest(index._load_manifest()[:-1])
-    os.remove(os.path.join(ckpt, "commits", "1"))
-    crc = os.path.join(ckpt, "commits", ".1.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    # ...and the corpus's epoch-0 snapshot expires before the replay
-    corpus.expire_snapshots(dt.datetime(2100, 1, 1), retain_last=1)
-
-    q2 = stream_ingest_near_dedup(
-        read_documents_stream(spark, str(landing)), corpus, index, ckpt
-    )
-    q2.awaitTermination()
-    # repaired, with NO duplicate index rows for the batch-1 docs
-    assert index.read().count() == idx_rows
-    assert index.read().select("doc_id").distinct().count() == n_docs
-
-
 def test_resize_and_features_handle_pgm(spark):
     """Binary PGM (P5, grayscale) decodes, featurizes (B=G=R=gray,
     luma=gray) and resamples for real — re-encoded as P5 at the
@@ -2597,115 +1843,6 @@ def test_source_overlap_sketch_exact_below_k(spark):
     assert rows[("sb", "sc")].n_common_sketch == 0
 
 
-def test_epoch_gate_cache_invalidated_on_failed_fold(spark, tmp_path):
-    """ADVICE r13: if apply_batch commits durably and THEN raises, the
-    memoized seen-epoch set must be invalidated — a retry inside the
-    same fold closure re-scans the manifest, sees the committed epoch
-    and skips the re-fold (no double-count). Without the invalidation
-    the stale memo would let the retry re-apply the committed batch."""
-    import pytest
-
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.index_stream import (
-        _gated_fold,
-    )
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "gate_tbl"))
-    batch = spark.range(3).selectExpr("id AS doc_id")
-    calls = {"n": 0}
-
-    def apply_batch(df, props):
-        calls["n"] += 1
-        t.append(df, properties=props)  # durable commit...
-        if calls["n"] == 1:
-            raise RuntimeError("post-commit failure")  # ...then die
-
-    ckpt_key = str(tmp_path / "gate_ckpt")
-    fold = _gated_fold(t, ckpt_key, apply_batch)
-    with pytest.raises(RuntimeError, match="post-commit failure"):
-        fold(batch, 0)
-    # retry of the SAME epoch in the SAME closure: the epoch committed,
-    # so the retry must no-op (manifest re-scan, not the stale memo)
-    fold(batch, 0)
-    assert calls["n"] == 1
-    assert t.read().count() == 3
-    # and a genuinely new epoch still folds through the rebuilt cache
-    fold(batch, 1)
-    assert calls["n"] == 2
-    assert t.read().count() == 6
-
-
-def test_stream_maintained_ivf_index_matches_batch(spark, tmp_path):
-    """Streaming ANN-index maintenance: draining the landing backlog
-    leaves the index table EQUAL to its batch twin (build over batch 1
-    + extend with batch 2 — deterministic centroids make this exact);
-    restarting over the drained checkpoint commits nothing (the
-    exactly-once epoch contract)."""
-    import pyarrow.parquet as pq
-
-    from trino_iceberg_maintenance_spark.operators.similarity import (
-        build_ivf_index,
-        extend_ivf_index,
-    )
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.index_stream import (
-        maintain_ivf_index_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "emb_landing"
-    landing.mkdir()
-    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet")
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "emb-000.parquet")
-
-    def emb_stream():
-        return (
-            spark.readStream.schema(
-                "vec_id long, embedding array<float>, label int"
-            ).parquet(str(landing))
-        )
-
-    t = ParquetMaintainedTable.create(
-        spark, str(tmp_path / "ividx"), partition_cols=["kind"]
-    )
-    ckpt = str(tmp_path / "ividx_ckpt")
-    maintain_ivf_index_stream(emb_stream(), t, ckpt).awaitTermination()
-
-    def contents(table):
-        return sorted(
-            (r.kind, r.vec_id, r.cell_id) for r in table.read().collect()
-        )
-
-    # batch twin over the same batches
-    twin = ParquetMaintainedTable.create(
-        spark, str(tmp_path / "ividx_twin"), partition_cols=["kind"]
-    )
-    batch1 = spark.read.parquet(str(landing / "emb-000.parquet"))
-    build_ivf_index(twin, batch1)
-    assert contents(t) == contents(twin)
-
-    # second landing file extends under the existing centroids
-    pq.write_table(tbl.slice(half), landing / "emb-001.parquet")
-    maintain_ivf_index_stream(emb_stream(), t, ckpt).awaitTermination()
-    batch2 = spark.read.parquet(str(landing / "emb-001.parquet"))
-    extend_ivf_index(twin, batch2)
-    assert contents(t) == contents(twin)
-    # every vector assigned exactly once; centroid set unchanged
-    rows = t.read().collect()
-    assigned = [r.vec_id for r in rows if r.kind == "assignment"]
-    assert len(assigned) == len(set(assigned)) == tbl.num_rows
-
-    # restart over the drained checkpoint: no new snapshot
-    n_snaps = len(t._load_manifest())
-    maintain_ivf_index_stream(emb_stream(), t, ckpt).awaitTermination()
-    assert len(t._load_manifest()) == n_snaps
-
-
 def test_bm25_from_index_matches_inline(spark, tmp_path):
     """Persisted-BM25 contract: scoring from the index table is
     IDENTICAL to the inline bm25_scores over the same corpus, and an
@@ -2743,87 +1880,6 @@ def test_bm25_from_index_matches_inline(spark, tmp_path):
     # unchanged (the maintained-table promise applied to the index)
     idx.optimize()
     assert rows(bm25_from_index(idx)) == inline
-
-
-def test_stream_maintained_bm25_index_matches_batch(spark, tmp_path):
-    """Streaming BM25-index maintenance: after draining two landing
-    batches, querying the streamed index returns EXACTLY the inline
-    bm25_scores over the full corpus; a restart over the drained
-    checkpoint commits nothing."""
-    import pyarrow.parquet as pq
-
-    from trino_iceberg_maintenance_spark.operators.text import (
-        bm25_from_index,
-        bm25_scores,
-    )
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.index_stream import (
-        maintain_bm25_index_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "bm25_landing"
-    landing.mkdir()
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet")
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "docs-000.parquet")
-
-    t = ParquetMaintainedTable.create(
-        spark, str(tmp_path / "bm25sidx"), partition_cols=["kind"]
-    )
-    ckpt = str(tmp_path / "bm25s_ckpt")
-    maintain_bm25_index_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt
-    ).awaitTermination()
-    pq.write_table(tbl.slice(half), landing / "docs-001.parquet")
-    maintain_bm25_index_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt
-    ).awaitTermination()
-
-    def rows(df):
-        return sorted(
-            (r.doc_id, r.n_terms_hit, r.bm25, r.rank) for r in df.collect()
-        )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    inline = rows(bm25_scores(docs))
-    assert rows(bm25_from_index(t)) == inline and len(inline) > 0
-
-    n_snaps = len(t._load_manifest())
-    maintain_bm25_index_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt
-    ).awaitTermination()
-    assert len(t._load_manifest()) == n_snaps
-
-
-def test_index_stream_rejects_relative_checkpoint(spark, tmp_path):
-    """A relative checkpoint_dir resolved from a different driver cwd
-    across restarts silently re-keys the epoch scope, so a
-    crash-replayed epoch would re-apply (duplicate index rows) — the
-    sink must fail fast instead of trusting the docstring."""
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.index_stream import (
-        maintain_bm25_index_stream,
-    )
-
-    landing = tmp_path / "rel_landing"
-    landing.mkdir()
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "rel_idx"))
-    with pytest.raises(ValueError, match="absolute"):
-        maintain_bm25_index_stream(
-            read_documents_stream(spark, str(landing)), t,
-            "relative_ckpt_dir",
-        )
 
 
 def test_bm25_from_index_applies_deletes_on_both_paths(spark, tmp_path):
@@ -3296,73 +2352,6 @@ def test_embedding_covariance_kernel_ab_and_default(spark):
     assert "MapInPandas" not in plan(
         embedding_covariance(emb, outer_product_kernel=False)
     )
-
-
-def test_minhash_index_stream_matches_batch_and_replays_noop(
-    spark, tmp_path
-):
-    """Streaming MinHash index maintenance (trilogy symmetry): the
-    streamed index answers near_dups_from_index identically to an
-    index built in one batch over the same corpus; a drained
-    checkpoint re-run commits nothing (exactly-once)."""
-    import pyarrow.parquet as pq
-
-    from trino_iceberg_maintenance_spark.operators.dedup import (
-        build_dedup_index,
-        near_dups_from_index,
-    )
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.index_stream import (
-        maintain_minhash_index_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "mh_landing"
-    landing.mkdir()
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet")
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "docs-000.parquet")
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "mh_sidx"))
-    ckpt = str(tmp_path / "mh_ckpt")
-    maintain_minhash_index_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt
-    ).awaitTermination()
-    pq.write_table(tbl.slice(half), landing / "docs-001.parquet")
-    maintain_minhash_index_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt
-    ).awaitTermination()
-
-    batch_idx = ParquetMaintainedTable.create(
-        spark, str(tmp_path / "mh_bidx")
-    )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    build_dedup_index(batch_idx, docs)
-
-    probe = docs.limit(40).selectExpr(
-        "doc_id + 1000000 AS doc_id", "text"
-    )
-
-    def pairs(idx):
-        return sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in near_dups_from_index(idx, probe).collect()
-        )
-
-    got = pairs(t)
-    assert got == pairs(batch_idx)
-    assert got, "the cloned probe docs must hit their index twins"
-
-    n_snaps = len(t._load_manifest())
-    maintain_minhash_index_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt
-    ).awaitTermination()
-    assert len(t._load_manifest()) == n_snaps  # drained replay: no-op
 
 
 def test_embedding_covariance_high_quant_stays_exact(spark):
@@ -4651,243 +3640,6 @@ def test_dup_source_matrix_cross_and_diagonal(spark):
     assert (cross.n_clusters, cross.docs_involved) == (1, 2)
     diag = out[("srcD", "srcD")]
     assert (diag.n_clusters, diag.docs_involved) == (1, 2)
-
-
-def test_cusum_stream_folds_to_batch_state(spark, tmp_path):
-    """Streaming drift maintainer (r12): draining two day-ordered
-    landing files lands the maintained state EXACTLY on the batch
-    reference over the same events; a drained-checkpoint restart
-    changes nothing; and a batch violating the day-grain contract
-    (re-landing an already-folded day) fails loud instead of silently
-    double-counting."""
-    import datetime as dt
-
-    import pytest
-
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.drift_stream import (
-        maintain_cusum_stream,
-        user_cusum_fixed,
-    )
-
-    def rows(days):
-        out = []
-        for uid in (1, 2, 3):
-            for d in days:
-                # user 2 bursts from day 4 on; others hover at k
-                n = 2 if uid != 2 or d < 4 else 6
-                out += [(uid, dt.datetime(2024, 3, d, 12))] * n
-        return out
-
-    schema = "user_id long, ts timestamp"
-    landing = tmp_path / "ev_landing"
-    landing.mkdir()
-
-    def land(name, days):
-        # write through Spark (µs timestamps) — a pandas/pyarrow write
-        # would land ns INT64 and break the stream schema
-        import glob
-        import shutil
-
-        df = spark.createDataFrame(rows(days), schema)
-        stage = str(tmp_path / f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(stage + "/part-*.parquet")[0]
-        shutil.copy(part, landing / name)
-
-    def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing))
-        )
-
-    def as_set(df):
-        return {
-            (r.user_id, r.n_days, r.last_day, r.last_s, r.min_s, r.peak)
-            for r in df.collect()
-        }
-
-    land("ev-000.parquet", [1, 2, 3])
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "cusum"))
-    ckpt = str(tmp_path / "cusum_ckpt")
-    q = maintain_cusum_stream(stream(), t, ckpt, k=2, query_name="cs1")
-    q.awaitTermination()
-    first = spark.createDataFrame(rows([1, 2, 3]), schema)
-    assert as_set(t.read()) == as_set(user_cusum_fixed(first, k=2))
-
-    # second landing file -> incremental fold == full-batch reference
-    land("ev-001.parquet", [4, 5, 6])
-    q2 = maintain_cusum_stream(stream(), t, ckpt, k=2, query_name="cs2")
-    q2.awaitTermination()
-    everything = spark.createDataFrame(rows([1, 2, 3, 4, 5, 6]), schema)
-    want = user_cusum_fixed(everything, k=2)
-    assert as_set(t.read()) == as_set(want)
-    # the planted burst registered: user 2 peaks, user 1 stays flat
-    by_user = {r.user_id: r for r in t.read().collect()}
-    assert by_user[2].peak > 0 and by_user[1].peak == 0
-
-    # drained-checkpoint restart: nothing changes
-    before = as_set(t.read())
-    q3 = maintain_cusum_stream(stream(), t, ckpt, k=2, query_name="cs3")
-    q3.awaitTermination()
-    assert as_set(t.read()) == before
-
-    # day-grain contract: a FRESH checkpoint replays old days into the
-    # same state table -> the fold must fail loud, not double-count
-    q4 = maintain_cusum_stream(
-        stream(), t, str(tmp_path / "cusum_ckpt2"), k=2,
-        query_name="cs4",
-    )
-    with pytest.raises(Exception, match="last_day|grain"):
-        q4.awaitTermination()
-    assert as_set(t.read()) == before  # state untouched by the abort
-
-
-def test_stream_maintained_mixture_matches_batch(spark, tmp_path):
-    """The stream-maintained mixture ledger: after draining the
-    landing backlog, read_mixture(table) is BIT-IDENTICAL to the
-    batch source_quality_mixture over the same corpus (both route
-    through sampling.mixture_from_stats); a second landing folds
-    change-sized deltas onto the full-corpus answer; restarting over
-    the drained checkpoint changes nothing (exactly-once)."""
-    import pyarrow.parquet as pq
-
-    from trino_iceberg_maintenance_spark.operators.sampling import (
-        source_quality_mixture,
-    )
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.streaming.curation_stream import (
-        read_documents_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.mixture_stream import (
-        maintain_mixture_stream,
-        read_mixture,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "docs_landing"
-    landing.mkdir()
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet")
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "docs-000.parquet")
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "mixture"))
-    ckpt = str(tmp_path / "ckpt")
-    q = maintain_mixture_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt, "mix_test"
-    )
-    q.awaitTermination()
-
-    def as_set(df):
-        return {tuple(r) for r in df.collect()}
-
-    first_half = spark.read.parquet(str(landing / "docs-000.parquet"))
-    assert as_set(read_mixture(t)) == as_set(
-        source_quality_mixture(first_half)
-    )
-
-    # second landing file → the ledger folds deltas, not a rescan,
-    # and the derived mixture lands on the full-corpus batch answer
-    pq.write_table(tbl.slice(half), landing / "docs-001.parquet")
-    q2 = maintain_mixture_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt, "mix_test2"
-    )
-    q2.awaitTermination()
-    batch_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert as_set(read_mixture(t)) == as_set(
-        source_quality_mixture(batch_docs)
-    )
-
-    # restart over the drained checkpoint: nothing changes
-    before = as_set(t.read())
-    q3 = maintain_mixture_stream(
-        read_documents_stream(spark, str(landing)), t, ckpt, "mix_test3"
-    )
-    q3.awaitTermination()
-    assert as_set(t.read()) == before
-
-
-def test_sessionize_stream_matches_batch_and_fails_loud(spark, tmp_path):
-    """applyInPandasWithState sessionizer: closed sessions emitted
-    across two runs (state restored from the checkpoint between them)
-    must equal the batch sessionize minus each user's open tail; a
-    batch arriving before a user's folded watermark must FAIL LOUD
-    (the in-order ingestion contract), not mis-split silently."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.streaming import StreamingQueryException
-
-    from trino_iceberg_maintenance_spark.sources.tables import load_table
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        read_events_stream,
-    )
-    from trino_iceberg_maintenance_spark.streaming.sessionize_stream import (
-        closed_sessions_batch,
-        sessionize_stream,
-    )
-
-    gap_min = 7 * 24 * 60  # one week: multi-event sessions that span files
-    sf_dir = "/root/testdata/sf0.001"
-    landing = tmp_path / "events_landing"
-    landing.mkdir()
-    tbl = pq.read_table(f"{sf_dir}/events.parquet")
-    tbl = tbl.sort_by([("ts", "ascending"), ("event_id", "ascending")])
-    half = tbl.num_rows // 2
-    pq.write_table(tbl.slice(0, half), landing / "ev-000.parquet")
-
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain(name):
-        got = []
-
-        def collect(batch_df, _epoch):
-            got.extend(batch_df.collect())
-
-        q = (
-            sessionize_stream(
-                read_events_stream(spark, str(landing)), gap_minutes=gap_min
-            )
-            .writeStream.foreachBatch(collect)
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            (r.user_id, r.n_events, r.session_start, r.session_end)
-            for r in got
-        }
-
-    closed = drain("sess_run1")
-    # second landing file -> restart over the checkpoint: per-user open
-    # sessions must resume from restored state, not restart from zero
-    pq.write_table(tbl.slice(half), landing / "ev-001.parquet")
-    closed |= drain("sess_run2")
-
-    want = {
-        (r.user_id, r.n_events, r.session_start, r.session_end)
-        for r in closed_sessions_batch(
-            load_table(spark, sf_dir, "events"), gap_minutes=gap_min
-        ).collect()
-    }
-    assert closed == want
-
-    # out-of-order batch (re-land the earliest half) -> loud failure
-    pq.write_table(tbl.slice(0, half), landing / "ev-002-replayed.parquet")
-    try:
-        drain("sess_run3")
-        raised = False
-    except StreamingQueryException:
-        raised = True
-    assert raised, "out-of-order batch must fail the in-order contract"
 
 
 def test_k_anonymity_report_constructed_groups(spark):

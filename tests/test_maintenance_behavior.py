@@ -438,10 +438,10 @@ def test_cli_index_maintainers_parsing(spark, tmp_path):
 
 @pytest.mark.slowtier
 def test_standard_index_maintainer_ivf_bootstraps_then_extends(env):
-    """The 'ivf' standard maintainer mirrors the streaming trade:
-    first run k-means-bootstraps from the full batch, later runs
-    assign under the EXISTING centroids — verified end-to-end through
-    orchestrator stage 6 with index_lag returning to 0."""
+    """The 'ivf' standard maintainer: the first run k-means-bootstraps
+    from the full batch, later runs assign under the EXISTING
+    centroids — verified end-to-end through orchestrator stage 6 with
+    index_lag returning to 0."""
     from trino_iceberg_maintenance_spark.operators.similarity import (
         ivf_topk_from_index,
     )
@@ -1464,14 +1464,15 @@ def test_clustered_read_prunes_files(spark, tmp_path):
         rows = [(i, f"v{i}") for i in range(lo, 400, 4)]
         t.append(spark.createDataFrame(rows, "k long, v string"), clock=clock)
 
-    scanned, total = t.pruned_file_count("k", 10, 20)
-    assert total == 4 and scanned == 4, "interleaved layout can't prune"
+    scanned = len(t.read_pruned("k", 10, 20).inputFiles())
+    assert scanned == t.file_count() == 4, "interleaved layout can't prune"
 
     total_bytes = sum(os.path.getsize(f) for f in t.current_files())
     t.optimize(target_file_size=max(1, total_bytes // 8), sort_by=["k"],
                clock=clock)
 
-    scanned, total = t.pruned_file_count("k", 10, 20)
+    scanned = len(t.read_pruned("k", 10, 20).inputFiles())
+    total = t.file_count()
     assert total >= 5 and scanned <= 2, (
         f"sorted layout must answer a narrow range from few files "
         f"({scanned}/{total})"
@@ -1498,7 +1499,8 @@ def test_zorder_read_prunes_on_both_dimensions(spark, tmp_path):
                zorder_by=["x", "y"], clock=clock)
 
     for dim in ("x", "y"):
-        scanned, total = t.pruned_file_count(dim, 0, 7)
+        scanned = len(t.read_pruned(dim, 0, 7).inputFiles())
+        total = t.file_count()
         assert total > 4, "expected a multi-file layout"
         assert scanned <= total // 2, (
             f"z-order must prune {dim}: {scanned}/{total}"
@@ -1548,41 +1550,6 @@ def test_content_hash_empty_table_is_zero(spark, tmp_path):
     t = ParquetMaintainedTable.create(spark, str(tmp_path / "empty"))
     t.append(spark.createDataFrame([], "v string"), clock=FakeClock())
     assert t.content_hash() == 0
-
-
-def test_ingest_curated_is_incremental_and_idempotent(spark, tmp_path):
-    """Curated ingestion into a maintained table: batch 1 lands novel
-    content; replaying batch 1 plus a few new docs appends ONLY the
-    new docs (no empty snapshot on a fully-known batch); the table
-    never holds duplicate content hashes and stays a normal maintained
-    table (snapshot history intact)."""
-    from trino_iceberg_maintenance_spark.operators.ingest import ingest_curated
-    from trino_iceberg_maintenance_spark.sources.lake import (
-        ParquetMaintainedTable,
-    )
-    from trino_iceberg_maintenance_spark.sources.tables import load_table
-
-    table = ParquetMaintainedTable.create(spark, str(tmp_path / "curated"))
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    batch1 = docs.where("doc_id < 400")
-
-    s1 = ingest_curated(table, batch1)
-    assert s1["novel"] == s1["curated"] > 0
-    assert s1["snapshot_id"] is not None
-    n_after_1 = table.read().count()
-    assert n_after_1 == s1["novel"]
-
-    # replay batch1 + the remaining docs: only genuinely new content lands
-    s2 = ingest_curated(table, docs)
-    assert s2["novel"] < s2["curated"]
-    assert table.read().count() == n_after_1 + s2["novel"]
-    hashes = table.read().select("content_hash").collect()
-    assert len(hashes) == len({r["content_hash"] for r in hashes})
-
-    # a fully-known batch commits nothing
-    s3 = ingest_curated(table, batch1)
-    assert s3["novel"] == 0 and s3["snapshot_id"] is None
-    assert len(table._load_manifest()) == 2
 
 
 def test_rollback_restores_old_state_preserving_history(spark, tmp_path):
@@ -1670,55 +1637,41 @@ def test_add_files_registers_without_rewrite(spark, tmp_path):
     assert t.read().count() == 2  # nothing committed by the failure
 
 
-def test_register_sql_views_metadata_tables(spark, tmp_path):
-    """Iceberg's SQL metadata-table UX: after register_sql_views,
-    plain spark.sql reaches the data and every metadata relation
-    (t_files, t_snapshots, t_history, ...)."""
+def test_entries_and_file_stats_relations(spark, tmp_path):
+    """Iceberg's metadata tables as relations: ``$file_stats`` carries
+    per-file row counts and the per-column stats map; ``$entries``
+    tracks ADDED / EXISTING / DELETED per snapshot with data sequence
+    numbers; ``$files``, ``$snapshots`` and ``$history`` agree with
+    the log."""
+    from collections import Counter
+
     from trino_iceberg_maintenance_spark.sources.lake import (
         ParquetMaintainedTable,
     )
 
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "sqlv"))
+    t = ParquetMaintainedTable.create(spark, str(tmp_path / "meta"))
     t.append(spark.createDataFrame([("a", "b")], "a string, b string"))
     t.append(spark.createDataFrame([("c", "d")], "a string, b string"))
-    views = t.register_sql_views("mt")
-    assert set(views) == {
-        "mt", "mt_files", "mt_snapshots", "mt_history",
-        "mt_manifests", "mt_partitions", "mt_refs", "mt_entries",
-        "mt_file_stats",
-    }
-    # the commit-time stats store is SQL-reachable: per-file row
-    # counts and the per-column stats map
-    fs = spark.sql(
-        "SELECT file, rows, cols['a'].nulls AS a_nulls FROM mt_file_stats"
+    fs = t.file_stats_df().selectExpr(
+        "file", "rows", "cols['a'].nulls AS a_nulls"
     ).collect()
     assert len(fs) == 2 and all(r.rows == 1 and r.a_nulls == 0 for r in fs)
     # $entries: snapshot 1 ADDED its file; snapshot 2 carries it as
     # EXISTING and ADDED its own
-    ent = {(r.snapshot_id, r.status): r for r in spark.sql(
-        "SELECT * FROM mt_entries"
-    ).collect()}
+    ent = {(r.snapshot_id, r.status): r for r in t.entries_df().collect()}
     assert set(ent) == {(1, "ADDED"), (2, "ADDED"), (2, "EXISTING")}
     assert ent[(2, "EXISTING")].sequence == 1
     assert all(r.file_size_bytes > 0 for r in ent.values())
+    assert t.files_df().count() == 2
+    assert sorted(r.snapshot_id for r in t.snapshots_df().collect()) == [1, 2]
+    hist = t.history_df().collect()
+    assert len(hist) == 2 and all(r.is_current_ancestor for r in hist)
     # a rewrite snapshot carries DELETED tombstones for the files it
     # replaced (Iceberg keeps the entry with status DELETED)
     t.optimize()
     ent3 = [r for r in t.entries_df().collect() if r.snapshot_id == 3]
-    from collections import Counter
     assert Counter(r.status for r in ent3) == {"ADDED": 1, "DELETED": 2}
-    assert spark.sql("SELECT count(*) AS n FROM mt").collect()[0].n == 2
-    assert spark.sql(
-        "SELECT count(*) AS n FROM mt_files"
-    ).collect()[0].n == 2
-    snaps = spark.sql(
-        "SELECT snapshot_id FROM mt_snapshots ORDER BY snapshot_id"
-    ).collect()
-    assert [r.snapshot_id for r in snaps] == [1, 2]
-    assert spark.sql(
-        "SELECT count(*) AS n FROM mt_history"
-        " WHERE is_current_ancestor"
-    ).collect()[0].n == 2
+    assert t.read().count() == 2
 
 
 def test_history_df_ancestor_flags(spark, tmp_path):
@@ -1886,8 +1839,11 @@ def test_hidden_partitioning_transforms(spark, tmp_path):
     kept, total = t.prune_files_by_partition(
         "ts", lo=dt.datetime(2024, 1, 2), hi=dt.datetime(2024, 1, 2, 23))
     assert 0 < len(kept) < total
-    got = t.read_partition_pruned(
-        "ts", lo=dt.datetime(2024, 1, 2), hi=dt.datetime(2024, 1, 2, 23))
+    # pruning is exact on the kept side: the kept files, filtered by
+    # the predicate, hold every matching row
+    got = t._read_files(kept).where(
+        F.col("ts").between(dt.datetime(2024, 1, 2),
+                            dt.datetime(2024, 1, 2, 23)))
     want = {r[0] for r in rows if r[1].day == 2}
     assert {r["id"] for r in got.collect()} == want
 
@@ -1898,7 +1854,7 @@ def test_hidden_partitioning_transforms(spark, tmp_path):
     for eq in (7, 8):
         kept_b, total_b = t.prune_files_by_partition("uid", eq=eq)
         assert 0 < len(kept_b) < total_b, eq
-        got_b = t.read_partition_pruned("uid", eq=eq)
+        got_b = t._read_files(kept_b).where(F.col("uid") == eq)
         assert {r["id"] for r in got_b.collect()} == {
             i for i in range(60) if i % 10 == eq
         }, eq
@@ -3487,8 +3443,9 @@ def test_manifest_stats_store_zero_footer_reads(env, monkeypatch):
     assert sorted(v["a"] for v in fstats.values()) == [(1, 4), (9, None or 9)]
 
     # pruning consults the store, scans only the qualifying file
-    assert t.pruned_file_count("a", 8, 20) == (1, 2)
-    assert sorted(r.a for r in t.read_pruned("a", 8, 20).collect()) == [9]
+    pruned = t.read_pruned("a", 8, 20)
+    assert len(pruned.inputFiles()) == 1
+    assert sorted(r.a for r in pruned.collect()) == [9]
 
     parts = t.partitions_df().collect()
     assert len(parts) == 1 and parts[0].row_count == 4

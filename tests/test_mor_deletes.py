@@ -79,6 +79,20 @@ def test_equality_delete_sequence_scoping(spark, tmp_path):
     assert (3, "reborn") in got
     assert (3, "v3") not in got
     assert (4, "v4") not in got
+    # a second upsert round on the same key: the new delete reaches
+    # every older file (including the one that re-added 3), the new
+    # row survives — last writer wins with no data file rewritten
+    files = set(t.current_files())
+    t.delete_by_key(spark.createDataFrame([(3,), (5,)], "id long"), on=["id"])
+    t.append(spark.createDataFrame([(3, "again"), (5, "five")],
+                                   "id long, v string"))
+    want = {(0, "v0"), (1, "v1"), (2, "v2"), (3, "again"), (5, "five"),
+            (6, "v6"), (7, "v7"), (8, "v8"), (9, "v9")}
+    assert {(r.id, r.v) for r in t.read().collect()} == want
+    assert files < set(t.current_files())
+    # materializing the deletes lands on the same state
+    assert t.purge_deletes().delete_files is None
+    assert {(r.id, r.v) for r in t.read().collect()} == want
 
 
 def test_equality_delete_survives_expiry_of_origin_snapshot(spark, tmp_path):
@@ -229,8 +243,11 @@ def test_partitioned_table_mor_delete_and_scoped_optimize(spark, tmp_path):
     )
     # entry survives because p=1 still has an un-rewritten target
     assert snap.delete_files
-    # partition-pruned reads also merge deletes
-    assert t.read_partition_pruned("p", eq=1).where("id < 2").count() == 0
+    # p=1's pending delete still applies: id 1 stays gone, the
+    # partition's other rows stay
+    assert sorted(r.id for r in t.read().where("p = 1").collect()) == [
+        3, 5, 7, 9, 101, 103
+    ]
 
 
 def test_branch_append_carries_deletes(spark, tmp_path):
@@ -474,142 +491,6 @@ def test_compact_delete_files_merges_positional(spark, tmp_path):
     assert kinds == ["equality", "position"]  # 2 positional merged to 1
     assert set(snap.files) == set(t._load_manifest()[-2].files)
     assert sorted(r.id for r in t.read().collect()) == [0, 2, 3, 4, 5, 7, 8]
-
-
-def test_stream_upsert_into_table(spark, tmp_path):
-    """Equality-delete streaming upsert: two micro-batches with
-    overlapping keys land on last-writer-wins state without any data
-    rewrite; a restart over the drained checkpoint changes nothing;
-    purge materializes the same state."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from trino_iceberg_maintenance_spark.streaming.events_stream import (
-        stream_upsert_into_table,
-    )
-
-    landing = tmp_path / "upsert_landing"
-    landing.mkdir()
-    b0 = pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]})
-    b1 = pa.table({"k": [2, 4], "v": ["B2", "d"]})
-    # two drains, not one: the file source orders same-mtime files
-    # arbitrarily, and upsert semantics are arrival-order-dependent by
-    # design — land batch 0, drain, then land batch 1, drain
-    pq.write_table(b0, landing / "b-000.parquet")
-
-    def drain(name):
-        stream = (
-            spark.readStream.schema("k long, v string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing))
-        )
-        q = stream_upsert_into_table(
-            stream, t, on=["k"], checkpoint_dir=ckpt, query_name=name
-        )
-        q.awaitTermination()
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "upserted"))
-    ckpt = str(tmp_path / "ckpt")
-    drain("upsert_b0")
-    pq.write_table(b1, landing / "b-001.parquet")
-    drain("upsert_b1")
-
-    want = {(1, "a"), (2, "B2"), (3, "c"), (4, "d")}
-    assert {(r.k, r.v) for r in t.read().collect()} == want
-    # no data file was rewritten: every appended file is still live
-    assert t.file_count() == 2
-    assert any(
-        e["content"] == "equality"
-        for e in (t.current_snapshot().delete_files or [])
-    )
-
-    # restart over the drained checkpoint: nothing changes
-    stream2 = (
-        spark.readStream.schema("k long, v string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(landing))
-    )
-    q2 = stream_upsert_into_table(stream2, t, on=["k"], checkpoint_dir=ckpt)
-    q2.awaitTermination()
-    assert {(r.k, r.v) for r in t.read().collect()} == want
-
-    snap = t.purge_deletes()
-    assert snap.delete_files is None
-    assert {(r.k, r.v) for r in t.read().collect()} == want
-
-
-def test_upsert_by_key_is_one_atomic_commit(spark, tmp_path):
-    t = _mk(spark, tmp_path / "t", ROWS)
-    n_snaps = len(t._load_manifest())
-    snap = t.upsert_by_key(
-        spark.createDataFrame(
-            [(2, "two"), (100, "hundred"), (2, "dup-loses")],
-            "id long, v string",
-        ),
-        on=["id"],
-    )
-    # exactly ONE new snapshot carrying both the delete and the data
-    assert len(t._load_manifest()) == n_snaps + 1
-    assert snap.operation == "overwrite"
-    assert [e["content"] for e in snap.delete_files] == ["equality"]
-    got = {(r.id, r.v) for r in t.read().collect()}
-    assert (100, "hundred") in got
-    assert (2, "two") in got or (2, "dup-loses") in got  # caller dedupe
-    assert (2, "v2") not in got
-    assert t.read().count() == 11
-    # upsert into an empty table is a plain append
-    t2 = ParquetMaintainedTable.create(spark, str(tmp_path / "t2"))
-    s2 = t2.upsert_by_key(
-        spark.createDataFrame([(1, "a")], "id long, v string"), on=["id"]
-    )
-    assert not s2.delete_files
-    assert t2.read().count() == 1
-
-
-@pytest.mark.slowtier
-def test_file_value_index_prunes_and_stays_exact(spark, tmp_path):
-    """Secondary value index: point lookups scan a file subset, equal
-    the full filter, survive incremental extension, stay conservative
-    for unindexed (newer) files, and merge MoR deletes."""
-    from trino_iceberg_maintenance_spark.sources.index import (
-        build_file_value_index,
-        extend_file_value_index,
-        lookup_file_counts,
-        point_lookup,
-    )
-
-    t = ParquetMaintainedTable.create(spark, str(tmp_path / "t"))
-    # 8 files, disjoint user ranges so the index can actually skip
-    for i in range(8):
-        t.append(spark.createDataFrame(
-            [(i * 100 + j, f"u{i * 100 + j}") for j in range(50)],
-            "id long, user string",
-        ))
-    idx = ParquetMaintainedTable.create(spark, str(tmp_path / "idx"))
-    build_file_value_index(t, idx, col="user")
-
-    got = {r.id for r in point_lookup(t, idx, "u305").collect()}
-    assert got == {305}
-    scanned, total = lookup_file_counts(t, idx, "u305")
-    assert total == 8 and scanned <= 2  # collisions allowed, 8 is not
-
-    # files added after the build are scanned conservatively...
-    t.append(spark.createDataFrame([(9999, "u305")], "id long, user string"))
-    assert {r.id for r in point_lookup(t, idx, "u305").collect()} == {305, 9999}
-    # ...until the incremental extension catches up
-    assert extend_file_value_index(t, idx) == 1
-    assert extend_file_value_index(t, idx) == 0
-    assert {r.id for r in point_lookup(t, idx, "u305").collect()} == {305, 9999}
-    scanned2, total2 = lookup_file_counts(t, idx, "u777")
-    assert total2 == 9 and scanned2 <= 2
-
-    # merge-on-read deletes apply inside the pruned read
-    t.delete_where("id = 305")
-    assert {r.id for r in point_lookup(t, idx, "u305").collect()} == {9999}
-
-    # a missing value prunes to (almost) nothing
-    scanned3, _ = lookup_file_counts(t, idx, "no-such-user")
-    assert scanned3 <= 2
 
 
 def test_purge_deletes_handles_targetless_positional_entry(spark, tmp_path):

@@ -2321,7 +2321,7 @@ def extend_dedup_index(
     one commit, new rows only (O(batch), never O(corpus)).
     ``rows`` lets callers that already computed the (doc_id, h*,
     sh_arr) relation skip recomputation; ``properties`` rides into
-    the snapshot (streaming epoch stamps)."""
+    the snapshot (stage 6's ``covers_snapshot`` cursor)."""
     return index_table.append(
         rows if rows is not None else _index_rows(new_docs, num_hashes),
         single_file=False,

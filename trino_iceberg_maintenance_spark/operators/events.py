@@ -1,8 +1,6 @@
 """Event-stream analytics over the ``events`` table (SURVEY.md §2.9 /
 §2.11): tumbling & sliding window aggregation, gap sessionization,
-JSON property extraction. The same plans run under Structured
-Streaming (streaming/events_stream.py) — batch here, watermarked
-stream there, identical semantics.
+JSON property extraction.
 
 Scale notes: window aggregation shuffles once on (window, key) with
 map-side partial aggregation; sessionization shuffles once on user_id
@@ -221,9 +219,7 @@ GROUP BY 1
 def click_attribution(events: DataFrame, window_minutes: int = 30) -> DataFrame:
     """Click→purchase attribution: every (click, purchase) pair of the
     same user where the click lands within ``window_minutes`` BEFORE
-    the purchase (inclusive) — the batch twin of the stream-stream
-    join in streaming/events_stream.py (identical predicate, so the
-    availableNow replay must reproduce these rows exactly).
+    the purchase (inclusive).
 
     Scale shape: an EQUI-join on user_id with the time bound as a
     residual predicate — one shuffle per side on the user key, never a
@@ -453,8 +449,8 @@ GROUP BY 1, 2
 def windows_union(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """The three window-aggregation flavors (tumbling 1h by type,
     sliding 1h/30min, gap-session per user) as one long-format
-    relation tagged by ``kind`` — the batch twin of the §2.9 streaming
-    windows, exercising all three Spark window operators in a single
+    relation tagged by ``kind`` — the §2.9 window flavors,
+    exercising all three Spark window operators in a single
     driver-checkable query.
 
     Each branch is the same single-shuffle aggregation as its
@@ -839,8 +835,7 @@ def event_dedup_within(
     unlike previous-KEPT semantics, expressible without a sequential
     scan per key).
 
-    One (user, type) shuffle, exact µs gap arithmetic — the batch twin
-    of the streaming stateful dedup in streaming/events_stream.py."""
+    One (user, type) shuffle, exact µs gap arithmetic."""
     w = Window.partitionBy("user_id", "event_type").orderBy(
         "ts", "event_id"
     )

@@ -1292,17 +1292,8 @@ def source_quality_mixture(docs: DataFrame) -> DataFrame:
             ).cast("long").alias("clean_tokens"),
         )
     )
-    return mixture_from_stats(per)
-
-
-def mixture_from_stats(per: DataFrame) -> DataFrame:
-    """The sources-sized mixture algebra over sufficient statistics
-    ``(source, n_docs, n_pass, clean_tokens)`` — factored so the
-    batch operator and the stream-maintained ledger
-    (``streaming/mixture_stream.read_mixture``) derive weights from
-    ONE implementation and stay bit-identical. A degenerate corpus
-    (every doc gate-failing) yields zero shares and zero weights —
-    NOT a divide-by-zero (property-tested)."""
+    # a degenerate corpus (every doc gate-failing) yields zero shares
+    # and zero weights — NOT a divide-by-zero (property-tested)
     total = per.agg(F.sum("clean_tokens").alias("__total"))
     shared = per.crossJoin(F.broadcast(total)).select(
         "source", "n_docs", "n_pass", "clean_tokens",

@@ -343,7 +343,7 @@ def kmeans_centroids(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Spherical k-means (Lloyd) refinement of the deterministic-sample
-    centroids, as iterated DataFrame jobs (FUTURE.md item 5).
+    centroids, as iterated DataFrame jobs.
 
     Per iteration: one broadcast-assignment pass over the corpus, then
     a single-shuffle groupBy computing per-(cell, dimension) sums.

@@ -597,8 +597,8 @@ def twap_daily(events: DataFrame) -> DataFrame:
         .where(F.col("__dur") > 0)
     )
     # micro-unit quantization via floor(x*1e6 + 0.5): engine round()/
-    # decimal-cast rounding diverges at shortest-repr boundaries
-    # (FUTURE.md round-4 discovery); the floor form is bit-identical
+    # decimal-cast rounding diverges at shortest-repr boundaries;
+    # the floor form is bit-identical
     v_scaled = F.floor(F.col("value") * F.lit(1_000_000.0) + F.lit(0.5)).cast(
         "decimal(20,0)"
     )

@@ -2642,8 +2642,8 @@ def extend_bm25_index(index_table, new_docs: DataFrame,
 
     ``ensure_novel=True`` enforces that contract with a batch-vs-index
     anti-check before the append (one docstat-partition semi-join —
-    O(index doc count), NOT O(postings); opt-in because the streaming
-    maintainer's epoch dedup already guarantees novelty on that path).
+    O(index doc count), NOT O(postings); opt-in because stage 6
+    extends from a snapshot diff, which already guarantees novelty).
     Violations also fail loudly at query time: :func:`bm25_from_index`
     trips on duplicate docstat rows."""
     if ensure_novel:

@@ -194,10 +194,9 @@ def _truthy(flag: int | None) -> bool:
 def standard_index_maintainer(kind: str, n_cells: int = 16,
                               num_hashes: int | None = None):
     """The ``extend_fn`` for the built-in persisted-index kinds —
-    the SINGLE definition shared by programmatic registration, the
-    CLI's ``INDEX_MAINTAINERS_JSON`` knob, and the streaming
-    maintainers in ``streaming/index_stream.py`` (one wrapper to keep
-    in sync, so batch- and stream-built indexes can never drift).
+    the SINGLE definition shared by programmatic registration and the
+    CLI's ``INDEX_MAINTAINERS_JSON`` knob (one wrapper to keep in
+    sync, so indexes registered either way can never drift).
     Each callable takes ``(index_table, new_rows, properties)``,
     appends index rows for the NEW source rows only, and commits
     ``properties`` atomically with its snapshot:
@@ -206,8 +205,8 @@ def standard_index_maintainer(kind: str, n_cells: int = 16,
       ≡ extend, symmetric appends;
     - ``ivf``: bootstrap k-means centroids (``n_cells``) on the first
       non-empty batch of (vec_id, embedding), assign-and-append under
-      the existing centroids after — the streaming maintainer's
-      trade;
+      the existing centroids after (centroids are not re-fit until a
+      rebuild);
     - ``minhash``: MinHash signature + shingle-set rows from
       (doc_id, text).
     """
@@ -389,16 +388,8 @@ class Orchestrator:
         #: per-table count of pre-store files adopted by the stage-4
         #: auto-backfill on its last ANALYZE (0 once converged)
         self.last_stats_backfill: dict[str, int] = {}
-        #: optional 5th stage (same flag + cadence + watermark shape
-        #: as the reference's four, __main__.py:141-199): per-table
-        #: declarative expectation rule sets —
-        #: {table_name: [(rule_name, Column-or-SQL predicate), ...]} —
-        #: evaluated in ONE aggregate pass by
-        #: plans.audit.check_expectations when
-        #: should_check_expectations is truthy and the
-        #: last_checked_on/days_to_check cadence says due
-        #: opt-in stage-4 fast path (FUTURE r9 #5): answer the
-        #: null-fraction stats relation from parquet FOOTERS
+        #: opt-in stage-4 fast path: answer the null-fraction stats
+        #: relation from parquet FOOTERS
         #: (metadata_aggregate — zero data pages) when the table
         #: qualifies (no pending MoR deletes, every requested
         #: column's footer null counts exact); anything else falls
@@ -407,6 +398,14 @@ class Orchestrator:
         #: skips the incremental NDV state update (stage 4 remains
         #: the NDV source of truth when sketches are consumed).
         self.analyze_from_footers = analyze_from_footers
+        #: optional 5th stage (same flag + cadence + watermark shape
+        #: as the reference's four, __main__.py:141-199): per-table
+        #: declarative expectation rule sets —
+        #: {table_name: [(rule_name, Column-or-SQL predicate), ...]} —
+        #: evaluated in ONE aggregate pass by
+        #: plans.audit.check_expectations when
+        #: should_check_expectations is truthy and the
+        #: last_checked_on/days_to_check cadence says due
         self.expectation_rules = expectation_rules or {}
         #: per-table result rows of the last expectations check
         #: (one row per rule; surfaced by fleet_report)
@@ -458,9 +457,9 @@ class Orchestrator:
         #: {source_table: {index_name: (num_hashes, band_width)}} —
         #: the LSH banding each minhash index was registered under
         #: (r11, VERDICT r10 #5: the tuner's pick must follow the
-        #: index). Persisted in the registry; query paths read it
-        #: back so a restart near-dup-checks under the SAME banding
-        #: the index was built with. Absent entry = module defaults.
+        #: index). Persisted in the registry, so a restart
+        #: rediscovers the banding the index was built with. Absent
+        #: entry = module defaults.
         #: Seedable via the ctor (the CLI's five-element
         #: INDEX_MAINTAINERS_JSON form).
         self.index_banding: dict[str, dict[str, tuple]] = {
@@ -605,7 +604,7 @@ class Orchestrator:
 
     def rebuild_index(self, source_table: str, index_name: str) -> None:
         """The remediation the expired-cursor error path names
-        (VERDICT r8 #5, FUTURE.md #5): rebuild one registered index
+        (VERDICT r8 #5): rebuild one registered index
         from the source table's CURRENT snapshot — truncate, one full
         re-extend, fresh cursor — abandoning the unrecoverable
         incremental lineage. Old index snapshots (and their files)

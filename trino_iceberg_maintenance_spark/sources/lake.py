@@ -183,8 +183,9 @@ class Snapshot:
     #: delete/rollback); None for pre-tagging manifests
     operation: str | None = None
     #: Iceberg-style snapshot summary properties (free-form metadata
-    #: committed ATOMICALLY with the snapshot — e.g. the streaming
-    #: sinks' epoch ids, making replay detection crash-safe)
+    #: committed ATOMICALLY with the snapshot — e.g. the source
+    #: snapshot id a persisted index covers, so the incremental
+    #: cursor can never run ahead of the index rows)
     properties: dict | None = None
 
 
@@ -1657,45 +1658,6 @@ class ParquetMaintainedTable:
         return self._commit(snap, add_deletes=[entry], remove_deletes=pos,
                             operation="replace", clock=clock)
 
-    def upsert_by_key(
-        self, source: DataFrame, on: list[str], clock=None
-    ) -> Snapshot:
-        """ATOMIC merge-on-read upsert (Iceberg v2 / Flink-CDC shape):
-        ONE commit carrying an equality delete file (the source's key
-        tuples) and a data file (the source rows) — no scan, no
-        rewrite, O(source) work regardless of table size. The delete's
-        sequence number scopes it to pre-existing files, the new file
-        is newer, so the source's version of every key wins exactly.
-        Duplicate source keys must be resolved by the caller
-        (dropDuplicates) — enforced here like ``merge_into``.
-
-        Contrast: ``merge_into`` is the copy-on-write formulation
-        (reads + rewrites every file containing a matched key — better
-        read amplification, worse write amplification); this is the
-        write-cheap one that ``optimize``/``purge_deletes`` settles
-        later."""
-        snap = self.current_snapshot()
-        src = source.dropDuplicates(on)
-        new_entries = []
-        if snap is not None and snap.files:
-            schema = self.tracked_schema()
-            if schema is not None:
-                known = {f.name for f in schema.fields}
-                missing = [c for c in on if c not in known]
-                if missing:
-                    raise ValueError(
-                        f"upsert key columns not in schema: {missing}"
-                    )
-            del_path = self._write_delete_file(
-                src.select(*on).dropDuplicates()
-            )
-            new_entries = [{"path": del_path, "content": "equality",
-                            "equality_cols": list(on)}]
-        self._evolve_schema(src.schema)
-        data_files = self._write_data(src, num_files=1)
-        return self._commit(snap, added=data_files, add_deletes=new_entries,
-                            operation="overwrite", clock=clock)
-
     def _eq_matched_files(self, files: list[str], eqs: list) -> set[str]:
         """Data files (manifest paths) holding at least one row an
         equality delete removes — ONE semi-join scan per key shape,
@@ -2313,17 +2275,6 @@ class ParquetMaintainedTable:
             keep, snap.delete_files if snap else None
         ).where(F.col(col).between(lo, hi))
 
-    def pruned_file_count(self, col: str, lo, hi) -> tuple[int, int]:
-        """(files scanned, files total) for a range predicate —
-        observability for the clustering payoff."""
-        stats = self.file_column_stats([col])
-        keep = [
-            f
-            for f, st in stats.items()
-            if col not in st or (st[col][0] <= hi and st[col][1] >= lo)
-        ]
-        return len(keep), len(stats)
-
     # -- metadata relations ----------------------------------------------
     def files_df(self) -> DataFrame:
         """The ``$files`` metadata relation (S2), including the file's
@@ -2505,28 +2456,6 @@ class ParquetMaintainedTable:
 
         return [f for f in files if qualifies(f)], len(files)
 
-    def read_partition_pruned(
-        self, col: str, eq=None, lo=None, hi=None
-    ) -> DataFrame:
-        """Scan only partition-qualifying files, then re-apply the
-        exact predicate row-level (dir pruning is file-granular; the
-        residual filter keeps semantics exact — same split Iceberg
-        planners make)."""
-        files, total = self.prune_files_by_partition(col, eq, lo, hi)
-        if total == 0:
-            raise ValueError(f"table {self.path} has no snapshots")
-        if not files:
-            return self._read_files(self.current_files()).where(F.lit(False))
-        snap = self.current_snapshot()
-        df = self._read_effective(files, snap.delete_files if snap else None)
-        if eq is not None:
-            df = df.where(F.col(col) == F.lit(eq))
-        if lo is not None:
-            df = df.where(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.where(F.col(col) <= F.lit(hi))
-        return df
-
     @staticmethod
     def _entry_parent(i: int, s: Snapshot, snaps: list, by_id: dict):
         """Parent resolution for the $snapshots/$entries summary
@@ -2653,35 +2582,6 @@ class ParquetMaintainedTable:
             "made_current_at timestamp, snapshot_id long, "
             "parent_id long, is_current_ancestor boolean",
         )
-
-    def register_sql_views(self, name: str) -> list[str]:
-        """Iceberg's SQL metadata-table UX for this format: register
-        the table and every metadata relation as temp views —
-        ``name``, ``name_files``, ``name_snapshots``, ``name_history``,
-        ``name_manifests``, ``name_partitions``, ``name_refs``,
-        ``name_entries`` — so
-        ``spark.sql("SELECT * FROM name_snapshots")`` works like
-        Iceberg's ``db.tbl.snapshots`` (``$`` is not a legal Spark
-        view-name character, so the suffix is ``_`` here). Returns the registered
-        view names. Metadata views are registered eagerly from the
-        CURRENT manifest (they are driver-built relations, not lazy
-        scans) — re-register after commits for a fresh view."""
-        pairs = [
-            (name, self.read()),
-            (f"{name}_files", self.files_df()),
-            (f"{name}_snapshots", self.snapshots_df()),
-            (f"{name}_history", self.history_df()),
-            (f"{name}_manifests", self.manifests_df()),
-            (f"{name}_partitions", self.partitions_df()),
-            (f"{name}_refs", self.refs_df()),
-            (f"{name}_entries", self.entries_df()),
-            # Iceberg's db.tbl.files carries per-file column stats;
-            # here they are the commit-time stats store, scannable
-            (f"{name}_file_stats", self.file_stats_df()),
-        ]
-        for view, df in pairs:
-            df.createOrReplaceTempView(view)
-        return [v for v, _ in pairs]
 
     def clustering_depth_report(self, column: str) -> dict:
         """Clustering-quality metric for one column from footer stats
