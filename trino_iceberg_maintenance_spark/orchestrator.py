@@ -9,9 +9,12 @@ Reference mapping (SURVEY.md §2.5, §3):
 - ``MaintenanceTask.execute`` (``__main__.py:121-201``): a fixed
   per-table pipeline of stages. :data:`STAGES` is the single place a
   stage's flag column, cadence (watermark + days columns) and work
-  method are defined: orphan removal → snapshot expiry → delete-file
-  budget → manifest rewrite → optimize → analyze → expectations →
-  indexes → index-lag observation. ``Orchestrator._execute_table`` is
+  method are defined: orphan removal → snapshot expiry → manifest
+  rewrite → optimize → delete-file budget → analyze → expectations →
+  indexes → index-lag observation. A due optimize that finds the
+  table over its delete-file budget takes the delete selection into
+  its one rewrite, so the budget stage after it finds nothing left to
+  purge. ``Orchestrator._execute_table`` is
   a loop over it: a stage whose flag is NULL/0 is skipped, otherwise
   its method runs with a lazy day-due check, and when the method
   reports that it did the work, the stage's watermark is stamped.
@@ -365,8 +368,11 @@ class Orchestrator:
         #: pending delete entries, the sweep first merges positional
         #: files (rewrite_position_deletes) and, if still over budget,
         #: materializes them file-granularly (purge_deletes) — the v2
-        #: counterpart of Iceberg's delete-compaction cadence.
-        #: DEFAULT None: purge_deletes REWRITES DATA FILES, so — like
+        #: counterpart of Iceberg's delete-compaction cadence. When
+        #: optimize is due it materializes them instead, in its own
+        #: rewrite (``optimize(purge_deletes=True)``), and the budget
+        #: stage after it has nothing left to do.
+        #: DEFAULT None: purging REWRITES DATA FILES, so — like
         #: every reference maintenance action — data-rewriting
         #: maintenance is opt-in per deployment, never ambient.
         self.max_delete_files = max_delete_files
@@ -879,20 +885,30 @@ class Orchestrator:
         per-scan anti-join for every pending delete file (SCALING.md
         probe) — over budget, first merge positional files without
         touching data, then materialize if a long equality backlog
-        remains."""
+        remains. Runs after optimize, which already purged when it
+        was due (:meth:`_delete_budget_plan`)."""
+        merge, purge = self._delete_budget_plan(table)
+        if merge:
+            table.compact_delete_files(clock=self.clock)
+        if purge:
+            table.purge_deletes(clock=self.clock)
+        return False
+
+    def _delete_budget_plan(self, table) -> tuple[bool, bool]:
+        """``(merge, purge)`` for ``table``'s current snapshot: whether
+        the delete-file budget merges its positional entries into one
+        (``compact_delete_files``), and whether the entries left after
+        that are still over budget (``purge_deletes``). Both False
+        without a budget. The budget stage and a due optimize share
+        it, so optimize purges exactly when the stage would have."""
         if self.max_delete_files is None:
-            return False
+            return False, False
         cur = table.current_snapshot()
         entries = list(cur.delete_files or []) if cur else []
         n_pos = sum(1 for e in entries if e["content"] == "position")
-        if n_pos > self.max_delete_files:
-            entries = list(
-                table.compact_delete_files(clock=self.clock).delete_files
-                or []
-            )
-        if len(entries) > self.max_delete_files:
-            table.purge_deletes(clock=self.clock)
-        return False
+        merge = n_pos > self.max_delete_files
+        left = len(entries) - n_pos + min(n_pos, 1) if merge else len(entries)
+        return merge, left > self.max_delete_files
 
     def _rewrite_manifests(self, table, props, now, day_due) -> bool:
         """Iceberg's rewrite_manifests: fold the commit journal into
@@ -952,6 +968,7 @@ class Orchestrator:
                 clock=self.clock,
                 sort_by=self.optimize_sort_columns,
                 zorder_by=self.optimize_zorder_columns,
+                purge_deletes=self._delete_budget_plan(table)[1],
             )
             if decay_due and depth is not None:
                 self._record_decay_effect(table, depth)
@@ -1486,11 +1503,11 @@ STAGES: tuple[Stage, ...] = (
           Orchestrator._remove_orphan_files),
     Stage("expire_snapshots", *ACTIONS["expire_snapshots"],
           Orchestrator._expire_snapshots),
-    Stage("delete_file_budget", None, None, None,
-          Orchestrator._enforce_delete_file_budget),
     Stage("rewrite_manifests", None, None, None,
           Orchestrator._rewrite_manifests),
     Stage("optimize", *ACTIONS["optimize"], Orchestrator._optimize),
+    Stage("delete_file_budget", None, None, None,
+          Orchestrator._enforce_delete_file_budget),
     Stage("analyze", *ACTIONS["analyze"], Orchestrator._analyze),
     Stage("expectations", "should_check_expectations", "last_checked_on",
           "days_to_check", Orchestrator._check_expectations),

@@ -20,9 +20,11 @@ Mechanics:
   the estimate of the UNION of partition sketches — identical to
   sketching the whole table (HLL registers are a pure max-merge), so
   carrying forward loses nothing;
-- the scan job unions only the changed partitions' files, with their
-  delete entries applied (the rows every reader sees); stats for
-  unchanged partitions are reused verbatim from the prior state;
+- one grouped scan reads only the changed partitions' files, with
+  their delete entries applied (the rows every reader sees), and
+  aggregates per partition — a fixed number of jobs whatever the
+  count of changed partitions; stats for unchanged partitions are
+  reused verbatim from the prior state;
 - the table-level fold (:func:`table_null_fractions`) runs on the
   driver over the collected state, one row per partition.
 
@@ -39,8 +41,10 @@ import hashlib
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from trino_iceberg_maintenance_spark.sources.lake import (
+    _FP,
     ParquetMaintainedTable,
     _canon,
 )
@@ -76,24 +80,44 @@ def partition_fingerprints(table: ParquetMaintainedTable) -> dict[str, tuple]:
     return out
 
 
-def _stats_for_files(
-    table: ParquetMaintainedTable, part: str, files: list[str],
-    entries: list, columns: list[str],
+def _stats_for_partitions(
+    table: ParquetMaintainedTable, parts: list[tuple[str, str, list, list]],
+    columns: list[str],
 ) -> DataFrame:
-    df = table._read_effective(files, entries)
-    return df.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        *[
-            F.count(F.when(F.col(c).isNull(), 1)).alias(f"null_{c}")
-            for c in columns
-        ],
+    """State rows of the ``(partition, fingerprint, files, entries)``
+    in ``parts``: ONE scan of all their files, with the union of their
+    delete entries applied (exact: delete application is per file),
+    grouped by the partition of each row's file. One all-NULL marker
+    row per partition, with no ``_FP``, carries its fingerprint, so a
+    partition whose rows are all deleted still gets its row (zero
+    counts, the sketch of no value)."""
+    files = [f for _, _, fs, _ in parts for f in fs]
+    entries = list({e["path"]: e for _, _, _, es in parts
+                    for e in es}.values())
+    rows = table._read_effective(files, entries, with_lineage=True).select(
+        table._partition_key().alias("partition"),
+        F.lit(None).cast("string").alias("fingerprint"),
+        F.col(_FP),
+        *[F.col(c) for c in columns],
+    )
+    marks = local_frame(
+        table.spark,
+        [(p, fp) + (None,) * (len(columns) + 1) for p, fp, _, _ in parts],
+        T.StructType([T.StructField(f.name, f.dataType, True)
+                      for f in rows.schema.fields]),
+    )
+    return rows.unionByName(marks).groupBy("partition").agg(
+        F.max("fingerprint").alias("fingerprint"),
+        F.count(_FP).alias("row_count"),
+        # a marker row is NULL in every column but is no table row
+        *[(F.count(_FP) - F.count(c)).alias(f"null_{c}") for c in columns],
         # mergeable NDV state: the binary HLL sketch, not an estimate —
         # estimates don't merge, sketches do (register-wise max)
         *[
             F.hll_sketch_agg(F.col(c).cast("string")).alias(f"ndv_{c}")
             for c in columns
         ],
-    ).select(F.lit(part).alias("partition"), "*")
+    )
 
 
 def incremental_partition_stats(
@@ -139,16 +163,8 @@ def incremental_partition_stats(
         else:
             to_compute.append((part, fp, files, entries))
 
-    computed = None
-    for part, fp, files, entries in to_compute:
-        one = _stats_for_files(table, part, files, entries, columns).select(
-            "partition",
-            F.lit(fp).alias("fingerprint"),
-            "row_count",
-            *[f"null_{c}" for c in columns],
-            *[f"ndv_{c}" for c in columns],
-        )
-        computed = one if computed is None else computed.unionByName(one)
+    computed = (_stats_for_partitions(table, to_compute, columns)
+                if to_compute else None)
 
     reused = local_frame(spark, reused_rows, schema) if reused_rows else None
     if computed is None and reused is None:

@@ -117,6 +117,10 @@ def _canon(p: str) -> str:
 # lineage column names reserved by the merge-on-read read path
 _FP, _POS, _FSEQ = "__mor_fp", "__mor_pos", "__mor_fseq"
 
+#: every positional delete file's schema: read with it, a delete file
+#: costs no schema-inference job
+_POS_DELETE_SCHEMA = "file_path string, pos long"
+
 
 def _enc_stat(v) -> tuple[str | None, str | None]:
     """Lossless JSON encoding for a parquet footer min/max value —
@@ -1448,6 +1452,9 @@ class ParquetMaintainedTable:
                 k = k.withColumnRenamed(old, cur)
         return k.select(*cols), cols
 
+    def _read_position_deletes(self, *paths: str) -> DataFrame:
+        return self.spark.read.schema(_POS_DELETE_SCHEMA).parquet(*paths)
+
     def _apply_delete_entries(self, df: DataFrame, entries: list) -> DataFrame:
         """Merge delete files into a lineage-tagged scan: positional
         deletes anti-join on (file, row position); equality deletes
@@ -1457,7 +1464,7 @@ class ParquetMaintainedTable:
         pos = [e for e in entries if e["content"] == "position"]
         eqs = [e for e in entries if e["content"] == "equality"]
         if pos:
-            dels = self.spark.read.parquet(*[e["path"] for e in pos])
+            dels = self._read_position_deletes(*[e["path"] for e in pos])
             cond = (df[_FP] == dels["file_path"]) & (df[_POS] == dels["pos"])
             df = df.join(dels, on=cond, how="left_anti")
         if eqs:
@@ -1523,6 +1530,15 @@ class ParquetMaintainedTable:
             rows, n = rows.repartition(n, _FP), None
         return self._write_data(rows.drop(_FP, _POS), num_files=n)
 
+    def _partition_key(self):
+        """Each row's :meth:`_partition_of` (its file's hive partition
+        path, '' for none) as a column, from its ``_FP`` lineage.
+        ``_metadata.file_path`` is a percent-encoded URI: decoding it,
+        with a literal ``+`` kept, gives back the manifest path."""
+        path = F.try_url_decode(F.replace(F.col(_FP), F.lit("+"), F.lit("%2B")))
+        prefix = _re.escape(_canon(self.data_dir) + os.sep)
+        return F.regexp_extract(path, f"^{prefix}[^/]+/(.*)/[^/]+$", 1)
+
     @staticmethod
     def _entry_applies(entry: dict, canon: set[str],
                        seqmap: dict[str, int]) -> bool:
@@ -1578,7 +1594,7 @@ class ParquetMaintainedTable:
             F.col(_FP).alias("file_path"), F.col(_POS).alias("pos")
         )
         path = self._write_delete_file(matched)
-        written = self.spark.read.parquet(path)
+        written = self._read_position_deletes(path)
         targets = sorted(
             r[0] for r in written.select("file_path").distinct().collect()
         )
@@ -1637,13 +1653,12 @@ class ParquetMaintainedTable:
         # the delete relation readers anti-join against actually
         # shrinks
         merged = (
-            self.spark.read.parquet(*[e["path"] for e in pos])
-            .select("file_path", "pos")
+            self._read_position_deletes(*[e["path"] for e in pos])
             .join(F.broadcast(live_df), "file_path", "left_semi")
             .distinct()
         )
         path = self._write_delete_file(merged)
-        written = self.spark.read.parquet(path)
+        written = self._read_position_deletes(path)
         targets = sorted(
             r[0]
             for r in written.select("file_path").distinct().collect()
@@ -1700,45 +1715,145 @@ class ParquetMaintainedTable:
 
     def purge_deletes(self, clock=None) -> Snapshot:
         """Materialize pending delete files into data (Iceberg's
-        ``rewrite_position_deletes`` + a data rewrite): ONLY the files
-        a delete actually touches are rewritten (positional targets
-        are named in the entry; equality-affected files come from one
+        ``rewrite_position_deletes`` + a data rewrite): the delete
+        selection of :meth:`_rewrite_data_files`. ONLY the files a
+        delete actually touches are rewritten (positional targets are
+        named in the entry; equality-affected files come from one
         semi-join), everything else carries by reference, and the new
         snapshot has no delete files. The read-side anti-joins
         disappear until the next DELETE."""
         snap = self.current_snapshot()
         if snap is None:
             raise ValueError(f"table {self.path} has no snapshots")
-        entries = list(snap.delete_files or [])
-        if not entries:
+        if not snap.delete_files:
             return snap
-        canon_live = {_canon(f): f for f in snap.files}
-        affected: set[str] = set()
+        return self._rewrite_data_files(snap, by_size=False,
+                                        by_deletes=True, clock=clock)
+
+    def _delete_hits(self, files: list[str], entries: list) -> set[str]:
+        """The ``files`` a pending delete entry removes rows from:
+        positional targets, every file for a positional entry with NO
+        target list (legacy / hand-authored manifest: match-anything,
+        mirroring :meth:`_entry_applies` — skipping it would drop the
+        entry and resurrect the deleted rows), and the equality
+        deletes' semi-join."""
+        canon = {_canon(f): f for f in files}
+        hits: set[str] = set()
         for e in entries:
             if e["content"] == "position":
                 tgts = e.get("targets")
-                if tgts is None:
-                    # a positional entry with NO target list (legacy /
-                    # hand-authored manifest) must be treated as
-                    # match-anything, mirroring _entry_applies — the
-                    # zero-file reading would drop the entry and
-                    # resurrect the deleted rows
-                    affected |= set(canon_live.values())
-                else:
-                    affected |= {
-                        canon_live[t] for t in tgts if t in canon_live
-                    }
-        affected |= self._eq_matched_files(
-            snap.files, [e for e in entries if e["content"] == "equality"]
+                hits |= set(files) if tgts is None else {
+                    canon[t] for t in tgts if t in canon
+                }
+        return hits | self._eq_matched_files(
+            sorted(set(files) - hits),
+            [e for e in entries if e["content"] == "equality"],
         )
+
+    def _rewrite_data_files(
+        self,
+        snap: Snapshot | None,
+        by_size: bool,
+        by_deletes: bool,
+        target_file_size: int = DEFAULT_TARGET_FILE_SIZE,
+        min_input_files: int = 1,
+        where_partition: str | None = None,
+        clock=None,
+    ) -> Snapshot:
+        """The one rewrite planner (Iceberg's ``rewrite_data_files``):
+        select files per partition, read them once with their deletes
+        applied, write them in ONE Spark job and commit once.
+
+        - ``by_size`` selects every file of a partition the rewrite
+          shrinks: at least ``max(min_input_files, 2)`` files and fewer
+          target-size outputs than inputs. An unpartitioned table is
+          always rewritten whole.
+        - ``by_deletes`` adds the files a pending delete removes rows
+          from (:meth:`_delete_hits`).
+        - ``where_partition`` keeps both to partitions whose hive spec
+          starts with the prefix.
+
+        Partition ``p`` gets at most ``k_p = min(selected files,
+        ceil(selected bytes / target))`` files, so never more than the
+        rewrite removed from it. Delete entries that no kept file
+        needs leave the snapshot."""
+        files = list(snap.files) if snap else []
+        entries = list(snap.delete_files or []) if snap else []
+        groups: dict[str, list[str]] = {}
+        for f in files:
+            part = self._partition_of(f) if self.partition_cols else ""
+            if (not self.partition_cols or where_partition is None
+                    or part.startswith(where_partition)):
+                groups.setdefault(part, []).append(f)
+        size = {f: os.path.getsize(f) for fs in groups.values() for f in fs}
+        picked: set[str] = set()
+        if by_size:
+            for pfiles in groups.values():
+                k = math.ceil(sum(size[f] for f in pfiles) / target_file_size)
+                if not self.partition_cols or (
+                    len(pfiles) >= max(min_input_files, 2)
+                    and k < len(pfiles)
+                ):
+                    picked.update(pfiles)
+        if by_deletes and entries:
+            rest = [f for fs in groups.values() for f in fs if f not in picked]
+            picked |= self._delete_hits(rest, entries)
+        # an entry leaves with the rewrite unless a kept file may still
+        # need it; the delete selection proved its scope's kept files
+        # untouched
+        seqmap = self._file_seq_of() if entries else {}
+        checked = set(size) if by_deletes else set()
+        kept = {_canon(f) for f in files
+                if f not in picked and f not in checked}
+        done = [e for e in entries
+                if not kept or not self._entry_applies(e, kept, seqmap)]
         new_files = []
-        if affected:
-            survivors = self._read_effective(sorted(affected), entries,
-                                             with_lineage=True)
-            new_files = self._write_rewrite(survivors, len(affected))
-        return self._commit(snap, added=new_files, removed=affected,
-                            remove_deletes=entries, operation="replace",
+        if picked:
+            rewritten = sorted(picked)
+            canon = {_canon(f) for f in rewritten}
+            rows = self._read_effective(
+                rewritten,
+                [e for e in entries
+                 if self._entry_applies(e, canon, seqmap)],
+                with_lineage=True,
+            )
+            k = {}
+            for part, pfiles in groups.items():
+                sel = [f for f in pfiles if f in picked]
+                if sel:
+                    k[part] = min(len(sel), max(1, math.ceil(
+                        sum(size[f] for f in sel) / target_file_size
+                    )))
+            nbytes = sum(size[f] for f in rewritten)
+            new_files = self._write_groups(
+                rows, k, fits_one=nbytes <= target_file_size
+            )
+        return self._commit(snap, added=new_files, removed=picked,
+                            remove_deletes=done, operation="replace",
                             clock=clock)
+
+    def _write_groups(self, rows: DataFrame, k: dict[str, int],
+                      fits_one: bool) -> list[str]:
+        """Write rewritten ``rows`` (with lineage) as at most ``k[p]``
+        files in each partition ``p``, in ONE Spark job. A rewrite that
+        fits one target file (``fits_one``) runs as one task, with no
+        shuffle: one file per partition. Otherwise each row goes to
+        one of its partition's ``k[p]`` buckets by a hash of its
+        lineage, and ``(partition, bucket)`` is hash-partitioned over
+        ``sum(k)`` tasks: colliding buckets share a task, so a
+        partition can get fewer files, never more."""
+        n = sum(k.values())
+        if fits_one or n == 1:
+            rows = rows.coalesce(1)
+        elif not self.partition_cols:
+            rows = rows.repartition(n)
+        else:
+            part = self._partition_key()
+            k_of = F.create_map(*[F.lit(x) for p in sorted(k)
+                                  for x in (p, k[p])])
+            bucket = F.pmod(F.xxhash64(_FP, _POS), k_of[part])
+            rows = rows.repartition(n, part, bucket)
+        return self._write_data(rows.drop(_FP, _POS))
 
     def delete_files_df(self) -> DataFrame:
         """The ``$delete_files`` metadata relation: pending delete
@@ -2737,11 +2852,16 @@ class ParquetMaintainedTable:
         sort_by: list[str] | None = None,
         zorder_by: list[str] | None = None,
         where_partition: str | None = None,
+        purge_deletes: bool = False,
     ) -> Snapshot:
-        """Bin-pack compaction (M3): rewrite data into
-        ceil(bytes / target) files, committed as ONE new snapshot.
-        Old files stay owned by older snapshots until expiry — time
-        travel keeps working.
+        """Bin-pack compaction (M3): the size selection of
+        :meth:`_rewrite_data_files` — rewrite data into
+        ceil(bytes / target) files per partition, written in one Spark
+        job and committed as ONE new snapshot. Old files stay owned by
+        older snapshots until expiry — time travel keeps working.
+        ``purge_deletes`` adds the delete selection (:meth:`purge_deletes`)
+        to the same plan, so one rewrite both compacts and leaves no
+        delete entry pending.
 
         ``sort_by`` selects the SORT rewrite strategy (Iceberg's
         ``rewrite_data_files(strategy => 'sort')``): output files are
@@ -2764,8 +2884,10 @@ class ParquetMaintainedTable:
         (``target_files < input_files`` and at least
         ``min_input_files`` inputs) are rewritten — the 100 TB shape:
         compact the small-file tail, leave healthy partitions'
-        files untouched in the new snapshot. With ``sort_by`` every
-        partition is rewritten (clustering is the point, not size).
+        files untouched in the new snapshot. With ``sort_by`` or
+        ``zorder_by`` every partition is rewritten (clustering is the
+        point, not size), one write per partition, and
+        ``purge_deletes`` adds nothing.
 
         ``where_partition`` scopes the rewrite to partitions whose
         hive spec starts with the given prefix (Trino's ``ALTER TABLE
@@ -2775,6 +2897,14 @@ class ParquetMaintainedTable:
 
         if sort_by and zorder_by:
             raise ValueError("sort_by and zorder_by are mutually exclusive")
+        snap = self.current_snapshot()
+        if not (sort_by or zorder_by):
+            return self._rewrite_data_files(
+                snap, by_size=True, by_deletes=purge_deletes,
+                target_file_size=target_file_size,
+                min_input_files=min_input_files,
+                where_partition=where_partition, clock=clock,
+            )
 
         def _cluster_key(df: DataFrame) -> DataFrame:
             from trino_iceberg_maintenance_spark.functions.zorder import (
@@ -2807,18 +2937,15 @@ class ParquetMaintainedTable:
             if zorder_by:
                 df = _cluster_key(df)
                 cluster_cols = ["__z"]
-            if cluster_cols:
-                clustered = (
-                    df.repartitionByRange(k, *cluster_cols)
-                    if k > 1
-                    else df.coalesce(1)
-                ).sortWithinPartitions(*cluster_cols)
-                if zorder_by:
-                    clustered = clustered.drop("__z")
-                return self._write_data(clustered, num_files=None)
-            return self._write_data(df, num_files=k)
+            clustered = (
+                df.repartitionByRange(k, *cluster_cols)
+                if k > 1
+                else df.coalesce(1)
+            ).sortWithinPartitions(*cluster_cols)
+            if zorder_by:
+                clustered = clustered.drop("__z")
+            return self._write_data(clustered, num_files=None)
 
-        snap = self.current_snapshot()
         files = list(snap.files) if snap else []
         entries = list(snap.delete_files or []) if snap else []
         if not self.partition_cols:
@@ -2844,10 +2971,6 @@ class ParquetMaintainedTable:
                 continue  # out of scope — carried untouched
             total = sum(os.path.getsize(f) for f in pfiles)
             k = max(1, math.ceil(total / target_file_size))
-            if not (sort_by or zorder_by) and (
-                len(pfiles) < max(min_input_files, 2) or k >= len(pfiles)
-            ):
-                continue  # already healthy — no rewrite
             rewritten.extend(pfiles)
             new_files.extend(_rewrite(self._read_effective(pfiles, entries), k))
         # delete entries survive only while a non-rewritten file still
