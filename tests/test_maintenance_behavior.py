@@ -783,11 +783,11 @@ def _decayed_docs_table(spark, path, clock, cls=ParquetMaintainedTable):
 
 def test_stage_contract_order_and_one_stamp_per_watermark(env):
     """Every stage enabled and due on one table: the orchestrator calls
-    the lake in the fixed stage order (orphans, expiry, manifest
-    rewrite, optimize, delete-file budget, analyze, expectations,
-    indexes, index lag) and stamps each watermark exactly once. The due
-    optimize takes the over-budget deletes into its rewrite, so the
-    budget stage finds nothing to merge or purge."""
+    the lake in the fixed stage order (orphans, expiry, delete-file
+    budget, manifest rewrite, optimize, analyze, expectations, indexes,
+    index lag) and stamps each watermark exactly once. Optimize is due,
+    so the budget stage leaves the over-budget deletes to optimize,
+    whose one rewrite is a purge with bin-pack."""
     spark, tmp_path, clock, sched, tables, stats_log, orch = env
     calls: list[str] = []
     t = _decayed_docs_table(spark, str(tmp_path / "all"), clock,
@@ -821,11 +821,11 @@ def test_stage_contract_order_and_one_stamp_per_watermark(env):
     assert calls == [
         "remove_orphan_files",
         "expire_snapshots",
+        "current_snapshot",
         "manifest_log_entries", "rewrite_manifests",
         "clustering_depth_report", "table_properties",
-        "current_snapshot", "optimize",
+        "current_snapshot", "purge_deletes",
         "clustering_depth_report", "unset_table_properties",
-        "current_snapshot",
         "backfill_file_stats", "read",
         "read",
         "current_snapshot", "read",

@@ -1,4 +1,4 @@
-"""The one rewrite planner: ``optimize(purge_deletes=True)`` compacts
+"""The one rewrite planner: ``purge_deletes(bin_pack=True)`` compacts
 and materializes pending deletes in one read, one partition-aligned
 write and one commit, and a sweep whose optimize is due purges through
 it instead of a second rewrite.
@@ -66,7 +66,7 @@ def _per_part(t, files):
 @pytest.mark.parametrize("kind", ["position", "equality", "targetless"])
 def test_fused_rewrite_matches_model(spark, tmp_path, kind):
     """Positional, equality and target-less positional deletes: one
-    fused optimize leaves no delete entry and the content equals a
+    fused rewrite leaves no delete entry and the content equals a
     model table."""
     t = _table(spark, tmp_path / "t")
     if kind == "equality":
@@ -80,7 +80,7 @@ def test_fused_rewrite_matches_model(spark, tmp_path, kind):
             e.pop("targets", None)
         t._write_manifest(snaps)
     n = len(t._load_manifest())
-    snap = t.optimize(purge_deletes=True)
+    snap = t.purge_deletes(bin_pack=True)
     assert snap.delete_files is None
     assert len(t._load_manifest()) == n + 1
     kept = [(i, f"v{i}", i % 3) for i in range(120) if i % 7 != 0]
@@ -101,7 +101,7 @@ def test_fused_rewrite_is_partition_aligned(spark, tmp_path, n_parts):
             p = t._partition_of(f)
             per_part_bytes[p] = per_part_bytes.get(p, 0) + os.path.getsize(f)
         tgt = target or max(1, min(per_part_bytes.values()) // 2)
-        t.optimize(target_file_size=tgt, purge_deletes=True)
+        t.purge_deletes(bin_pack=True, target_file_size=tgt)
         after = t.current_snapshot()
         assert after.delete_files is None
         new = _per_part(t, set(after.files) - set(before.files))
@@ -129,13 +129,13 @@ def test_delete_during_fused_rewrite_conflicts(spark, tmp_path):
 
     t._commit = racing_commit
     with pytest.raises(CommitConflict):
-        t.optimize(purge_deletes=True)
+        t.purge_deletes(bin_pack=True)
     ids = {r.id for r in t.read().collect()}
     assert 1 not in ids and 0 not in ids and 2 in ids
 
 
 def test_job_count_does_not_grow_with_partitions(spark, tmp_path):
-    """The fused optimize, in one task and spread over tasks, and the
+    """The fused rewrite, in one task and spread over tasks, and the
     incremental ANALYZE scan run as many Spark jobs at P=6 as at P=3."""
     counts = {}
     for n_parts in (3, 6):
@@ -144,8 +144,8 @@ def test_job_count_does_not_grow_with_partitions(spark, tmp_path):
             t.delete_where("id % 5 = 0")
             counts[("optimize", target, n_parts)] = _jobs(
                 spark, f"opt{n_parts}_{target}",
-                lambda: t.optimize(target_file_size=target,
-                                   purge_deletes=True))
+                lambda: t.purge_deletes(bin_pack=True,
+                                        target_file_size=target))
         t = _table(spark, tmp_path / f"s{n_parts}", n_parts)
         t.delete_where("id % 5 = 0")
         state, recomputed = incremental_partition_stats(t, ["id", "v", "p"])
@@ -174,7 +174,8 @@ def _recording(calls):
 
         @functools.wraps(orig)
         def method(self, *args, **kwargs):
-            calls.append(name)
+            calls.append(name + ("(bin_pack)" if kwargs.get("bin_pack")
+                                 else ""))
             return orig(self, *args, **kwargs)
         return method
 
@@ -184,29 +185,32 @@ def _recording(calls):
     })
 
 
-def _sweep(spark, tmp_path, t, optimize_due):
+def _sweep(spark, tmp_path, t, optimize_due, **row_values):
     sched = str(tmp_path / "schedule")
     row = {f.name: None for f in SCHEDULE_SCHEMA.fields}
     row.update(table_name="t", should_optimize=1 if optimize_due else None,
                days_to_optimize=1)
+    row.update(row_values)
     write_rows(sched, [tuple(row[f.name] for f in SCHEDULE_SCHEMA.fields)],
                SCHEDULE_SCHEMA)
     o = Orchestrator(spark, sched, table_resolver=lambda n: t,
                      clock=lambda: T0 + dt.timedelta(days=2),
                      max_delete_files=0)
-    assert o.run() and not o.errors
+    o.run()
+    return o.errors
 
 
 def test_sweep_with_optimize_due_rewrites_once(spark, tmp_path):
-    """Optimize due and the table over its delete budget: one rewrite,
-    one snapshot, no purge_deletes call and no delete entry left."""
+    """Optimize due and the table over its delete budget: one rewrite
+    (the optimize stage's purge with bin-pack), one snapshot, no merge
+    and no delete entry left."""
     calls: list[str] = []
     t = _table(spark, tmp_path / "t", cls=_recording(calls))
     t.delete_where("id % 7 = 0")
     t.delete_where("id % 11 = 0")
     n = len(t._load_manifest())
-    _sweep(spark, tmp_path, t, optimize_due=True)
-    assert calls == ["optimize"]
+    assert not _sweep(spark, tmp_path, t, optimize_due=True)
+    assert calls == ["purge_deletes(bin_pack)"]
     assert len(t._load_manifest()) == n + 1
     assert not t.current_snapshot().delete_files
     kept = [(i, f"v{i}", i % 3) for i in range(120) if i % 7 and i % 11]
@@ -220,8 +224,36 @@ def test_budget_stage_alone_merges_and_purges(spark, tmp_path):
     t = _table(spark, tmp_path / "t", cls=_recording(calls))
     t.delete_where("id % 7 = 0")
     t.delete_where("id % 11 = 0")
-    _sweep(spark, tmp_path, t, optimize_due=False)
+    assert not _sweep(spark, tmp_path, t, optimize_due=False)
     assert calls == ["compact_delete_files", "purge_deletes"]
     assert not t.current_snapshot().delete_files
     kept = [(i, f"v{i}", i % 3) for i in range(120) if i % 7 and i % 11]
     assert t.content_hash() == _model_hash(spark, tmp_path / "m", kept)
+
+
+def test_budget_stage_purges_when_optimize_stage_raises(spark, tmp_path):
+    """A watermark with NULL days makes the optimize stage raise. The
+    budget stage runs before it, so the table still gets its merge and
+    purge, and the sweep records the optimize error."""
+    calls: list[str] = []
+    t = _table(spark, tmp_path / "t", cls=_recording(calls))
+    t.delete_where("id % 7 = 0")
+    t.delete_where("id % 11 = 0")
+    errors = _sweep(spark, tmp_path, t, optimize_due=True,
+                    last_optimized_on=T0, days_to_optimize=None)
+    assert len(errors) == 1 and "days period is NULL" in str(errors[0])
+    assert calls == ["compact_delete_files", "purge_deletes"]
+    assert not t.current_snapshot().delete_files
+
+
+def test_unpartitioned_optimize_splits_an_oversized_file(spark, tmp_path):
+    """An unpartitioned table is rewritten into ceil(bytes / target)
+    files, so one file three targets large becomes three files."""
+    t = ParquetMaintainedTable.create(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame(
+        [(i, f"v{i}", i % 3) for i in range(300)], SCHEMA).coalesce(1))
+    (only,) = t.current_snapshot().files
+    t.optimize(target_file_size=os.path.getsize(only) // 3 + 1)
+    assert len(t.current_snapshot().files) == 3
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (i, f"v{i}", i % 3) for i in range(300)]

@@ -9,13 +9,13 @@ Reference mapping (SURVEY.md §2.5, §3):
 - ``MaintenanceTask.execute`` (``__main__.py:121-201``): a fixed
   per-table pipeline of stages. :data:`STAGES` is the single place a
   stage's flag column, cadence (watermark + days columns) and work
-  method are defined: orphan removal → snapshot expiry → manifest
-  rewrite → optimize → delete-file budget → analyze → expectations →
-  indexes → index-lag observation. A due optimize that finds the
-  table over its delete-file budget takes the delete selection into
-  its one rewrite, so the budget stage after it finds nothing left to
-  purge. ``Orchestrator._execute_table`` is
-  a loop over it: a stage whose flag is NULL/0 is skipped, otherwise
+  method are defined: orphan removal → snapshot expiry → delete-file
+  budget → manifest rewrite → optimize → analyze → expectations →
+  indexes → index-lag observation. When the table is over its
+  delete-file budget and optimize is due on its day cadence, the
+  budget stage leaves the backlog to optimize, whose one rewrite
+  both compacts and purges (``purge_deletes(bin_pack=True)``).
+  ``Orchestrator._execute_table`` is a loop over it: a stage whose flag is NULL/0 is skipped, otherwise
   its method runs with a lazy day-due check, and when the method
   reports that it did the work, the stage's watermark is stamped.
   Stages without a flag gate themselves on the orchestrator's
@@ -369,9 +369,10 @@ class Orchestrator:
         #: files (rewrite_position_deletes) and, if still over budget,
         #: materializes them file-granularly (purge_deletes) — the v2
         #: counterpart of Iceberg's delete-compaction cadence. When
-        #: optimize is due it materializes them instead, in its own
-        #: rewrite (``optimize(purge_deletes=True)``), and the budget
-        #: stage after it has nothing left to do.
+        #: the purge is due and optimize is due on its day cadence,
+        #: optimize's bin-pack takes the purge into its one rewrite
+        #: (``purge_deletes(bin_pack=True)``) and the budget stage
+        #: neither merges nor purges.
         #: DEFAULT None: purging REWRITES DATA FILES, so — like
         #: every reference maintenance action — data-rewriting
         #: maintenance is opt-in per deployment, never ambient.
@@ -885,9 +886,11 @@ class Orchestrator:
         per-scan anti-join for every pending delete file (SCALING.md
         probe) — over budget, first merge positional files without
         touching data, then materialize if a long equality backlog
-        remains. Runs after optimize, which already purged when it
-        was due (:meth:`_delete_budget_plan`)."""
+        remains. When the purge is due and so is optimize, the backlog
+        is left to optimize's rewrite (:meth:`_optimize_takes_purge`)."""
         merge, purge = self._delete_budget_plan(table)
+        if purge and self._optimize_takes_purge(props, now):
+            return False
         if merge:
             table.compact_delete_files(clock=self.clock)
         if purge:
@@ -900,7 +903,8 @@ class Orchestrator:
         (``compact_delete_files``), and whether the entries left after
         that are still over budget (``purge_deletes``). Both False
         without a budget. The budget stage and a due optimize share
-        it, so optimize purges exactly when the stage would have."""
+        it, so optimize purges exactly when the stage would have.
+        Exact: a merge always leaves one positional entry."""
         if self.max_delete_files is None:
             return False, False
         cur = table.current_snapshot()
@@ -909,6 +913,21 @@ class Orchestrator:
         merge = n_pos > self.max_delete_files
         left = len(entries) - n_pos + min(n_pos, 1) if merge else len(entries)
         return merge, left > self.max_delete_files
+
+    def _optimize_takes_purge(self, props, now) -> bool:
+        """Whether this sweep's optimize stage will bin-pack on its
+        day cadence, so a due purge can ride in its rewrite. A sort or
+        z-order optimize cannot take it, and a cadence that cannot be
+        read counts as not due: the optimize stage then raises on its
+        own, after the budget stage has purged."""
+        flag, watermark, days = ACTIONS["optimize"]
+        if (self.optimize_sort_columns or self.optimize_zorder_columns
+                or not _truthy(getattr(props, flag))):
+            return False
+        try:
+            return _due(getattr(props, watermark), getattr(props, days), now)
+        except ValueError:
+            return False
 
     def _rewrite_manifests(self, table, props, now, day_due) -> bool:
         """Iceberg's rewrite_manifests: fold the commit journal into
@@ -964,12 +983,18 @@ class Orchestrator:
                 depth = None  # no stats → day cadence only
         optimized = decay_due or day_due()
         if optimized:
-            table.optimize(
-                clock=self.clock,
-                sort_by=self.optimize_sort_columns,
-                zorder_by=self.optimize_zorder_columns,
-                purge_deletes=self._delete_budget_plan(table)[1],
-            )
+            if (not (self.optimize_sort_columns
+                     or self.optimize_zorder_columns)
+                    and self._delete_budget_plan(table)[1]):
+                # the budget stage left an over-budget backlog: one
+                # rewrite compacts and purges
+                table.purge_deletes(clock=self.clock, bin_pack=True)
+            else:
+                table.optimize(
+                    clock=self.clock,
+                    sort_by=self.optimize_sort_columns,
+                    zorder_by=self.optimize_zorder_columns,
+                )
             if decay_due and depth is not None:
                 self._record_decay_effect(table, depth)
         if depth is not None:
@@ -1503,11 +1528,11 @@ STAGES: tuple[Stage, ...] = (
           Orchestrator._remove_orphan_files),
     Stage("expire_snapshots", *ACTIONS["expire_snapshots"],
           Orchestrator._expire_snapshots),
+    Stage("delete_file_budget", None, None, None,
+          Orchestrator._enforce_delete_file_budget),
     Stage("rewrite_manifests", None, None, None,
           Orchestrator._rewrite_manifests),
     Stage("optimize", *ACTIONS["optimize"], Orchestrator._optimize),
-    Stage("delete_file_budget", None, None, None,
-          Orchestrator._enforce_delete_file_budget),
     Stage("analyze", *ACTIONS["analyze"], Orchestrator._analyze),
     Stage("expectations", "should_check_expectations", "last_checked_on",
           "days_to_check", Orchestrator._check_expectations),

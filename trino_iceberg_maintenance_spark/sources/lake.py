@@ -1519,17 +1519,6 @@ class ParquetMaintainedTable:
         df.coalesce(1).write.mode("overwrite").parquet(out)
         return sorted(glob.glob(os.path.join(out, "*.parquet")))[0]
 
-    def _write_rewrite(self, rows: DataFrame, n: int) -> list[str]:
-        """Write the surviving rows of ``n`` rewritten files, given with
-        their ``_FP`` lineage. On a partitioned table rows are grouped
-        by the file they came from, so no partition gets more files
-        than the rewrite removed from it (a round-robin deal would
-        spread every partition over all ``n`` tasks: up to n × P
-        files)."""
-        if self.partition_cols:
-            rows, n = rows.repartition(n, _FP), None
-        return self._write_data(rows.drop(_FP, _POS), num_files=n)
-
     def _partition_key(self):
         """Each row's :meth:`_partition_of` (its file's hive partition
         path, '' for none) as a column, from its ``_FP`` lineage.
@@ -1584,7 +1573,7 @@ class ParquetMaintainedTable:
                 survivors = self._read_effective(
                     hit, entries, with_lineage=True
                 ).filter(~F.coalesce(cond, F.lit(False)))
-                new_files = self._write_rewrite(survivors, len(hit))
+                new_files = self._write_groups(survivors, hit)
             return self._commit(snap, added=new_files, removed=hit,
                                 operation="overwrite", clock=clock)
         if mode != "merge-on-read":
@@ -1713,7 +1702,12 @@ class ParquetMaintainedTable:
             }
         return out
 
-    def purge_deletes(self, clock=None) -> Snapshot:
+    def purge_deletes(
+        self,
+        clock=None,
+        bin_pack: bool = False,
+        target_file_size: int = DEFAULT_TARGET_FILE_SIZE,
+    ) -> Snapshot:
         """Materialize pending delete files into data (Iceberg's
         ``rewrite_position_deletes`` + a data rewrite): the delete
         selection of :meth:`_rewrite_data_files`. ONLY the files a
@@ -1721,14 +1715,23 @@ class ParquetMaintainedTable:
         named in the entry; equality-affected files come from one
         semi-join), everything else carries by reference, and the new
         snapshot has no delete files. The read-side anti-joins
-        disappear until the next DELETE."""
+        disappear until the next DELETE.
+
+        ``bin_pack`` adds :meth:`optimize`'s size selection to the same
+        plan: one read, one write job and one commit both compact the
+        table and leave no delete entry, where a purge followed by an
+        optimize would rewrite the purged partitions twice. Either way
+        the rewritten files are written ``target_file_size`` apart
+        (:meth:`_write_groups`)."""
         snap = self.current_snapshot()
         if snap is None:
             raise ValueError(f"table {self.path} has no snapshots")
-        if not snap.delete_files:
+        if not snap.delete_files and not bin_pack:
             return snap
-        return self._rewrite_data_files(snap, by_size=False,
-                                        by_deletes=True, clock=clock)
+        return self._rewrite_data_files(snap, by_size=bin_pack,
+                                        by_deletes=True,
+                                        target_file_size=target_file_size,
+                                        clock=clock)
 
     def _delete_hits(self, files: list[str], entries: list) -> set[str]:
         """The ``files`` a pending delete entry removes rows from:
@@ -1773,10 +1776,9 @@ class ParquetMaintainedTable:
         - ``where_partition`` keeps both to partitions whose hive spec
           starts with the prefix.
 
-        Partition ``p`` gets at most ``k_p = min(selected files,
-        ceil(selected bytes / target))`` files, so never more than the
-        rewrite removed from it. Delete entries that no kept file
-        needs leave the snapshot."""
+        The selected files are written as :meth:`_write_groups` lays
+        them out. Delete entries that no kept file needs leave the
+        snapshot."""
         files = list(snap.files) if snap else []
         entries = list(snap.delete_files or []) if snap else []
         groups: dict[str, list[str]] = {}
@@ -1817,33 +1819,38 @@ class ParquetMaintainedTable:
                  if self._entry_applies(e, canon, seqmap)],
                 with_lineage=True,
             )
-            k = {}
-            for part, pfiles in groups.items():
-                sel = [f for f in pfiles if f in picked]
-                if sel:
-                    k[part] = min(len(sel), max(1, math.ceil(
-                        sum(size[f] for f in sel) / target_file_size
-                    )))
-            nbytes = sum(size[f] for f in rewritten)
-            new_files = self._write_groups(
-                rows, k, fits_one=nbytes <= target_file_size
-            )
+            new_files = self._write_groups(rows, rewritten, target_file_size)
         return self._commit(snap, added=new_files, removed=picked,
                             remove_deletes=done, operation="replace",
                             clock=clock)
 
-    def _write_groups(self, rows: DataFrame, k: dict[str, int],
-                      fits_one: bool) -> list[str]:
-        """Write rewritten ``rows`` (with lineage) as at most ``k[p]``
-        files in each partition ``p``, in ONE Spark job. A rewrite that
-        fits one target file (``fits_one``) runs as one task, with no
-        shuffle: one file per partition. Otherwise each row goes to
-        one of its partition's ``k[p]`` buckets by a hash of its
-        lineage, and ``(partition, bucket)`` is hash-partitioned over
-        ``sum(k)`` tasks: colliding buckets share a task, so a
+    def _write_groups(self, rows: DataFrame, files: list[str],
+                      target_file_size: int = DEFAULT_TARGET_FILE_SIZE
+                      ) -> list[str]:
+        """Write the rows that replace ``files``, given with their
+        ``_FP`` lineage, in ONE Spark job: ``k_p = ceil(bytes_p /
+        target)`` files per partition ``p``, at least one, and on a
+        partitioned table never more than the files it removed from
+        ``p`` (a partition's few small files must not become n × P
+        files). A rewrite that fits one target file runs as one task,
+        with no shuffle: one file per partition. Otherwise each row
+        goes to one of its partition's ``k_p`` buckets by a hash of
+        its lineage, and ``(partition, bucket)`` is hash-partitioned
+        over ``sum(k)`` tasks: colliding buckets share a task, so a
         partition can get fewer files, never more."""
+        size = {f: os.path.getsize(f) for f in files}
+        by_part: dict[str, list[str]] = {}
+        for f in files:
+            part = self._partition_of(f) if self.partition_cols else ""
+            by_part.setdefault(part, []).append(f)
+        k = {}
+        for part, pfiles in by_part.items():
+            k[part] = max(1, math.ceil(
+                sum(size[f] for f in pfiles) / target_file_size))
+            if self.partition_cols:
+                k[part] = min(k[part], len(pfiles))
         n = sum(k.values())
-        if fits_one or n == 1:
+        if sum(size.values()) <= target_file_size or n == 1:
             rows = rows.coalesce(1)
         elif not self.partition_cols:
             rows = rows.repartition(n)
@@ -1851,7 +1858,8 @@ class ParquetMaintainedTable:
             part = self._partition_key()
             k_of = F.create_map(*[F.lit(x) for p in sorted(k)
                                   for x in (p, k[p])])
-            bucket = F.pmod(F.xxhash64(_FP, _POS), k_of[part])
+            lineage = [c for c in (_FP, _POS) if c in rows.columns]
+            bucket = F.pmod(F.xxhash64(*lineage), k_of[part])
             rows = rows.repartition(n, part, bucket)
         return self._write_data(rows.drop(_FP, _POS))
 
@@ -2852,16 +2860,14 @@ class ParquetMaintainedTable:
         sort_by: list[str] | None = None,
         zorder_by: list[str] | None = None,
         where_partition: str | None = None,
-        purge_deletes: bool = False,
     ) -> Snapshot:
         """Bin-pack compaction (M3): the size selection of
         :meth:`_rewrite_data_files` — rewrite data into
         ceil(bytes / target) files per partition, written in one Spark
         job and committed as ONE new snapshot. Old files stay owned by
         older snapshots until expiry — time travel keeps working.
-        ``purge_deletes`` adds the delete selection (:meth:`purge_deletes`)
-        to the same plan, so one rewrite both compacts and leaves no
-        delete entry pending.
+        :meth:`purge_deletes` with ``bin_pack`` runs the same plan
+        with the delete selection added.
 
         ``sort_by`` selects the SORT rewrite strategy (Iceberg's
         ``rewrite_data_files(strategy => 'sort')``): output files are
@@ -2886,8 +2892,9 @@ class ParquetMaintainedTable:
         compact the small-file tail, leave healthy partitions'
         files untouched in the new snapshot. With ``sort_by`` or
         ``zorder_by`` every partition is rewritten (clustering is the
-        point, not size), one write per partition, and
-        ``purge_deletes`` adds nothing.
+        point, not size), one write per partition. An unpartitioned
+        table is rewritten whole into ceil(bytes / target) files, so
+        an oversized file is split.
 
         ``where_partition`` scopes the rewrite to partitions whose
         hive spec starts with the given prefix (Trino's ``ALTER TABLE
@@ -2900,7 +2907,7 @@ class ParquetMaintainedTable:
         snap = self.current_snapshot()
         if not (sort_by or zorder_by):
             return self._rewrite_data_files(
-                snap, by_size=True, by_deletes=purge_deletes,
+                snap, by_size=True, by_deletes=False,
                 target_file_size=target_file_size,
                 min_input_files=min_input_files,
                 where_partition=where_partition, clock=clock,
@@ -3035,7 +3042,7 @@ class ParquetMaintainedTable:
                     .join(src, on, "inner")
                     .select(*cols, _FP)
                 )
-            new_files.extend(self._write_rewrite(survivors, len(hit)))
+            new_files.extend(self._write_groups(survivors, hit))
         if insert_not_matched:
             existing_keys = (
                 self._read_effective(target_files, entries)
