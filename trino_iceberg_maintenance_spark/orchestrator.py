@@ -15,9 +15,10 @@ Reference mapping (SURVEY.md §2.5, §3):
   delete-file budget and optimize is due on its day cadence, the
   budget stage leaves the backlog to optimize, whose one rewrite
   both compacts and purges (``purge_deletes(bin_pack=True)``).
-  ``Orchestrator._execute_table`` is a loop over it: a stage whose flag is NULL/0 is skipped, otherwise
-  its method runs with a lazy day-due check, and when the method
-  reports that it did the work, the stage's watermark is stamped.
+  ``Orchestrator._execute_table`` is a loop over it: a stage whose
+  flag is NULL/0 is skipped, otherwise its method runs with a lazy
+  day-due check, and when the method reports that it did the work,
+  the stage's watermark is stamped.
   Stages without a flag gate themselves on the orchestrator's
   settings. The reference's four triples come from
   ``plans.due.ACTIONS``, and ``fleet_report``'s ``*_due`` columns are
@@ -888,31 +889,34 @@ class Orchestrator:
         touching data, then materialize if a long equality backlog
         remains. When the purge is due and so is optimize, the backlog
         is left to optimize's rewrite (:meth:`_optimize_takes_purge`)."""
-        merge, purge = self._delete_budget_plan(table)
-        if purge and self._optimize_takes_purge(props, now):
+        if self.max_delete_files is None:
             return False
-        if merge:
-            table.compact_delete_files(clock=self.clock)
-        if purge:
+        cur = table.current_snapshot()
+        if self._purge_due(cur) and self._optimize_takes_purge(props, now):
+            return False
+        entries = list(cur.delete_files or []) if cur else []
+        n_pos = sum(1 for e in entries if e["content"] == "position")
+        if n_pos > self.max_delete_files:
+            entries = list(
+                table.compact_delete_files(clock=self.clock).delete_files
+                or []
+            )
+        if len(entries) > self.max_delete_files:
             table.purge_deletes(clock=self.clock)
         return False
 
-    def _delete_budget_plan(self, table) -> tuple[bool, bool]:
-        """``(merge, purge)`` for ``table``'s current snapshot: whether
-        the delete-file budget merges its positional entries into one
-        (``compact_delete_files``), and whether the entries left after
-        that are still over budget (``purge_deletes``). Both False
-        without a budget. The budget stage and a due optimize share
-        it, so optimize purges exactly when the stage would have.
-        Exact: a merge always leaves one positional entry."""
-        if self.max_delete_files is None:
-            return False, False
-        cur = table.current_snapshot()
-        entries = list(cur.delete_files or []) if cur else []
+    def _purge_due(self, snap) -> bool:
+        """Whether snapshot ``snap``'s delete entries stay over the
+        budget once an over-budget set of positional entries is merged
+        into one: the budget stage then calls ``purge_deletes``. The
+        budget stage and a due optimize share it, so optimize purges
+        when the stage would have."""
+        entries = list(snap.delete_files or []) if snap else []
         n_pos = sum(1 for e in entries if e["content"] == "position")
-        merge = n_pos > self.max_delete_files
-        left = len(entries) - n_pos + min(n_pos, 1) if merge else len(entries)
-        return merge, left > self.max_delete_files
+        left = len(entries)
+        if n_pos > self.max_delete_files:
+            left -= n_pos - 1
+        return left > self.max_delete_files
 
     def _optimize_takes_purge(self, props, now) -> bool:
         """Whether this sweep's optimize stage will bin-pack on its
@@ -983,9 +987,10 @@ class Orchestrator:
                 depth = None  # no stats → day cadence only
         optimized = decay_due or day_due()
         if optimized:
-            if (not (self.optimize_sort_columns
-                     or self.optimize_zorder_columns)
-                    and self._delete_budget_plan(table)[1]):
+            if (self.max_delete_files is not None
+                    and not (self.optimize_sort_columns
+                             or self.optimize_zorder_columns)
+                    and self._purge_due(table.current_snapshot())):
                 # the budget stage left an over-budget backlog: one
                 # rewrite compacts and purges
                 table.purge_deletes(clock=self.clock, bin_pack=True)

@@ -1721,8 +1721,8 @@ class ParquetMaintainedTable:
         plan: one read, one write job and one commit both compact the
         table and leave no delete entry, where a purge followed by an
         optimize would rewrite the purged partitions twice. Either way
-        the rewritten files are written ``target_file_size`` apart
-        (:meth:`_write_groups`)."""
+        :meth:`_write_groups` sizes the new files by
+        ``target_file_size``."""
         snap = self.current_snapshot()
         if snap is None:
             raise ValueError(f"table {self.path} has no snapshots")
